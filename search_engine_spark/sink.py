@@ -15,8 +15,9 @@ Iceberg-style *per-partition commit protocol*:
   - Buckets are written in **waves** (``buckets_per_wave`` per Spark job)
     from one cached enriched-postings frame: each wave filters its
     buckets, encodes blocks (index.build_block_index plan), writes to a
-    temp dir, atomically renames each ``bucket=NN`` directory into the
-    final layout, and only then writes that bucket's manifest entry.
+    temp dir, atomically swaps each ``bucket=NN`` directory into the
+    final layout, and only then writes that bucket's manifest entry
+    (:func:`publish_buckets`; the rename protocol is ``fsutil``'s).
   - A manifest entry is one JSON file ``_manifest/bucket_NNNNN.json``
     carrying status, row/block/byte counts, wall_ms, and a
     **content-lineage hash**: xor-aggregate of
@@ -25,7 +26,7 @@ Iceberg-style *per-partition commit protocol*:
     the files).  Order-insensitive, deterministic, cheap to re-verify.
   - **Resume = set difference**: committed buckets (manifest present) are
     skipped; a bucket directory without a manifest (crash between rename
-    and manifest write) is deleted and rewritten — the writer is
+    and manifest write) is swapped out and rewritten — the writer is
     idempotent per bucket because the encoder is deterministic.
 
 On a real cluster each wave is an Iceberg ``append`` commit and the
@@ -48,6 +49,7 @@ from pyspark.sql import functions as F
 
 from . import constants as C
 from .corpus import with_doc_id
+from .fsutil import atomic_write_json, recover_dirs, swap_dir
 from .index import (
     INDEX_SCHEMA,
     _encoder_stream,
@@ -174,6 +176,129 @@ def _scan_conf(spark, value: str):
             spark.conf.unset("spark.sql.files.maxPartitionBytes")
 
 
+# Encoder exchange width per bucket: a (term, shard) group lands in
+# partition (bucket, shard % FILES_PER_BUCKET), so a hot term's postings
+# split over this many reducers and each bucket is written as at most
+# this many term-sorted files. One value for build and fold — a fold
+# with another width would produce a layout no rebuild produces.
+FILES_PER_BUCKET = 8
+
+_EMPTY_STATS = {"n_blocks": 0, "n_postings": 0, "n_terms": 0, "content_hash": 0}
+
+
+def _add_time(phase_t: dict, key: str, t0: float) -> None:
+    phase_t[key] = phase_t.get(key, 0.0) + (time.perf_counter() - t0)
+
+
+def publish_buckets(
+    spark: SparkSession,
+    root: str,
+    postings: DataFrame,
+    buckets: list[int],
+    n_buckets: int,
+    avgdl: float,
+    wave: int | str,
+    phase_t: dict[str, float],
+) -> None:
+    """Encode ``postings`` (term, doc_id, tf, doclen, uf, positions, shard,
+    bucket rows of exactly ``buckets``) into block rows and publish each
+    bucket: tmp write, lineage read-back, :func:`fsutil.swap_dir` into
+    ``blocks/bucket=NN``, then the bucket's manifest entry — the manifest
+    write is the commit. Shared by the build (one call per wave, the
+    live ``avgdl``) and the incremental fold (touched buckets, the
+    index's ``encoded_avgdl``); ``wave`` labels the manifest entries,
+    and the encode+write and read-back walls accumulate into ``phase_t``.
+
+    ONE exchange does double duty: partitioning on (bucket,
+    shard % FILES_PER_BUCKET) both salts the encode and pre-clusters the
+    output, so blocks write straight to ≤ FILES_PER_BUCKET term-sorted
+    files per bucket with tight term min/max row-group stats — a query's
+    term-isin predicate prunes at the directory level (bucket) AND the
+    row-group level (term). A (term, shard) group is wholly inside one
+    partition, which is all the encoder's group-contiguity needs."""
+    t0 = time.perf_counter()
+    ordered = postings.repartition(
+        max(len(buckets) * FILES_PER_BUCKET, 8),
+        "bucket",
+        F.pmod(F.col("shard"), FILES_PER_BUCKET),
+    ).sortWithinPartitions("term", "shard", "doc_id")
+    encoded = with_bucket(
+        ordered.mapInPandas(_encoder_stream(float(avgdl)), schema=INDEX_SCHEMA),
+        n_buckets,
+    )
+    t_w = time.perf_counter()
+    tmp = os.path.join(root, f"_tmp_wave_{wave}")
+    shutil.rmtree(tmp, ignore_errors=True)
+    encoded.write.partitionBy("bucket").mode("overwrite").parquet(tmp)
+    _add_time(phase_t, "encode_write", t_w)
+    t_l = time.perf_counter()
+    # explicit schema: an all-retired fold writes zero part files and
+    # schema inference would fail on the bare directory
+    with _scan_conf(spark, str(128 << 20)):
+        stats = _bucket_lineage(
+            spark.read.schema(INDEX_SCHEMA + ", bucket int").parquet(tmp)
+        )
+    _add_time(phase_t, "lineage_readback", t_l)
+    wall_ms = int((time.perf_counter() - t0) * 1000)
+    for b in buckets:
+        dst = os.path.join(root, "blocks", f"bucket={b}")
+        swap_dir(dst, os.path.join(tmp, f"bucket={b}"))
+        atomic_write_json(_manifest_path(root, b), {
+            "bucket": b,
+            "status": "committed",
+            "wall_ms": wall_ms,
+            "wave": wave,
+            "engine": ENGINE_VERSION,
+            "payload_bytes": _dir_bytes(dst),
+            **stats.get(b, _EMPTY_STATS),
+        })
+    shutil.rmtree(tmp, ignore_errors=True)
+
+
+def write_tstats(
+    spark: SparkSession, root: str, n_buckets: int, touched: list[int] | None = None
+) -> None:
+    """(Re)derive the term → df side table from the committed blocks —
+    each block row covers n postings = n distinct docs of its term — and
+    publish it with :func:`fsutil.swap_dir`. ``touched=None`` recomputes
+    every term; a bucket list recomputes only the terms hashing into
+    those buckets (a term lives entirely in its crc32 bucket) and keeps
+    every other row of the current table, so a fold pays for the
+    buckets it rewrote, never the whole index."""
+    blocks_dir = os.path.join(root, "blocks")
+    tstats_dir = os.path.join(root, "tstats")
+    tmp = tstats_dir + ".tmp"
+    with _scan_conf(spark, str(128 << 20)):
+        blocks = spark.read.option("basePath", blocks_dir).parquet(blocks_dir)
+        if touched is not None:
+            blocks = blocks.where(F.col("bucket").isin(touched))
+        df = blocks.groupBy("term").agg(F.sum("n").cast("long").alias("df"))
+        if touched is not None:
+            kept = (
+                with_bucket(spark.read.parquet(tstats_dir).select("term", "df"), n_buckets)
+                .where(~F.col("bucket").isin(touched))
+                .drop("bucket")
+            )
+            df = kept.unionByName(df)
+        shutil.rmtree(tmp, ignore_errors=True)
+        df.write.parquet(tmp)
+        if not any(f.startswith("part-") for f in os.listdir(tmp)):
+            # an all-retired fold can empty the whole term space; an
+            # empty write leaves a data-less dir that bricks schema
+            # inference — force one schema-bearing part file
+            shutil.rmtree(tmp, ignore_errors=True)
+            df.repartition(1).write.parquet(tmp)
+    swap_dir(tstats_dir, tmp)
+
+
+def recover_index(root: str) -> None:
+    """Repair an index left mid-publish by a crashed build or fold:
+    root-level swaps (docs, tstats) first, then the partition swaps
+    inside blocks/ and docs/."""
+    for parent in (root, os.path.join(root, "blocks"), os.path.join(root, "docs")):
+        recover_dirs(parent)
+
+
 def _tune_scan_granularity(spark, corpus: DataFrame) -> str | None:
     """Size parquet splits so the tokenize scan stage runs ~3 task waves
     per core. The scan IS the explode-stage granularity (no rebalancing
@@ -234,7 +359,6 @@ class IndexSink:
         self,
         corpus: DataFrame,
         buckets_per_wave: int = 8,
-        fail_after_waves: int | None = None,
         n_shards: int = C.N_DOC_SHARDS,
         url_cols: tuple[str, ...] | None = ("repo", "path"),
         on_id_collision: str = "fail",
@@ -258,8 +382,6 @@ class IndexSink:
         never be split apart). Costs one extra id-only groupBy detection
         pass, so it is opt-in for corpora large enough to expect
         collisions (~10^10+ docs); n_remapped lands in meta.json lineage.
-
-        ``fail_after_waves`` is a test hook simulating a mid-build crash.
         """
         if on_id_collision not in ("fail", "resolve"):
             raise ValueError(f"on_id_collision: {on_id_collision!r}")
@@ -267,39 +389,30 @@ class IndexSink:
         tuned = _tune_scan_granularity(spark, corpus)
         if tuned is None:
             return self._build_inner(
-                corpus, buckets_per_wave, fail_after_waves, n_shards, url_cols,
-                on_id_collision,
+                corpus, buckets_per_wave, n_shards, url_cols, on_id_collision,
             )
         # one save/restore/unset implementation: the same _scan_conf the
         # read-back paths use, so the tuned split size can never leak
         with _scan_conf(spark, tuned):
             return self._build_inner(
-                corpus, buckets_per_wave, fail_after_waves, n_shards, url_cols,
-                on_id_collision,
+                corpus, buckets_per_wave, n_shards, url_cols, on_id_collision,
             )
 
     def _build_inner(
         self,
         corpus: DataFrame,
         buckets_per_wave: int,
-        fail_after_waves: int | None,
         n_shards: int,
         url_cols: tuple[str, ...] | None,
         on_id_collision: str = "fail",
     ) -> dict:
         t_start = time.perf_counter()
         phase_t: dict[str, float] = {}
-        os.makedirs(os.path.join(self.root, "_manifest"), exist_ok=True)
-        blocks_root = os.path.join(self.root, "blocks")
-        os.makedirs(blocks_root, exist_ok=True)
-
+        # a crashed build or fold may have left a swap half done; a bucket
+        # dir without a manifest (crash between rename and manifest
+        # write) is simply pending — its publish swaps the dir out
+        recover_index(self.root)
         done = committed_buckets(self.root)
-        # crash-window repair: bucket dir present but no manifest → rewrite
-        for d in os.listdir(blocks_root):
-            if d.startswith("bucket="):
-                b = int(d.split("=")[1])
-                if b not in done:
-                    shutil.rmtree(os.path.join(blocks_root, d))
         pending = [b for b in range(self.n_buckets) if b not in done]
         spark = corpus.sparkSession
         corpus_ids = with_doc_id(corpus)
@@ -452,103 +565,23 @@ class IndexSink:
             if len(waves) > 1:
                 enriched = enriched.persist()
                 enriched.count()
-            t0 = time.perf_counter()
-            for wi, wave in enumerate(waves):
-                if fail_after_waves is not None and wi >= fail_after_waves:
-                    enriched.unpersist()
-                    postings_raw.unpersist()
-                    return {"status": "failed_injected", "waves_done": wi}
+            try:
                 t0 = time.perf_counter()
-                wave_df = enriched.where(F.col("bucket").isin(wave))
-                # ONE exchange does double duty: partitioning on
-                # (bucket, shard-group) both salts the encode (a hot
-                # term's postings split over files_per_bucket reducers —
-                # raise files_per_bucket with N_DOC_SHARDS at scale) and
-                # pre-clusters the output so the encoded blocks write
-                # straight to ≤files_per_bucket term-sorted files per
-                # bucket with tight term min/max row-group stats — a
-                # query's term-isin predicate prunes at the directory
-                # level (bucket) AND the row-group level (term). Round 1
-                # repartitioned twice ((term, shard) to encode, then
-                # (bucket, shard-group) to cluster) — the second exchange
-                # moved the entire compressed index (~640 MB at sf0.1×8)
-                # once more for layout only. A (term, shard) group is
-                # wholly inside one (bucket, shard%fpb) partition, which
-                # is all the encoder's group-contiguity needs.
-                files_per_bucket = 8
-                ordered = wave_df.repartition(
-                    max(len(wave) * files_per_bucket, 8),
-                    "bucket",
-                    F.pmod(F.col("shard"), files_per_bucket),
-                ).sortWithinPartitions("term", "shard", "doc_id")
-                encoded = ordered.mapInPandas(
-                    _encoder_stream(float(avgdl)), schema=INDEX_SCHEMA
-                ).withColumn(
-                    "bucket",
-                    (F.crc32(F.encode(F.col("term"), "utf-8")) % self.n_buckets).cast(
-                        "int"
-                    ),
-                )
-                t_w = time.perf_counter()
-                tmp = os.path.join(self.root, f"_tmp_wave_{wi}")
-                shutil.rmtree(tmp, ignore_errors=True)
-                encoded.write.partitionBy("bucket").mode("overwrite").parquet(tmp)
-                phase_t["encode_write"] = phase_t.get("encode_write", 0.0) + (
-                    time.perf_counter() - t_w
-                )
-                t_l = time.perf_counter()
-                with _scan_conf(spark, str(128 << 20)):
-                    written = spark.read.parquet(tmp)
-                    stats = _bucket_lineage(written)
-                phase_t["lineage_readback"] = phase_t.get("lineage_readback", 0.0) + (
-                    time.perf_counter() - t_l
-                )
-                wall_ms = int((time.perf_counter() - t0) * 1000)
-                for b in wave:
-                    src = os.path.join(tmp, f"bucket={b}")
-                    dst = os.path.join(blocks_root, f"bucket={b}")
-                    if os.path.isdir(src):
-                        os.rename(src, dst)  # atomic publish
-                    else:
-                        os.makedirs(dst, exist_ok=True)  # empty bucket
-                    entry = {
-                        "bucket": b,
-                        "status": "committed",
-                        "wall_ms": wall_ms,
-                        "wave": wi,
-                        "engine": ENGINE_VERSION,
-                        "payload_bytes": _dir_bytes(dst),
-                        **stats.get(
-                            b,
-                            {
-                                "n_blocks": 0,
-                                "n_postings": 0,
-                                "n_terms": 0,
-                                "content_hash": 0,
-                            },
-                        ),
-                    }
-                    mp = _manifest_path(self.root, b)
-                    with open(mp + ".tmp", "w") as f:
-                        json.dump(entry, f)
-                    os.replace(mp + ".tmp", mp)  # manifest write is the commit
-                shutil.rmtree(tmp, ignore_errors=True)
-            enriched.unpersist()
-            postings_raw.unpersist()
-            phase_t["encode_commit"] = time.perf_counter() - t0
+                for wi, wave in enumerate(waves):
+                    publish_buckets(
+                        spark, self.root, enriched.where(F.col("bucket").isin(wave)),
+                        wave, self.n_buckets, avgdl, wi, phase_t,
+                    )
+                phase_t["encode_commit"] = time.perf_counter() - t0
+            finally:
+                enriched.unpersist()
+                postings_raw.unpersist()
         else:
             postings_raw.unpersist()
 
-        # side tables + meta are cheap; (re)written last, unconditionally.
-        # tstats (term → df) is a free byproduct of the committed blocks:
-        # each block row covers n postings = n distinct docs for its term.
+        # side tables + meta are cheap; (re)written last, unconditionally
         t0 = time.perf_counter()
-        with _scan_conf(spark, str(128 << 20)):
-            blocks_now = spark.read.parquet(blocks_root)
-            tstats = blocks_now.groupBy("term").agg(
-                F.sum("n").cast("long").alias("df")
-            )
-            tstats.write.mode("overwrite").parquet(os.path.join(self.root, "tstats"))
+        write_tstats(spark, self.root, self.n_buckets)
         phase_t["side_tables"] = time.perf_counter() - t0
         # encoded_avgdl: the avgdl the BLOCK BOUNDS (max_wtf) were computed
         # with. A fresh/resumed build encodes with the current corpus avgdl;
@@ -581,12 +614,7 @@ class IndexSink:
             "resumed_buckets": len(done),
             "phase_timings_s": {k: round(v, 2) for k, v in phase_t.items()},
         }
-        with open(os.path.join(self.root, "meta.json.tmp"), "w") as f:
-            json.dump(meta, f)
-        os.replace(
-            os.path.join(self.root, "meta.json.tmp"),
-            os.path.join(self.root, "meta.json"),
-        )
+        atomic_write_json(os.path.join(self.root, "meta.json"), meta)
         return {"status": "committed", "meta": meta, "built": len(pending)}
 
     # -- read path ----------------------------------------------------------
@@ -708,10 +736,7 @@ class IndexSink:
         bad = []
         for entry in read_manifest(self.root):
             b = entry["bucket"]
-            got = actual.get(
-                b,
-                {"n_blocks": 0, "n_postings": 0, "n_terms": 0, "content_hash": 0},
-            )
+            got = actual.get(b, _EMPTY_STATS)
             if (
                 got["n_blocks"] != entry["n_blocks"]
                 or got["content_hash"] != entry["content_hash"]

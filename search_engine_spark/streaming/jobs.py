@@ -16,8 +16,9 @@ capabilities a continuously-ingesting 100 TB corpus needs:
     is derived from the batch's doc_id SET (count + xor of id hashes) —
     content-addressed, so the same data gets the same token under ANY
     batch numbering (incl. after a checkpoint reset);
-  * a marker file ``_commits/<token>.json`` is written (tmp + atomic
-    rename) only AFTER postings, dstats and docmap have all landed;
+  * a marker file ``_commits/<token>.json`` is written
+    (``fsutil.atomic_write_json``) only AFTER postings, dstats and
+    docmap have all landed;
   * read paths (:func:`read_live_postings` etc.) filter to committed
     tokens, so a crash between the three writes leaves invisible
     partials, and the replay — same data ⇒ same token — OVERWRITES
@@ -53,6 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..corpus import CORPUS_SCHEMA, with_doc_id
+from ..fsutil import atomic_write_json, recover_dirs, swap_dir
 from ..index import doc_postings
 from ..tokenize import tokenize, tokenize_url
 
@@ -104,15 +106,12 @@ def committed_commits(store_dir: str) -> dict[str, int]:
 
 def _mark_committed(store_dir: str, token: str, seq: int, n_docs: int) -> None:
     """Atomic commit point: tmp write + rename AFTER all data landed."""
-    import json
     import os
 
-    d = _commits_dir(store_dir)
-    os.makedirs(d, exist_ok=True)
-    tmp = os.path.join(d, f"{token}.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump({"token": token, "seq": seq, "n_docs": n_docs}, fh)
-    os.replace(tmp, os.path.join(d, f"{token}.json"))
+    atomic_write_json(
+        os.path.join(_commits_dir(store_dir), f"{token}.json"),
+        {"token": token, "seq": seq, "n_docs": n_docs},
+    )
 
 
 def _read_committed(spark: SparkSession, store_dir: str, name: str) -> DataFrame | None:
@@ -171,10 +170,7 @@ def _write_store_meta(store_dir: str, url_cols) -> None:
             "url_cols its history was actually ingested under "
             '(e.g. {"url_cols": []}) before streaming into it.'
         )
-    os.makedirs(store_dir, exist_ok=True)
-    with open(p + ".tmp", "w") as fh:
-        json.dump(want, fh)
-    os.replace(p + ".tmp", p)
+    atomic_write_json(p, want)
 
 
 def store_url_cols(store_dir: str) -> list[str]:
@@ -209,10 +205,10 @@ def incremental_index_stream(
 
     DEPLOYMENT REQUIREMENT (applies to the whole store, not just
     compaction): the marker-file commit protocol relies on POSIX
-    single-filesystem semantics — atomic ``os.replace`` for the commit
-    point, immediately-consistent directory listings for
-    :func:`committed_commits`, and atomic directory rename pairs for
-    :func:`compact_store`'s swap. ``store_dir`` must therefore live on
+    single-filesystem semantics — atomic renames for the commit point
+    and :func:`compact_store`'s swaps (``fsutil``), and
+    immediately-consistent directory listings for
+    :func:`committed_commits`. ``store_dir`` must therefore live on
     one POSIX filesystem reachable from the driver (NFS/Lustre on a
     cluster is fine). On an object store (S3/GCS: no atomic rename,
     eventually-consistent listings) substitute a transactional table
@@ -504,57 +500,6 @@ def decode_block_doc_ids(blocks: DataFrame) -> DataFrame:
     )
 
 
-def _recover_index_compaction(root: str) -> None:
-    """Make a block index whole after a crash mid bucket/docs/tstats swap:
-    a ``*.old`` sibling with its final dir missing is restored; with the
-    final dir present it is a discarded leftover. Stale tmp dirs are
-    always leftovers (renames into place happen only after a full
-    write)."""
-    import os
-    import shutil
-
-    shutil.rmtree(os.path.join(root, "_compact_tmp"), ignore_errors=True)
-    shutil.rmtree(os.path.join(root, "_compact_docs_tmp"), ignore_errors=True)
-    shutil.rmtree(os.path.join(root, "tstats.tmp"), ignore_errors=True)
-    shutil.rmtree(os.path.join(root, "docs.tmp"), ignore_errors=True)
-    for base in ("docs", "tstats"):
-        old = os.path.join(root, base + ".old")
-        if os.path.isdir(old):
-            if os.path.isdir(os.path.join(root, base)):
-                shutil.rmtree(old)
-            else:
-                os.rename(old, os.path.join(root, base))
-    # per-partition swap leftovers (blocks/bucket=NN.old, docs/dbucket=NN.old)
-    for sub in ("blocks", "docs"):
-        sub_root = os.path.join(root, sub)
-        if not os.path.isdir(sub_root):
-            continue
-        for d in os.listdir(sub_root):
-            if d.endswith(".old"):
-                final = os.path.join(sub_root, d[:-4])
-                if os.path.isdir(final):
-                    shutil.rmtree(os.path.join(sub_root, d))
-                else:
-                    os.rename(os.path.join(sub_root, d), final)
-
-
-def _swap_dir(final: str, tmp_src: str | None) -> None:
-    """Replace ``final`` with ``tmp_src`` (or an empty dir) via the
-    rename pair _recover_index_compaction knows how to repair."""
-    import os
-    import shutil
-
-    old = final + ".old"
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.isdir(final):
-        os.rename(final, old)
-    if tmp_src is not None and os.path.isdir(tmp_src):
-        os.rename(tmp_src, final)
-    else:
-        os.makedirs(final, exist_ok=True)
-    shutil.rmtree(old, ignore_errors=True)
-
-
 def _fold_txn_path(root: str) -> str:
     return f"{root}/_fold_txn.json"
 
@@ -581,13 +526,9 @@ def _read_fold_txn(root: str) -> set[int] | str | None:
 
 
 def _write_fold_txn(root: str, touched: list[int], pending: list[str]) -> None:
-    import json
-    import os
-
-    p = _fold_txn_path(root)
-    with open(p + ".tmp", "w") as fh:
-        json.dump({"touched": sorted(touched), "pending": pending}, fh)
-    os.replace(p + ".tmp", p)
+    atomic_write_json(
+        _fold_txn_path(root), {"touched": sorted(touched), "pending": pending}
+    )
 
 
 def _clear_fold_txn(root: str) -> None:
@@ -602,7 +543,6 @@ def compact_into_index(
     spark: SparkSession,
     sink,
     store_dir: str,
-    files_per_bucket: int = 8,
 ) -> dict:
     """Fold the streaming store's committed postings into the block-max
     index — the reference's publish step (Indexer.java:287-294) upgraded
@@ -630,9 +570,9 @@ def compact_into_index(
     a partition key, so the filter prunes decode work row-by-row;
     row-group pruning on it is best-effort because files are clustered
     by (term, shard)); the ids themselves stay a distributed semi-join
-    side, never a driver collect. The re-encode
-    reuses the build's exchange geometry ((bucket, shard%fpb) partitions,
-    partition-local sort, streaming Arrow encoder).
+    side, never a driver collect. The re-encode and publish is the
+    build's own routine (:func:`sink.publish_buckets`): same exchange
+    geometry, encoder, lineage read-back, swap and manifest commit.
 
     Stats handling: touched buckets are re-encoded with the index's
     ORIGINAL ``encoded_avgdl`` so untouched buckets stay byte-stable,
@@ -644,8 +584,9 @@ def compact_into_index(
 
     Idempotent/crash-safe on one POSIX filesystem (same deployment
     requirement as the store protocol, see incremental_index_stream):
-    bucket and docs swaps are rename pairs repaired by
-    _recover_index_compaction; folded markers are written LAST, so a
+    bucket, docs and tstats swaps are ``fsutil.swap_dir`` rename pairs,
+    repaired by :func:`sink.recover_index` at the start of the next fold
+    or build; folded markers are written LAST, so a
     crash replays the fold — re-delivered docs are dropped against the
     updated docs table and already-retired ids retire to a no-op.
 
@@ -655,8 +596,8 @@ def compact_into_index(
     import os
     import shutil
 
-    from ..index import INDEX_SCHEMA, _encoder_stream, with_shard
-    from ..sink import _bucket_lineage, _manifest_path, _scan_conf, with_bucket
+    from ..index import with_shard
+    from ..sink import publish_buckets, recover_index, with_bucket
     from ..tokenize import stem_vocab
 
     root = sink.root
@@ -674,10 +615,11 @@ def compact_into_index(
             "stream with url_cols matching the index (incremental_"
             "index_stream(url_cols=...)) or rebuild the index."
         )
-    _recover_index_compaction(root)
+    recover_index(root)
     # fold journal of a PREVIOUS attempt that crashed mid-fold: its
-    # touched buckets may already be swapped, so this run's side-table
-    # refresh must cover them too (set), or everything ("unknown").
+    # touched buckets may already be swapped, so this run re-publishes
+    # them and its side-table refresh covers them too (set), or
+    # everything ("unknown").
     prev_touched = _read_fold_txn(root)
     committed = committed_commits(store_dir)
     pending = sorted(set(committed) - folded_commits(store_dir))
@@ -788,15 +730,17 @@ def compact_into_index(
                 "n_new_docs": 0, "n_retired": 0, "folded": pending}
 
     # fold journal, written BEFORE the first swap: a crash-replay must
-    # refresh the side tables over every bucket ANY attempt may have
-    # swapped, so a replay unions its own touched set with the crashed
-    # attempt's. An unreadable journal means that set is unknown →
-    # touched_all None → full side-table recompute (and the corrupt
-    # journal is left in place so a further crash keeps forcing full).
+    # re-publish every bucket ANY attempt may have swapped — a bucket
+    # only a retired doc touched holds no fold-set posting once swapped,
+    # so this run alone would not see it, yet its manifest may predate
+    # the swap — and refresh the side tables over the same set. An
+    # unreadable journal means that set is unknown → touched_all None →
+    # full side-table recompute (and the corrupt journal is left in
+    # place so a further crash keeps forcing full).
     if prev_touched == "unknown":
         touched_all = None
     else:
-        touched_all = sorted(set(touched_l) | (prev_touched or set()))
+        touched_l = touched_all = sorted(touched | (prev_touched or set()))
         _write_fold_txn(root, touched_all, pending)
 
     # rebuild touched buckets: decoded survivors ∪ enriched new postings
@@ -819,44 +763,9 @@ def compact_into_index(
         merged = with_bucket(
             with_shard(old_p.unionByName(new_enriched), n_shards), n_buckets
         )
-        ordered = merged.repartition(
-            max(len(touched_l) * files_per_bucket, 8),
-            "bucket", F.pmod(F.col("shard"), files_per_bucket),
-        ).sortWithinPartitions("term", "shard", "doc_id")
-        encoded = ordered.mapInPandas(
-            _encoder_stream(enc_avgdl), schema=INDEX_SCHEMA
-        ).withColumn(
-            "bucket",
-            (F.crc32(F.encode(F.col("term"), "utf-8")) % n_buckets).cast("int"),
+        publish_buckets(
+            spark, root, merged, touched_l, n_buckets, enc_avgdl, "compact", {}
         )
-        tmp = os.path.join(root, "_compact_tmp")
-        shutil.rmtree(tmp, ignore_errors=True)
-        encoded.write.partitionBy("bucket").mode("overwrite").parquet(tmp)
-        # explicit schema: an all-retired touched set writes zero part
-        # files and schema inference would fail on the bare directory
-        with _scan_conf(spark, str(128 << 20)):
-            stats = _bucket_lineage(
-                spark.read.schema(INDEX_SCHEMA + ", bucket int").parquet(tmp)
-            )
-
-    from ..sink import ENGINE_VERSION, _dir_bytes
-
-    for b in touched_l:
-        src = os.path.join(tmp, f"bucket={b}")
-        dst = os.path.join(blocks_root, f"bucket={b}")
-        _swap_dir(dst, src if os.path.isdir(src) else None)
-        entry = {
-            "bucket": b, "status": "committed", "wave": "compact",
-            "engine": ENGINE_VERSION, "payload_bytes": _dir_bytes(dst),
-            **stats.get(b, {"n_blocks": 0, "n_postings": 0,
-                            "n_terms": 0, "content_hash": 0}),
-        }
-        mp = _manifest_path(root, b)
-        with open(mp + ".tmp", "w") as f:
-            json.dump(entry, f)
-        os.replace(mp + ".tmp", mp)
-    if touched_l:
-        shutil.rmtree(tmp, ignore_errors=True)
 
     # docs side table: retire superseded rows, add the folded docs (doclen
     # 0 for token-less docs)
@@ -902,10 +811,9 @@ def compact_into_index(
                 "overwrite"
             ).partitionBy("dbucket").parquet(docs_tmp)
             for db in touched_db:
-                src = os.path.join(docs_tmp, f"dbucket={db}")
-                _swap_dir(
+                swap_dir(
                     os.path.join(docs_root, f"dbucket={db}"),
-                    src if os.path.isdir(src) else None,
+                    os.path.join(docs_tmp, f"dbucket={db}"),
                 )
             shutil.rmtree(docs_tmp, ignore_errors=True)
     else:
@@ -917,7 +825,7 @@ def compact_into_index(
         docs_tmp = os.path.join(root, "docs.tmp")
         shutil.rmtree(docs_tmp, ignore_errors=True)
         docs_new.write.parquet(docs_tmp)
-        _swap_dir(docs_root, docs_tmp)
+        swap_dir(docs_root, docs_tmp)
 
     _refresh_index_side_tables(spark, root, meta, enc_avgdl, touched=touched_all)
     _mark_folded(store_dir, pending)
@@ -954,8 +862,8 @@ def _refresh_index_side_tables(
       its crc32 bucket, so df can only have changed for terms hashing
       into a swapped bucket: re-derive those from a partition-pruned scan
       of ``blocks/bucket∈touched``, keep every other term's row from the
-      current tstats, and swap the union in (tmp + rename pair, repaired
-      by :func:`_recover_index_compaction` like the bucket/docs swaps).
+      current tstats, and swap the union in (:func:`sink.write_tstats`,
+      the build's own tstats writer).
     * the empty set → no bucket was swapped; tstats is already exact and
       is not rewritten (only meta's N/avgdl advance).
     * ``None`` → the swapped-bucket set is unknown (corrupt fold journal,
@@ -966,60 +874,16 @@ def _refresh_index_side_tables(
     table (Parquet-pruned — none of the wide metadata columns are read),
     the price of staying idempotent under crash replays where a stored
     running sum could be double-advanced."""
-    import json
     import os
-    import shutil
 
-    from ..sink import _scan_conf
+    from ..sink import write_tstats
 
-    tstats_dir = os.path.join(root, "tstats")
-    blocks_dir = os.path.join(root, "blocks")
-    with _scan_conf(spark, str(128 << 20)):
-        if touched is None:
-            # write-to-tmp + _swap_dir, same as the partial branch: a
-            # bare mode('overwrite') deletes the live dir first, so a
-            # crash mid-write would leave tstats missing/partial on the
-            # corrupt-journal replay route; _recover_index_compaction
-            # already repairs interrupted tstats.old/tstats.tmp swaps
-            tmp = tstats_dir + ".tmp"
-            shutil.rmtree(tmp, ignore_errors=True)
-            full = spark.read.parquet(blocks_dir).groupBy("term").agg(
-                F.sum("n").cast("long").alias("df")
-            )
-            full.write.parquet(tmp)
-            if not any(f.startswith("part-") for f in os.listdir(tmp)):
-                # same empty-result guard as the partial branch below: an
-                # all-retired corpus yields zero rows and a data-less dir
-                # that bricks schema inference — force one part file
-                shutil.rmtree(tmp, ignore_errors=True)
-                full.repartition(1).write.parquet(tmp)
-            _swap_dir(tstats_dir, tmp)
-        elif len(touched) > 0:
-            touched_l = sorted(int(b) for b in touched)
-            n_buckets = int(meta["n_buckets"])
-            fresh = (
-                spark.read.option("basePath", blocks_dir).parquet(blocks_dir)
-                .where(F.col("bucket").isin(touched_l))
-                .groupBy("term")
-                .agg(F.sum("n").cast("long").alias("df"))
-            )
-            kept = spark.read.parquet(tstats_dir).select("term", "df").where(
-                ~(F.crc32(F.encode(F.col("term"), "utf-8")) % n_buckets)
-                .cast("int")
-                .isin(touched_l)
-            )
-            tmp = tstats_dir + ".tmp"
-            shutil.rmtree(tmp, ignore_errors=True)
-            merged = kept.unionByName(fresh)
-            merged.write.parquet(tmp)
-            if not any(f.startswith("part-") for f in os.listdir(tmp)):
-                # an all-retired fold can empty the whole term space; an
-                # empty write leaves a data-less dir that bricks schema
-                # inference — force one schema-bearing part file
-                shutil.rmtree(tmp, ignore_errors=True)
-                merged.repartition(1).write.parquet(tmp)
-            _swap_dir(tstats_dir, tmp)
-        # else: touched == ∅ — no bucket swapped, tstats already exact
+    if touched is None or touched:
+        write_tstats(
+            spark, root, int(meta["n_buckets"]),
+            None if touched is None else sorted(touched),
+        )
+    # else: touched == ∅ — no bucket swapped, tstats already exact
     row = spark.read.parquet(os.path.join(root, "docs")).agg(
         F.count("*").alias("n"), F.avg("doclen").alias("avgdl")
     ).collect()[0]
@@ -1029,43 +893,7 @@ def _refresh_index_side_tables(
         encoded_avgdl=enc_avgdl,
         compactions=int(meta.get("compactions", 0)) + 1,
     )
-    with open(os.path.join(root, "meta.json.tmp"), "w") as f:
-        json.dump(meta, f)
-    os.replace(os.path.join(root, "meta.json.tmp"), os.path.join(root, "meta.json"))
-
-
-def _recover_compaction(src: str) -> None:
-    """Make the store whole before (re)compacting: a crash between the
-    two swap renames can leave ``src`` absent with its content in
-    ``src.old`` — restore it; stale ``.tmp``/``.old`` from any previous
-    crash are then discarded so the fresh rewrite starts clean."""
-    import os
-    import shutil
-
-    old, tmp = f"{src}.old", f"{src}.tmp"
-    if not os.path.isdir(src) and os.path.isdir(old):
-        os.rename(old, src)  # recovery: the pre-compaction data is canonical
-    for stale in (tmp, old):
-        if os.path.isdir(stale):
-            shutil.rmtree(stale)
-
-
-def _swap_in(src: str, tmp: str) -> None:
-    """Two-rename swap ordered so ``src`` is never durably absent: if the
-    tmp→src rename fails, old is rolled back; if the process dies between
-    the renames, :func:`_recover_compaction` restores from ``.old`` on
-    the next run."""
-    import os
-    import shutil
-
-    old = f"{src}.old"
-    os.rename(src, old)
-    try:
-        os.rename(tmp, src)
-    except BaseException:
-        os.rename(old, src)  # roll back: src must always exist
-        raise
-    shutil.rmtree(old)
+    atomic_write_json(os.path.join(root, "meta.json"), meta)
 
 
 def compact_store(spark: SparkSession, store_dir: str) -> dict:
@@ -1076,9 +904,9 @@ def compact_store(spark: SparkSession, store_dir: str) -> dict:
     are reclaimed, and uncommitted crash partials are garbage-collected.
     Standard LSM/Delta-style maintenance: run between stream triggers
     (the stream must be stopped, as with OPTIMIZE on a real lakehouse).
-    The rewrite lands in ``*.tmp`` siblings first and swaps in via the
-    crash-ordered rename pair in :func:`_swap_in`; a crash at any point
-    is repaired by :func:`_recover_compaction` on the next invocation.
+    The rewrite lands in ``*.tmp`` siblings first and swaps in via
+    ``fsutil.swap_dir``; a crash at any point is repaired by
+    ``fsutil.recover_dirs`` on the next invocation.
     The per-row ``commit_id`` partition values are preserved, so the
     marker set stays valid. Returns row counts before/after for
     observability (``rows_before`` counts committed rows only; partials
@@ -1090,8 +918,7 @@ def compact_store(spark: SparkSession, store_dir: str) -> dict:
     # docmap absent with its content in docmap.old — computing the live
     # set first would see an EMPTY ledger and the rewrite below would
     # erase the whole store
-    for name in ("postings", "dstats", "docmap"):
-        _recover_compaction(f"{store_dir}/{name}")
+    recover_dirs(store_dir)
     live = live_doc_ids(spark, store_dir).cache()
     folded = sorted(folded_commits(store_dir))
     stats = {}
@@ -1143,7 +970,7 @@ def compact_store(spark: SparkSession, store_dir: str) -> dict:
                 f"compact_store: rewrite of {name} is not readable back "
                 f"({n_tmp} rows != {n_kept} kept) — aborting before swap"
             )
-        _swap_in(src, tmp)
+        swap_dir(src, tmp)
         stats[name] = {
             "rows_before": before,
             "rows_after": _read_committed(spark, store_dir, name).count(),

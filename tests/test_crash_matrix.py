@@ -1,0 +1,220 @@
+"""Crash-point matrix for the write side's publish protocol.
+
+Every rename in the engine goes through ``fsutil._rename``. A clean run
+of ``compact_into_index`` and of ``compact_store`` is counted, then each
+is crashed before its i-th rename for EVERY i: the stand-in raises at
+that call and at every later one, because a dead process performs no
+further renames (not even a swap's roll-back). Spark's cache is cleared
+after the crash, as a dead driver's would be. Recovery is simply
+re-running the same operation, after which the index must verify
+against its manifests, decode to exactly a clean fold's postings and
+answer every query bit-identically to a clean fold.
+
+The index is small (2 term buckets, 1 doc bucket) so the whole matrix
+stays cheap; the fixture is built once and copied per crash point.
+"""
+
+from __future__ import annotations
+
+import os
+import shutil
+
+import pytest
+from test_compact_index import _CHANGED_V2, _NARROW, _NEW, QUERIES, _decoded_content, _mk, _topk
+
+from search_engine_spark import fsutil
+from search_engine_spark.sink import IndexSink
+from search_engine_spark.streaming import (
+    compact_into_index,
+    compact_store,
+    incremental_index_stream,
+    live_doc_ids,
+    read_live_postings,
+)
+
+
+class _Crash(Exception):
+    pass
+
+
+class _Rename:
+    """``fsutil._rename`` stand-in: counts calls; from call ``die_at`` on,
+    raises instead of renaming."""
+
+    def __init__(self, die_at: int | None = None):
+        self.real = fsutil._rename
+        self.calls = 0
+        self.die_at = die_at
+
+    def __call__(self, src: str, dst: str) -> None:
+        self.calls += 1
+        if self.die_at is not None and self.calls >= self.die_at:
+            raise _Crash(f"rename #{self.calls} -> {dst}")
+        self.real(src, dst)
+
+
+def _sink(base: str) -> IndexSink:
+    return IndexSink(os.path.join(base, "idx"), n_buckets=2, n_doc_buckets=1)
+
+
+def _store(base: str) -> str:
+    return os.path.join(base, "store")
+
+
+def _copy(pristine: str, dst: str) -> str:
+    for sub in ("idx", "store"):
+        shutil.copytree(os.path.join(pristine, sub), os.path.join(dst, sub))
+    return dst
+
+
+def _store_view(spark, store: str):
+    postings = sorted(
+        (r["doc_id"], r["term"], r["tf"], tuple(r["positions"]))
+        for r in read_live_postings(spark, store).collect()
+    )
+    return postings, sorted(r["doc_id"] for r in live_doc_ids(spark, store).collect())
+
+
+def _index_view(spark, sink: IndexSink):
+    assert sink.verify(spark) == []
+    return _decoded_content(spark, sink), {q: _topk(spark, sink, q) for q in QUERIES}
+
+
+@pytest.fixture(scope="module")
+def pristine(spark, tmp_path_factory):
+    """Built index + an ingested, unfolded store holding new and changed
+    docs (so the fold both adds and retires)."""
+    base = str(tmp_path_factory.mktemp("crash") / "pristine")
+    _sink(base).build(_mk(spark, _NARROW), url_cols=None)
+    corpus_dir = os.path.join(base, "in")
+    _mk(spark, _CHANGED_V2 + _NEW).coalesce(1).write.parquet(corpus_dir)
+    q = incremental_index_stream(spark, corpus_dir, _store(base), os.path.join(base, "ck"))
+    assert q.awaitTermination(120)
+    return base
+
+
+@pytest.fixture(scope="module")
+def clean(spark, pristine, tmp_path_factory):
+    """Rename counts of clean runs, and the states they leave."""
+    base = _copy(pristine, str(tmp_path_factory.mktemp("crash") / "clean"))
+    sink = _sink(base)
+    out = {}
+    for op, run in (
+        ("store", lambda: compact_store(spark, _store(base))),
+        ("fold", lambda: compact_into_index(spark, sink, _store(base))),
+    ):
+        counter = _Rename()
+        with pytest.MonkeyPatch.context() as m:
+            m.setattr(fsutil, "_rename", counter)
+            run()
+        out[op + "_renames"] = counter.calls
+        if op == "store":
+            out["store_view"] = _store_view(spark, _store(base))
+    out["index_view"] = _index_view(spark, sink)
+    return out
+
+
+def _crash_then_rerun(spark, run, at: int) -> None:
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(fsutil, "_rename", _Rename(die_at=at))
+        with pytest.raises(_Crash):
+            run()
+    spark.catalog.clearCache()
+    run()
+
+
+def test_fold_crash_at_every_rename(spark, pristine, clean, tmp_path):
+    n = clean["fold_renames"]
+    assert n >= 10  # journal, 2 bucket swaps + manifests, docs, tstats, meta
+    for at in range(1, n + 1):
+        base = _copy(pristine, str(tmp_path / f"fold{at}"))
+        sink = _sink(base)
+        _crash_then_rerun(spark, lambda: compact_into_index(spark, sink, _store(base)), at)
+        assert _index_view(spark, sink) == clean["index_view"], f"crash point {at}/{n}"
+        assert compact_into_index(spark, sink, _store(base))["status"] == "noop"
+        shutil.rmtree(base)
+
+
+def test_store_compaction_crash_at_every_rename(spark, pristine, clean, tmp_path):
+    """compact_store runs BEFORE the fold here, so a store it damaged
+    (say, a docmap lost mid-swap) would show up in the folded index."""
+    n = clean["store_renames"]
+    assert n == 6  # postings, dstats, docmap: two renames per swap
+    for at in range(1, n + 1):
+        base = _copy(pristine, str(tmp_path / f"store{at}"))
+        sink = _sink(base)
+        _crash_then_rerun(spark, lambda: compact_store(spark, _store(base)), at)
+        assert _store_view(spark, _store(base)) == clean["store_view"], f"crash point {at}/{n}"
+        assert compact_into_index(spark, sink, _store(base))["status"] == "compacted"
+        assert _index_view(spark, sink) == clean["index_view"], f"crash point {at}/{n}"
+        shutil.rmtree(base)
+
+
+def test_fold_replay_republishes_retire_only_bucket(spark, tmp_path):
+    """A bucket touched ONLY by a retired doc (no new term hashes into
+    it) is re-encoded without that doc, so the replay of a fold that died
+    between its swap and its manifest finds no retired posting there and
+    would not touch it again — leaving a manifest that no longer matches
+    the bucket. The replay must re-publish every bucket the crashed
+    attempt journaled."""
+    from search_engine_spark.sink import term_bucket_py
+
+    old = [("rt", "x.py", "c1", "py", "zqalpha zqmu"), ("rt", "y.py", "c1", "py", "zqalpha komodo")]
+    new = [("rt", "x.py", "c2", "py", "zqalpha")]
+    retire_only = term_bucket_py("zqmu", 8)
+    assert retire_only != term_bucket_py("zqalpha", 8)
+    sink = IndexSink(str(tmp_path / "idx"), n_buckets=8, n_doc_buckets=1)
+    sink.build(_mk(spark, old), url_cols=None)
+    corpus_dir = str(tmp_path / "in")
+    _mk(spark, new).coalesce(1).write.parquet(corpus_dir)
+    store = str(tmp_path / "store")
+    assert incremental_index_stream(spark, corpus_dir, store, str(tmp_path / "ck")).awaitTermination(120)
+
+    manifest, real = f"bucket_{retire_only:05d}.json", fsutil._rename
+
+    def rename(src, dst):  # dies right after the retire-only bucket's swap
+        if dst.endswith(manifest):
+            raise _Crash(dst)
+        real(src, dst)
+
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(fsutil, "_rename", rename)
+        with pytest.raises(_Crash):
+            compact_into_index(spark, sink, store)
+    spark.catalog.clearCache()
+    res = compact_into_index(spark, sink, store)
+    assert res["status"] == "compacted" and retire_only in res["touched_buckets"]
+    assert sink.verify(spark) == []
+
+
+def test_swap_dir_rolls_back_a_failed_rename(tmp_path):
+    """A second rename that FAILS (the process lives on) puts the old
+    content back, so ``final`` never goes missing."""
+    final, tmp = tmp_path / "t", tmp_path / "t.tmp"
+    final.mkdir()
+    (final / "v1").write_text("old")
+    tmp.mkdir()
+    calls = []
+
+    def rename(src, dst):
+        calls.append(dst)
+        if len(calls) == 2:
+            raise OSError("tmp -> final failed")
+        os.replace(src, dst)
+
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(fsutil, "_rename", rename)
+        with pytest.raises(OSError):
+            fsutil.swap_dir(str(final), str(tmp))
+    assert os.listdir(final) == ["v1"] and not (tmp_path / "t.old").exists()
+
+
+def test_recover_dirs_rule(tmp_path):
+    for d in ("a", "a.old", "b.old", "c.tmp", "_tmp_wave_3", "_compact_docs_tmp"):
+        (tmp_path / d).mkdir()
+    (tmp_path / "b.old" / "kept").write_text("x")
+    (tmp_path / "meta.json.tmp").write_text("{")
+    fsutil.recover_dirs(str(tmp_path))
+    assert sorted(os.listdir(tmp_path)) == ["a", "b"]
+    assert os.listdir(tmp_path / "b") == ["kept"]
+    fsutil.recover_dirs(str(tmp_path / "missing"))  # no-op

@@ -18,6 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from search_engine_spark import constants as C
+from search_engine_spark import fsutil
 from search_engine_spark.query import bm25_topk_blocks
 from search_engine_spark.sink import IndexSink, read_manifest, term_bucket_py
 
@@ -147,7 +148,26 @@ def test_sink_build_resolves_collisions(spark, raw_corpus, tmp_path_factory, mon
         IndexSink(root, n_buckets=N_BUCKETS).build(small, on_id_collision="nope")
 
 
-def test_build_resume_identical(spark, raw_corpus, tmp_path_factory):
+class _Crash(Exception):
+    pass
+
+
+def _crash_after_manifests(n):
+    """A ``fsutil._rename`` stand-in: the process "dies" at the first
+    rename after ``n`` manifest commits have landed."""
+    real, landed = fsutil._rename, []
+
+    def rename(src, dst):
+        if len(landed) >= n:
+            raise _Crash(dst)
+        real(src, dst)
+        if os.sep + "_manifest" + os.sep in dst:
+            landed.append(dst)
+
+    return rename
+
+
+def test_build_resume_identical(spark, raw_corpus, tmp_path_factory, monkeypatch):
     single = str(tmp_path_factory.mktemp("sink") / "single")
     resumed = str(tmp_path_factory.mktemp("sink") / "resumed")
 
@@ -155,10 +175,13 @@ def test_build_resume_identical(spark, raw_corpus, tmp_path_factory):
     r1 = IndexSink(single, n_buckets=N_BUCKETS).build(raw_corpus, buckets_per_wave=3)
     assert r1["status"] == "committed" and r1["built"] == N_BUCKETS
 
-    # crashed build: only 1 wave (3 of 8 buckets) commits
+    # crashed build: wave 1's manifests land (3 of 8 buckets commit),
+    # then the process dies before wave 2 publishes
     sink2 = IndexSink(resumed, n_buckets=N_BUCKETS)
-    r2 = sink2.build(raw_corpus, buckets_per_wave=3, fail_after_waves=1)
-    assert r2["status"] == "failed_injected"
+    with monkeypatch.context() as m:
+        m.setattr(fsutil, "_rename", _crash_after_manifests(3))
+        with pytest.raises(_Crash):
+            sink2.build(raw_corpus, buckets_per_wave=3)
     committed_mid = {e["bucket"] for e in read_manifest(resumed)}
     assert len(committed_mid) == 3
 
@@ -180,6 +203,32 @@ def test_build_resume_identical(spark, raw_corpus, tmp_path_factory):
 
     shutil.rmtree(single)
     shutil.rmtree(resumed)
+
+
+def test_build_resumes_after_crashed_fold_swap(spark, raw_corpus, tmp_path_factory):
+    """A fold that died inside a bucket swap leaves ``bucket=N.old`` next
+    to (or instead of) ``bucket=N``. A later build must repair that —
+    restore the missing bucket, discard the leftover — not choke on the
+    ``.old`` name, and end with the same index as an undisturbed build."""
+    root = str(tmp_path_factory.mktemp("sink") / "foldcrash")
+    sink = IndexSink(root, n_buckets=N_BUCKETS)
+    sink.build(raw_corpus, buckets_per_wave=4)
+    clean = _index_fingerprint(spark, root)
+    blocks = os.path.join(root, "blocks")
+    # died between the swap's renames: the content sits only in .old
+    os.rename(os.path.join(blocks, "bucket=2"), os.path.join(blocks, "bucket=2.old"))
+    # died before the .old cleanup: both present
+    shutil.copytree(os.path.join(blocks, "bucket=5"), os.path.join(blocks, "bucket=5.old"))
+    # and one bucket left uncommitted, so the resumed build runs a wave
+    os.remove(os.path.join(root, "_manifest", "bucket_00006.json"))
+
+    r = sink.build(raw_corpus, buckets_per_wave=4)
+    assert r["status"] == "committed" and r["built"] == 1
+    assert sorted(os.listdir(blocks)) == [f"bucket={b}" for b in range(N_BUCKETS)]
+    assert sink.verify(spark) == []
+    got = _index_fingerprint(spark, root)
+    assert (got["h"], got["n"]) == (clean["h"], clean["n"])
+    shutil.rmtree(root)
 
 
 @pytest.fixture(scope="module")

@@ -38,10 +38,6 @@ def main(argv: list[str] | None = None) -> None:
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--index", required=True, help="block index root (sink layout)")
     p.add_argument("--store", required=True, help="streaming store root")
-    p.add_argument(
-        "--files-per-bucket", type=int, default=8,
-        help="re-encode exchange width per touched bucket (build default)",
-    )
     args = p.parse_args(argv)
 
     from search_engine_spark.sink import IndexSink
@@ -54,9 +50,7 @@ def main(argv: list[str] | None = None) -> None:
     spark.conf.set("spark.sql.adaptive.enabled", "true")
 
     sink = IndexSink(args.index)
-    res = compact_into_index(
-        spark, sink, args.store, files_per_bucket=args.files_per_bucket
-    )
+    res = compact_into_index(spark, sink, args.store)
     print(json.dumps(res))
     if not preexisting:
         spark.stop()
