@@ -67,6 +67,18 @@ def varbyte_decode(buf: bytes) -> np.ndarray:
     return out
 
 
+def varbyte_decode_blocks(blobs) -> tuple[np.ndarray, np.ndarray]:
+    """Decode a column of varbyte blobs (one per block) in ONE
+    :func:`varbyte_decode` pass over their concatenation → (values,
+    per-blob value counts). Exact because every blob holds whole values;
+    the counts are read off the terminator bytes."""
+    joined = b"".join(blobs)
+    n_vals = np.cumsum(np.frombuffer(joined, dtype=np.uint8) < 0x80)
+    ends = np.cumsum([len(x) for x in blobs], dtype=np.int64)
+    through = np.concatenate(([0], n_vals))[ends]  # values ending by each blob's end
+    return varbyte_decode(joined), np.diff(through, prepend=0)
+
+
 def encode_doc_ids(doc_ids: np.ndarray) -> bytes:
     """Sorted int64 doc ids → offset to uint64 → delta → varbyte."""
     d = np.ascontiguousarray(doc_ids, dtype=np.int64)
@@ -82,6 +94,17 @@ def decode_doc_ids(buf: bytes) -> np.ndarray:
     deltas = varbyte_decode(buf)
     u = np.cumsum(deltas, dtype=np.uint64)
     return (u - _U63).astype(np.int64)
+
+
+def decode_doc_id_blocks(blobs) -> tuple[np.ndarray, np.ndarray]:
+    """Multi-block :func:`decode_doc_ids` → (doc ids, per-block counts):
+    one varbyte pass, then one uint64 cumsum minus its running total at
+    each block start. uint64 arithmetic is modular, so this equals every
+    block's own cumsum bit for bit."""
+    deltas, counts = varbyte_decode_blocks(blobs)
+    u = np.cumsum(deltas, dtype=np.uint64)
+    before = np.concatenate((np.zeros(1, dtype=np.uint64), u))[np.cumsum(counts) - counts]
+    return (u - np.repeat(before, counts) - _U63).astype(np.int64), counts
 
 
 def encode_positions(positions_concat: np.ndarray, lengths: np.ndarray) -> tuple[bytes, bytes]:

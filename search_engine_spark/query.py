@@ -4,12 +4,17 @@ Two physical paths, identical results:
 
 1. ``bm25_topk_df`` — pure DataFrame over the uncompressed postings
    (oracle-parity path, DuckDB-checkable).
-2. ``bm25_topk_blocks`` — over the compressed block index: per-shard
-   block-max pruning + exact rescore inside one ``applyInPandas``
-   (Arrow), then a global TakeOrderedAndProject. This is the scale path:
-   each shard task touches only the query terms' blocks for its document
-   subset, skips blocks that provably cannot reach the top-k, and emits
-   at most k rows.
+2. ``bm25_topk_blocks`` / ``bm25_topk_batch`` / ``phrase_topk_blocks`` —
+   over the compressed block index: one per-shard ``applyInPandas``
+   (Arrow), then a global top-k. This is the scale path: each shard task
+   touches only the query terms' blocks for its document subset and
+   emits at most k rows per query. All three share one shard-side core:
+   the shard frame is grouped by term once, each term's doc-id streams
+   decode in one multi-block codec pass (``codec.decode_doc_id_blocks``),
+   tf/dl/uf streams (and, for phrases, position streams) decode only for
+   blocks holding a doc being exact-scored, and one term-ascending fold
+   (``_exact_scores``) computes every exact score. BM25 adds block-max
+   pruning (``_bm25_shard_scorer``); a single query is a batch of one.
 
 Rank identity (BASELINE.json north_star): scores are float64 with a FIXED
 accumulation order — per doc, term contributions are summed in ascending
@@ -36,17 +41,30 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import constants as C
-from .codec import decode_doc_ids, decode_positions, varbyte_decode
+from .codec import decode_doc_id_blocks, decode_positions, varbyte_decode_blocks
 from .stemmer import porter_stem
 
 _SPLIT = re.compile(C.TOKEN_SPLIT_RE)
 
 
+def _survivor_tokens(text: str) -> list[str]:
+    """The tokenizer's survivor rule (tokenize._token_array): lowercase,
+    split on TOKEN_SPLIT_RE, drop empties, overlong tokens and SKIP_WORDS."""
+    return [
+        t for t in _SPLIT.split(text.lower())
+        if t and len(t) <= C.MAX_WORD_LEN and t not in C.SKIP_WORDS
+    ]
+
+
+def _check_k(k: int) -> None:
+    if k < 1:
+        raise ValueError(f"top-k needs k >= 1, got {k}")
+
+
 def normalize_query(query: str) -> tuple[list[str], float]:
     """→ (sorted unique stemmed terms, weight). Weight is 1.0, or
     STOPWORD_PENALTY when the query is entirely stopwords."""
-    toks = [t for t in _SPLIT.split(query.lower()) if t]
-    toks = [t for t in toks if len(t) <= C.MAX_WORD_LEN and t not in C.SKIP_WORDS]
+    toks = _survivor_tokens(query)
     if not toks:
         return [], 1.0
     non_stop = [t for t in toks if t not in C.STOPWORDS]
@@ -88,6 +106,7 @@ def bm25_topk_df(
 ) -> DataFrame:
     """DataFrame path. postings=(doc_id,term,tf,...), dstats=(doc_id,doclen),
     tstats=(term,df). Returns (doc_id, score) top-k."""
+    _check_k(k)
     terms, weight = normalize_query(query)
     return bm25_score_terms(postings, dstats, tstats, N, avgdl, terms, weight, k)
 
@@ -105,6 +124,7 @@ def bm25_score_terms(
     """BM25 over already-normalized terms (no stemming/stopword logic) —
     the primitive bm25_topk_df wraps, also used directly by the DuckDB
     oracle-parity entries where the SQL side cannot stem."""
+    _check_k(k)
     spark = postings.sparkSession
     if not terms:
         return spark.createDataFrame([], "doc_id long, score double")
@@ -212,8 +232,8 @@ def blend_with_pagerank(
 
 
 def _bm25_w_np(tfs: np.ndarray, ufs: np.ndarray, dls: np.ndarray, idf: float, avgdl: float, weight: float = 1.0) -> np.ndarray:
-    """CANONICAL BM25 float64 expression, numpy form — the ONE copy
-    shared by the block scorer and the phrase scorer. Must stay
+    """CANONICAL BM25 float64 expression, numpy form — the ONE copy,
+    used by the block-index fold _exact_scores. Must stay
     token-identical to bm25_score_terms' Column expression and
     oracle.py's Python form for bit-exact rank identity across paths.
     tf_eff carries the URL bonus (Search.java:98); uf=0 → tf + 0.0 == tf
@@ -223,125 +243,223 @@ def _bm25_w_np(tfs: np.ndarray, ufs: np.ndarray, dls: np.ndarray, idf: float, av
     return idf * (tf_eff * (k1 + 1.0)) / (tf_eff + k1 * (1.0 - b + b * dls / avgdl)) * weight
 
 
-def _score_shard_factory(
+def _ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Concatenated index ranges [starts[i], starts[i] + lens[i])."""
+    ends = np.cumsum(lens)
+    total = int(ends[-1]) if ends.size else 0
+    return np.arange(total, dtype=np.int64) + np.repeat(starts - (ends - lens), lens)
+
+
+def _term_rows(pdf: pd.DataFrame) -> dict[str, pd.DataFrame]:
+    """A shard frame grouped by term ONCE, each group in block_id order."""
+    return {t: g for t, g in pdf.sort_values(["term", "block_id"]).groupby("term", sort=False)}
+
+
+class _TermBlocks:
+    """One term's blocks within a shard. Doc-id streams of every block
+    decode up front in one multi-block pass; tf/dl/uf streams decode on
+    demand, only for blocks holding a doc being exact-scored, and stay
+    for later queries on the same term."""
+
+    def __init__(self, rows: pd.DataFrame):
+        self.rows = rows
+        self.docs, self.counts = decode_doc_id_blocks(rows["doc_bytes"])
+        self.starts = np.cumsum(self.counts) - self.counts
+        self._tdu = np.zeros((3, self.docs.size))  # tf/dl/uf, filled per block
+        self._have = np.zeros(len(rows), dtype=bool)
+
+    def blocks_holding(self, mask: np.ndarray) -> np.ndarray:
+        """Sorted indices of the blocks holding a doc where ``mask``."""
+        return np.unique(np.searchsorted(self.starts, np.nonzero(mask)[0], side="right") - 1)
+
+    def tf_dl_uf(self, mask: np.ndarray) -> np.ndarray:
+        """(3, mask.sum()) float64 tf/dl/uf of the docs where ``mask``."""
+        need = self.blocks_holding(mask)
+        need = need[~self._have[need]]
+        if need.size:
+            at = _ranges(self.starts[need], self.counts[need])
+            for i, col in enumerate(("tf_bytes", "dl_bytes", "uf_bytes")):
+                self._tdu[i, at] = varbyte_decode_blocks(self.rows[col].to_numpy()[need])[0]
+            self._have[need] = True
+        return self._tdu[:, mask]
+
+    @property
+    def nbytes(self) -> int:
+        return self.docs.nbytes + self._tdu.nbytes
+
+
+def _exact_scores(
+    ents: dict[str, _TermBlocks],
+    idf_by_term: dict[str, float],
+    weight: float,
+    avgdl: float,
+    doc_set: np.ndarray,
+) -> np.ndarray:
+    """THE exact-scoring fold: float64 BM25 of the sorted, non-empty
+    ``doc_set``, one contribution per (doc, term) added in ascending term
+    order (``ents`` is term-sorted) — bit-identical to bm25_score_terms
+    and the oracle."""
+    s = np.zeros(doc_set.size)
+    for t, e in ents.items():
+        at = np.searchsorted(doc_set, e.docs)
+        ok = (at < doc_set.size) & (doc_set[np.minimum(at, doc_set.size - 1)] == e.docs)
+        if not ok.any():
+            continue
+        tf, dl, uf = e.tf_dl_uf(ok)
+        s[at[ok]] += _bm25_w_np(tf, uf, dl, idf_by_term[t], avgdl, weight)
+    return s
+
+
+def _bm25_topk(
+    ents: dict[str, _TermBlocks],
     idf_by_term: dict[str, float],
     weight: float,
     k: int,
     avgdl: float,
-    wtf_scale: float = 1.0,
+    wtf_scale: float,
+) -> tuple[np.ndarray, np.ndarray]:
+    """One query's exact top-k over one shard, block-max pruned: (1)
+    per-doc upper bound = Σ_t idf_t · max_wtf(block holding the doc), from
+    doc-id streams only; (2) exact-score the top-k docs by upper bound →
+    threshold s_k; (3) exact-score the survivors (ub ≥ s_k) only.
+    Exactness: a pruned doc has true score ≤ ub < s_k ≤ kth best."""
+    all_docs = np.concatenate([e.docs for e in ents.values()])
+    # wtf_scale: stored max_wtf was computed under the index's ENCODED
+    # avgdl; after an incremental compaction the live corpus avgdl may be
+    # larger, which raises every true wtf. sup over (tf, dl) of
+    # wtf(avgdl_now)/wtf(avgdl_enc) is avgdl_now/avgdl_enc (attained as
+    # dl→∞), so scaling the stored bound by max(1, that ratio) keeps
+    # pruning SAFE — survivors are exact-rescored; only bound tightness
+    # degrades, by ≤ the avgdl drift since the last full encode.
+    all_ubs = np.concatenate([
+        np.repeat(
+            idf_by_term[t] * e.rows["max_wtf"].to_numpy(np.float64) * weight * wtf_scale,
+            e.counts,
+        )
+        for t, e in ents.items()
+    ])
+    uniq, inv = np.unique(all_docs, return_inverse=True)
+    ub = np.zeros(uniq.size)
+    np.add.at(ub, inv, all_ubs)
+    if uniq.size <= k:
+        cand = uniq
+    else:
+        top_by_ub = uniq[np.argsort(-ub, kind="mergesort")[:k]]
+        top_by_ub.sort()
+        seed = _exact_scores(ents, idf_by_term, weight, avgdl, top_by_ub)
+        cand = np.union1d(uniq[ub >= np.sort(seed)[-k]], top_by_ub)
+    scores = _exact_scores(ents, idf_by_term, weight, avgdl, cand)
+    order = np.lexsort((cand, -scores))[:k]
+    return cand[order], scores[order]
+
+
+def _bm25_shard_scorer(
+    per_query: dict[str, tuple[dict[str, float], float]],
+    k: int,
+    avgdl: float,
+    wtf_scale: float,
+    stats: dict | None = None,
 ):
-    """Returns the per-shard scorer for applyInPandas. Block-max pruning:
-    (1) decode doc-id streams only; per-doc upper bound = Σ_t idf_t ·
-    max_wtf(block containing doc); (2) exact-score the top-k docs by upper
-    bound → threshold s_k; (3) survivors = docs with ub ≥ s_k; exact-score
-    survivors only (tf/dl streams decoded only for blocks that still
-    matter). Exactness: a pruned doc has true score ≤ ub < s_k ≤ kth best.
+    """The ONE BM25 shard scorer (applyInPandas body of bm25_topk_blocks
+    and bm25_topk_batch): ``per_query`` maps query id → (idf by term,
+    weight); the callable maps a shard frame → (query_id, doc_id, score),
+    ≤ k rows per query.
 
-    ``score_shard(pdf, cache)``: every stream decode goes through
-    ``cache`` keyed (stream, term, block_id) — (term, block_id) is unique
-    within a shard frame. applyInPandas calls with pdf only (fresh cache
-    per shard: within ONE query, the survivor rescore reuses the seed
-    pass's tf/dl decodes). bm25_topk_batch passes a shared per-shard
-    cache so |Q| queries decode each block's streams ONCE instead of
-    once per query (round-3 verdict: the |Q|× re-decode eroded the batch
-    path's scan-amortization claim at eval-suite width). Decoded arrays
-    are read-only; arithmetic is unchanged expression-for-expression, so
-    per-query results stay bit-identical to the uncached path.
+    Queries run in a TERM-CLUSTERED deterministic order (sorted by term
+    tuple, then query id, so queries sharing terms are adjacent) and a
+    term's decoded arrays are EVICTED right after its last consuming
+    query scores. Each term's streams therefore decode at most once per
+    shard, and the peak footprint is the streams of terms live at one
+    point of the order — for disjoint-term query sets ONE query's terms —
+    not the union of all |Q| queries' terms. A query's arithmetic does
+    not depend on which other queries share the shard, so every result
+    is bit-identical to a batch of one.
+
+    ``stats`` (tests only): accumulates ``peak_cache_bytes`` when the
+    callable runs in-process.
     """
-    # NOTE: the applyInPandas-facing callable must stay SINGLE-argument —
-    # PySpark dispatches on arity and would pass the group key as a first
-    # positional arg to a two-parameter function. The cache-taking variant
-    # is exposed as ``score_shard.with_cache`` for bm25_topk_batch, which
-    # calls it directly (plain Python, not through applyInPandas).
-    def _score(pdf: pd.DataFrame, cache: dict) -> pd.DataFrame:
-        def f64(stream: str, t: str, bid: int, blob) -> np.ndarray:
-            key = (stream, t, bid)
-            a = cache.get(key)
-            if a is None:
-                a = varbyte_decode(blob).astype(np.float64)
-                cache[key] = a
-            return a
-
-        terms = sorted(idf_by_term)
-        per_term: dict[str, list] = {}
-        doc_arrays, ub_arrays = [], []
-        for t in terms:
-            blocks = pdf[pdf["term"] == t].sort_values("block_id")
-            if blocks.empty:
-                continue
-            decoded = []
-            for _, r in blocks.iterrows():
-                bid = int(r["block_id"])
-                dids = cache.get(("d", t, bid))
-                if dids is None:
-                    dids = decode_doc_ids(r["doc_bytes"])
-                    cache[("d", t, bid)] = dids
-                decoded.append(
-                    (bid, dids, r["tf_bytes"], r["dl_bytes"], r["uf_bytes"], float(r["max_wtf"]))
-                )
-                doc_arrays.append(dids)
-                # wtf_scale: stored max_wtf was computed under the index's
-                # ENCODED avgdl; after an incremental compaction the live
-                # corpus avgdl may be larger, which raises every true wtf.
-                # sup over (tf, dl) of wtf(avgdl_now)/wtf(avgdl_enc) is
-                # avgdl_now/avgdl_enc (attained as dl→∞), so scaling the
-                # stored bound by max(1, that ratio) keeps pruning SAFE —
-                # exactness of results is unaffected (survivors are exact-
-                # rescored); only bound tightness degrades, by ≤ the avgdl
-                # drift since the last full encode.
-                ub_arrays.append(
-                    np.full(
-                        dids.size,
-                        idf_by_term[t] * float(r["max_wtf"]) * weight * wtf_scale,
-                    )
-                )
-            per_term[t] = decoded
-        if not doc_arrays:
-            return pd.DataFrame({"doc_id": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")})
-        all_docs = np.concatenate(doc_arrays)
-        all_ubs = np.concatenate(ub_arrays)
-        uniq, inv = np.unique(all_docs, return_inverse=True)
-        ub = np.zeros(uniq.size)
-        np.add.at(ub, inv, all_ubs)
-
-        def exact_scores(doc_set: np.ndarray) -> np.ndarray:
-            """float64 scores for doc_set (sorted), term-ascending fold."""
-            s = np.zeros(doc_set.size)
-            for t in terms:
-                if t not in per_term:
-                    continue
-                idf = idf_by_term[t]
-                for bid, dids, tf_b, dl_b, uf_b, _mw in per_term[t]:
-                    sel = np.searchsorted(doc_set, dids)
-                    sel_ok = (sel < doc_set.size) & (doc_set[np.minimum(sel, doc_set.size - 1)] == dids)
-                    if not sel_ok.any():
-                        continue
-                    w = _bm25_w_np(
-                        f64("t", t, bid, tf_b), f64("u", t, bid, uf_b),
-                        f64("l", t, bid, dl_b), idf, avgdl, weight,
-                    )
-                    s[sel[sel_ok]] += w[sel_ok]
-            return s
-
-        if uniq.size <= k:
-            cand = uniq
-            cand_scores = exact_scores(cand)
-        else:
-            top_by_ub = uniq[np.argsort(-ub, kind="mergesort")[:k]]
-            top_by_ub.sort()
-            seed_scores = exact_scores(top_by_ub)
-            s_k = np.sort(seed_scores)[-k] if seed_scores.size >= k else -np.inf
-            survivors = uniq[ub >= s_k]
-            cand = np.union1d(survivors, top_by_ub)
-            cand_scores = exact_scores(cand)
-        order = np.lexsort((cand, -cand_scores))[:k]
-        return pd.DataFrame({"doc_id": cand[order], "score": cand_scores[order]})
+    order = sorted(per_query, key=lambda q: (tuple(sorted(per_query[q][0])), q))
+    last_use = {t: i for i, q in enumerate(order) for t in per_query[q][0]}
 
     def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _score(pdf, {})
+        rows = _term_rows(pdf)
+        live: dict[str, _TermBlocks] = {}
+        qids = [np.empty(0, dtype=object)]
+        docs = [np.empty(0, dtype=np.int64)]
+        scores = [np.empty(0)]
+        peak = 0
+        for i, qid in enumerate(order):
+            idf_by_term, weight = per_query[qid]
+            ents = {}
+            for t in sorted(idf_by_term):
+                if t in rows:
+                    if t not in live:
+                        live[t] = _TermBlocks(rows[t])
+                    ents[t] = live[t]
+            if ents:
+                d, s = _bm25_topk(ents, idf_by_term, weight, k, avgdl, wtf_scale)
+                qids.append(np.full(d.size, qid, dtype=object))
+                docs.append(d)
+                scores.append(s)
+            if stats is not None:  # O(|live|) accounting: test path only
+                peak = max(peak, sum(e.nbytes for e in live.values()))
+            for t in idf_by_term:
+                if last_use[t] == i:
+                    live.pop(t, None)
+        if stats is not None:
+            stats["peak_cache_bytes"] = max(stats.get("peak_cache_bytes", 0), peak)
+        return pd.DataFrame({
+            "query_id": np.concatenate(qids),
+            "doc_id": np.concatenate(docs),
+            "score": np.concatenate(scores),
+        })
 
-    score_shard.with_cache = _score
     return score_shard
+
+
+def _bm25_shard_topk(
+    index_df: DataFrame,
+    tstats: DataFrame,
+    N: int,
+    avgdl: float,
+    queries: dict[str, str],
+    k: int,
+    wtf_scale: float,
+) -> DataFrame | None:
+    """Driver side shared by bm25_topk_blocks and bm25_topk_batch:
+    normalize every query, ONE tstats lookup for the union of terms, ONE
+    block scan filtered to it, ONE per-shard applyInPandas →
+    (query_id, doc_id, score). None when no query has a term in the
+    index."""
+    norm = {qid: normalize_query(q) for qid, q in queries.items()}
+    all_terms = sorted({t for terms, _ in norm.values() for t in terms})
+    if not all_terms:
+        return None
+    # idf computed driver-side with math.log (see bm25_score_terms)
+    dfs = {
+        r["term"]: int(r["df"])
+        for r in tstats.where(F.col("term").isin(all_terms)).collect()
+    }
+    per_query = {}
+    for qid, (terms, weight) in norm.items():
+        idf_by_term = {t: bm25_idf(N, dfs[t]) for t in terms if t in dfs}
+        if idf_by_term:
+            per_query[qid] = (idf_by_term, weight)
+    if not per_query:
+        return None
+    live_terms = sorted({t for idf, _ in per_query.values() for t in idf})
+    # project away the positions streams BEFORE the per-shard exchange:
+    # pos_bytes/plen_bytes dominate block-row bytes and BM25 never reads
+    # them — without this, a hot term's shuffle moves ~3× the bytes and
+    # the single-term query REGRESSES as executors are added (round-1
+    # bench: q_hot_term 1.4s → 3.4s going 1 → 4 executors)
+    idx = index_df.where(F.col("term").isin(live_terms)).select(
+        "term", "shard", "block_id", "doc_bytes", "tf_bytes", "dl_bytes", "uf_bytes", "max_wtf"
+    )
+    return idx.groupBy("shard").applyInPandas(
+        _bm25_shard_scorer(per_query, k, float(avgdl), float(wtf_scale)),
+        schema="query_id string, doc_id long, score double",
+    )
 
 
 def bm25_topk_blocks(
@@ -353,91 +471,18 @@ def bm25_topk_blocks(
     k: int = C.TOP_K,
     wtf_scale: float = 1.0,
 ) -> DataFrame:
-    terms, weight = normalize_query(query)
-    spark = index_df.sparkSession
-    if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
-    dfs = {
-        r["term"]: int(r["df"])
-        for r in tstats.where(F.col("term").isin(terms)).collect()
-    }
-    idf_by_term = {t: bm25_idf(N, dfs[t]) for t in terms if t in dfs}
-    if not idf_by_term:
-        return spark.createDataFrame([], "doc_id long, score double")
-    # project away the positions streams BEFORE the per-shard exchange:
-    # pos_bytes/plen_bytes dominate block-row bytes and BM25 never reads
-    # them — without this, a hot term's shuffle moves ~3× the bytes and
-    # the single-term query REGRESSES as executors are added (round-1
-    # bench: q_hot_term 1.4s → 3.4s going 1 → 4 executors)
-    idx = index_df.where(F.col("term").isin(list(idf_by_term))).select(
-        "term", "shard", "block_id", "doc_bytes", "tf_bytes", "dl_bytes", "uf_bytes", "max_wtf"
+    """One query over the block index → (doc_id, score) top-k: the batch
+    core with one query, then ONE TakeOrderedAndProject over the
+    ≤ |shards|·k per-shard rows."""
+    _check_k(k)
+    shard_topk = _bm25_shard_topk(index_df, tstats, N, avgdl, {"": query}, k, wtf_scale)
+    if shard_topk is None:
+        return index_df.sparkSession.createDataFrame([], "doc_id long, score double")
+    return (
+        shard_topk.select("doc_id", "score")
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(k)
     )
-    shard_topk = idx.groupBy("shard").applyInPandas(
-        _score_shard_factory(idf_by_term, weight, k, float(avgdl), float(wtf_scale)),
-        schema="doc_id long, score double",
-    )
-    return shard_topk.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-
-def _batch_shard_scorer(
-    scorers: dict,
-    terms_by_qid: dict[str, tuple],
-    stats: dict | None = None,
-):
-    """Shared-decode-cache scorer over ONE shard frame for every query
-    (the body of bm25_topk_batch's applyInPandas).
-
-    Queries run in a TERM-CLUSTERED deterministic order (sorted by term
-    tuple, then query id, so queries sharing terms are adjacent) and a
-    term's decoded streams are EVICTED right after its last consuming
-    query scores. Peak cache footprint is therefore bounded by the
-    streams of terms live at one point of the order — for disjoint-term
-    query sets that is ONE query's terms — instead of the union of all
-    |Q| queries' terms (round-4 verdict watch-item: at |Q|≈10³ eval
-    suites the unbounded cache held decoded float64 arrays for every
-    live block in the shard at once). Eviction can only force a
-    deterministic re-decode, never a different value, so per-query
-    results stay bit-identical to the single-query path.
-
-    ``stats`` (tests only): accumulates ``peak_cache_bytes`` when the
-    returned callable runs in-process; executor-side copies mutate
-    their own serialized clone, which is fine — the bound is a per-task
-    property.
-    """
-    order = sorted(scorers, key=lambda q: (terms_by_qid[q], q))
-    last_use: dict[str, int] = {}
-    for i, q in enumerate(order):
-        for t in terms_by_qid[q]:
-            last_use[t] = i
-
-    def score_shard_all(pdf: pd.DataFrame) -> pd.DataFrame:
-        cache: dict = {}  # (stream, term, block_id) → decoded array
-        peak = 0
-        outs = []
-        for i, qid in enumerate(order):
-            res = scorers[qid].with_cache(pdf, cache)
-            if stats is not None:  # O(|cache|) accounting: test path only
-                peak = max(peak, sum(a.nbytes for a in cache.values()))
-            dead = {t for t in terms_by_qid[qid] if last_use[t] == i}
-            if dead:
-                for key in [c for c in cache if c[1] in dead]:
-                    del cache[key]
-            if len(res):
-                res.insert(0, "query_id", qid)
-                outs.append(res)
-        if stats is not None:
-            stats["peak_cache_bytes"] = max(stats.get("peak_cache_bytes", 0), peak)
-        if not outs:
-            return pd.DataFrame(
-                {
-                    "query_id": pd.Series(dtype="object"),
-                    "doc_id": pd.Series(dtype="int64"),
-                    "score": pd.Series(dtype="float64"),
-                }
-            )
-        return pd.concat(outs, ignore_index=True)
-
-    return score_shard_all
 
 
 def bm25_topk_batch(
@@ -460,19 +505,12 @@ def bm25_topk_batch(
       the union of all terms (one small collect instead of |Q|);
     * scans the block index ONCE, filtered to the union of terms (the
       caller can additionally bucket-prune via sink.blocks_for_terms on
-      that union), positions projected away as in the single-query path;
-    * scores every query inside the same per-shard applyInPandas — each
-      query runs the UNCHANGED single-query scorer closure on the
-      shard's frame (terms outside its set are skipped by the scorer),
-      so per-query arithmetic is BIT-IDENTICAL to bm25_topk_blocks; the
-      closures share ONE per-shard decode cache, so each block's
-      doc/tf/dl/uf streams are varbyte-decoded once per shard while the
-      term is live, and the cache is BOUNDED — queries run in
-      term-clustered order and a term's arrays are evicted after its
-      last consuming query (see _batch_shard_scorer), so peak memory is
-      one term-cluster's streams, not the |Q|-query union (per-query
-      decode cost → per-BLOCK decode cost; the scan-amortization AND
-      memory claims survive |Q|≈10³ eval suites);
+      that union), positions projected away;
+    * scores every query inside the same per-shard applyInPandas with
+      the one BM25 shard scorer (_bm25_shard_scorer): each term's streams
+      decode once per shard, its arrays are evicted after the last query
+      that uses it, and per-query arithmetic is BIT-IDENTICAL to
+      bm25_topk_blocks;
     * one final tiny shuffle on query_id ranks the per-shard candidates
       (≤ |shards|·k rows per query, never corpus-sized).
 
@@ -480,38 +518,12 @@ def bm25_topk_batch(
     the index) contribute zero rows, matching the single-query path's
     empty frame.
     """
-    spark = index_df.sparkSession
-    out_schema = "query_id string, doc_id long, score double"
-    norm: dict[str, tuple[list[str], float]] = {
-        qid: normalize_query(q) for qid, q in queries.items()
-    }
-    all_terms = sorted({t for terms, _ in norm.values() for t in terms})
-    if not all_terms:
-        return spark.createDataFrame([], out_schema + ", rank int")
-    dfs = {
-        r["term"]: int(r["df"])
-        for r in tstats.where(F.col("term").isin(all_terms)).collect()
-    }
-    per_query = {}
-    for qid, (terms, weight) in norm.items():
-        idf_by_term = {t: bm25_idf(N, dfs[t]) for t in terms if t in dfs}
-        if idf_by_term:
-            per_query[qid] = (idf_by_term, weight)
-    if not per_query:
-        return spark.createDataFrame([], out_schema + ", rank int")
-    live_terms = sorted({t for idf, _ in per_query.values() for t in idf})
-
-    scorers = {
-        qid: _score_shard_factory(idf, weight, k, float(avgdl), float(wtf_scale))
-        for qid, (idf, weight) in per_query.items()
-    }
-    terms_by_qid = {qid: tuple(sorted(idf)) for qid, (idf, _w) in per_query.items()}
-    score_shard_all = _batch_shard_scorer(scorers, terms_by_qid)
-
-    idx = index_df.where(F.col("term").isin(live_terms)).select(
-        "term", "shard", "block_id", "doc_bytes", "tf_bytes", "dl_bytes", "uf_bytes", "max_wtf"
-    )
-    shard_topk = idx.groupBy("shard").applyInPandas(score_shard_all, schema=out_schema)
+    _check_k(k)
+    shard_topk = _bm25_shard_topk(index_df, tstats, N, avgdl, queries, k, wtf_scale)
+    if shard_topk is None:
+        return index_df.sparkSession.createDataFrame(
+            [], "query_id string, doc_id long, score double, rank int"
+        )
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
@@ -545,8 +557,7 @@ def normalize_phrase(query: str, stem: bool = True) -> list[str]:
     Stopwords are KEPT: the index stores them — stopword removal is a
     query-side *scoring* policy (Search.java:209-213), and dropping one
     here would break adjacency ("state of the art")."""
-    toks = [t for t in _SPLIT.split(query.lower()) if t]
-    toks = [t for t in toks if len(t) <= C.MAX_WORD_LEN and t not in C.SKIP_WORDS]
+    toks = _survivor_tokens(query)
     return [porter_stem(t) for t in toks] if stem else toks
 
 
@@ -568,7 +579,8 @@ def _phrase_shard_factory(terms_seq: list[str], idf_by_term: dict[str, float], a
     """Per-shard phrase matcher + scorer for applyInPandas over block rows
     INCLUDING the position streams (the BM25 paths project pos_bytes away
     before the exchange; phrase ships them, but only for the |phrase|
-    distinct terms' blocks). Decode-narrowest-first, three stages:
+    distinct terms' blocks). Same term-grouped view and codec routine as
+    the BM25 scorer; decode-narrowest-first, three stages:
 
     1. doc-id streams only → conjunctive candidate set (a phrase match
        needs EVERY term, so the intersection is an exact pre-filter —
@@ -582,12 +594,34 @@ def _phrase_shard_factory(terms_seq: list[str], idf_by_term: dict[str, float], a
        whole shard's phrase check is one np.isin per phrase offset, with
        NO per-doc Python loop (repeated phrase terms work because the
        check is per-offset set membership on the same key set);
-    3. tf/dl/uf streams decoded ONLY for those same blocks → exact BM25
-       for the matched docs (canonical float64 expression, term-ascending
-       accumulation — bit-identical to bm25_score_terms / the block
-       scorer), weight 1.0.
+    3. exact BM25 for the matched docs through the shared fold
+       (_exact_scores), weight 1.0 — tf/dl/uf decoded only for blocks
+       holding a matched doc.
     """
     uterms = sorted(set(terms_seq))
+
+    def occurrence_keys(e: _TermBlocks, cand: np.ndarray) -> np.ndarray:
+        sel = np.isin(e.docs, cand, assume_unique=True)
+        need = e.blocks_holding(sel)
+        pos, plens = decode_positions(
+            b"".join(e.rows["pos_bytes"].to_numpy()[need]),
+            b"".join(e.rows["plen_bytes"].to_numpy()[need]),
+        )
+        at = _ranges(e.starts[need], e.counts[need])  # doc index per plen
+        keep = sel[at]
+        ln = plens.astype(np.int64)
+        ls = ln[keep]
+        # multi-range gather of the selected docs' position slices
+        p64 = pos.astype(np.int64)[_ranges((np.cumsum(ln) - ln)[keep], ls)]
+        # tokenizer truncation bounds pos ≪ 2^POS_BITS; guard the packing
+        # invariant loudly rather than corrupting keys (headroom 64 ≥ any
+        # realistic phrase length, so pos+i never carries into the rank bits)
+        if p64.size and int(p64.max()) >= _POS_MASK - 64:
+            raise ValueError(
+                f"position {int(p64.max())} exceeds phrase key capacity 2^{_POS_BITS}"
+            )
+        ranks = np.searchsorted(cand, np.repeat(e.docs[at][keep], ls))
+        return (ranks << _POS_BITS) | p64
 
     def match_shard(pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(
@@ -599,99 +633,43 @@ def _phrase_shard_factory(terms_seq: list[str], idf_by_term: dict[str, float], a
             }
         )
         # -- stage 1: doc-id streams → conjunctive candidates
-        blocks_by_term: dict[str, list] = {}
+        rows = _term_rows(pdf)
+        ents: dict[str, _TermBlocks] = {}
         cand = None
         for t in uterms:
-            rows = pdf[pdf["term"] == t].sort_values("block_id")
-            if rows.empty:
+            if t not in rows:
                 return empty
-            decoded = [(decode_doc_ids(r.doc_bytes), r) for r in rows.itertuples(index=False)]
-            blocks_by_term[t] = decoded
-            docs_t = np.concatenate([d for d, _ in decoded])
-            cand = docs_t if cand is None else np.intersect1d(cand, docs_t, assume_unique=True)
+            e = ents[t] = _TermBlocks(rows[t])
+            cand = e.docs if cand is None else np.intersect1d(cand, e.docs, assume_unique=True)
             if cand.size == 0:
                 return empty
-        # -- stage 2: positions ONLY for candidate-bearing blocks,
-        # vectorized: (candidate_rank << POS_BITS | pos) occurrence keys
-        touched: dict[str, list] = {t: [] for t in uterms}
-        keys_by_term: dict[str, np.ndarray] = {}
-        n_cand = cand.size
-        for t in uterms:
-            parts = []
-            for dids, r in blocks_by_term[t]:
-                sel = np.isin(dids, cand, assume_unique=True)
-                if not sel.any():
-                    continue
-                touched[t].append((dids, r))
-                pos, plens = decode_positions(r.pos_bytes, r.plen_bytes)
-                starts = np.zeros(plens.size, dtype=np.int64)
-                np.cumsum(plens[:-1].astype(np.int64), out=starts[1:])
-                ln = plens.astype(np.int64)
-                sel_idx = np.nonzero(sel)[0]
-                ls, os_ = ln[sel_idx], starts[sel_idx]
-                tot = int(ls.sum())
-                if tot == 0:
-                    continue
-                # multi-range gather of the selected docs' position slices
-                cum = np.cumsum(ls)
-                gidx = np.arange(tot, dtype=np.int64) + np.repeat(
-                    os_ - np.concatenate(([0], cum[:-1])), ls
-                )
-                p64 = pos.astype(np.int64)[gidx]
-                # tokenizer truncation bounds pos ≪ 2^POS_BITS; guard the
-                # packing invariant loudly rather than corrupting keys
-                # (headroom 64 ≥ any realistic phrase length, so pos+i
-                # can never carry into the rank bits)
-                if int(p64.max()) >= _POS_MASK - 64:
-                    raise ValueError(
-                        f"position {int(p64.max())} exceeds phrase key "
-                        f"capacity 2^{_POS_BITS}"
-                    )
-                ranks = np.searchsorted(cand, np.repeat(dids[sel_idx], ls))
-                parts.append((ranks << _POS_BITS) | p64)
-            keys_by_term[t] = (
-                np.concatenate(parts) if parts else np.empty(0, dtype=np.int64)
-            )
+        # -- stage 2: positions ONLY for candidate-bearing blocks
+        keys_by_term = {t: occurrence_keys(e, cand) for t, e in ents.items()}
         occ = keys_by_term[terms_seq[0]]
-        for i, _t in enumerate(terms_seq[1:], start=1):
+        for i, t in enumerate(terms_seq[1:], start=1):
             if occ.size == 0:
                 break
-            occ = occ[np.isin(occ + i, keys_by_term[terms_seq[i]])]
+            occ = occ[np.isin(occ + i, keys_by_term[t])]
         if occ.size == 0:
             return empty
         occ_rank = (occ >> _POS_BITS).astype(np.int64)
         occ_pos = occ & _POS_MASK
-        n_occ = np.bincount(occ_rank, minlength=n_cand)
-        first = np.full(n_cand, np.iinfo(np.int64).max, dtype=np.int64)
+        n_occ = np.bincount(occ_rank, minlength=cand.size)
+        first = np.full(cand.size, np.iinfo(np.int64).max, dtype=np.int64)
         np.minimum.at(first, occ_rank, occ_pos)
         hit = n_occ > 0
         mdocs = cand[hit]  # cand is sorted, so mdocs stays sorted
-        # -- stage 3: exact BM25 for matched docs (term-ascending fold)
-        s = np.zeros(mdocs.size)
-        for t in uterms:
-            idf = idf_by_term[t]
-            for dids, r in touched[t]:
-                pos_in = np.searchsorted(mdocs, dids)
-                ok = (pos_in < mdocs.size) & (mdocs[np.minimum(pos_in, mdocs.size - 1)] == dids)
-                if not ok.any():
-                    continue
-                w = _bm25_w_np(
-                    varbyte_decode(r.tf_bytes).astype(np.float64),
-                    varbyte_decode(r.uf_bytes).astype(np.float64),
-                    varbyte_decode(r.dl_bytes).astype(np.float64),
-                    idf, avgdl,
-                )
-                s[pos_in[ok]] += w[ok]
-        out = pd.DataFrame(
+        # -- stage 3: exact BM25 for matched docs
+        s = _exact_scores(ents, idf_by_term, 1.0, avgdl, mdocs)
+        order = np.lexsort((mdocs, -s))[:k]
+        return pd.DataFrame(
             {
-                "doc_id": mdocs,
-                "n_occurrences": n_occ[hit].astype(np.int64),
-                "first_pos": first[hit].astype(np.int64),
-                "score": s,
+                "doc_id": mdocs[order],
+                "n_occurrences": n_occ[hit][order].astype(np.int64),
+                "first_pos": first[hit][order],
+                "score": s[order],
             }
         )
-        order = np.lexsort((out["doc_id"].to_numpy(), -out["score"].to_numpy()))[:k]
-        return out.iloc[order].reset_index(drop=True)
 
     return match_shard
 
@@ -714,6 +692,7 @@ def phrase_topk_blocks(
     sink.blocks_for_terms), ONE per-shard applyInPandas, one ≤|shards|·k
     row TakeOrderedAndProject — positions never cross the exchange for
     any term outside the phrase."""
+    _check_k(k)
     spark = index_df.sparkSession
     if terms is None:
         terms = normalize_phrase(phrase or "")
@@ -757,6 +736,7 @@ def phrase_topk_df(
     bm25_score_terms restricted to matching docs. Scores are
     bit-identical to the block path (same canonical expression and
     accumulation order)."""
+    _check_k(k)
     spark = toks.sparkSession
     terms = list(terms)
     if not terms:

@@ -588,13 +588,12 @@ class IndexSink:
         # compact_into_index re-encodes touched buckets with this SAME value
         # (so untouched buckets stay byte-stable) while N/avgdl advance to
         # the post-compaction corpus — the query path then scales bounds by
-        # max(1, avgdl/encoded_avgdl) (query._score_shard_factory). When no
+        # max(1, avgdl/encoded_avgdl) (query._bm25_topk). When no
         # bucket was (re)built this run, an existing value is preserved.
         enc_avgdl = avgdl
         if not pending:
             try:
-                with open(os.path.join(self.root, "meta.json")) as f:
-                    enc_avgdl = float(json.load(f).get("encoded_avgdl", avgdl))
+                enc_avgdl = float(self._meta().get("encoded_avgdl", avgdl))
             except (OSError, ValueError):
                 pass
         meta = {
@@ -619,11 +618,17 @@ class IndexSink:
 
     # -- read path ----------------------------------------------------------
 
+    def _blocks(self, spark: SparkSession) -> DataFrame:
+        path = os.path.join(self.root, "blocks")
+        return spark.read.option("basePath", path).parquet(path)
+
+    def _meta(self) -> dict:
+        with open(os.path.join(self.root, "meta.json")) as f:
+            return json.load(f)
+
     def read(self, spark: SparkSession):
-        meta = json.load(open(os.path.join(self.root, "meta.json")))
-        blocks = spark.read.option("basePath", os.path.join(self.root, "blocks")).parquet(
-            os.path.join(self.root, "blocks")
-        )
+        meta = self._meta()
+        blocks = self._blocks(spark)
         tstats = spark.read.parquet(os.path.join(self.root, "tstats"))
         # doclen lives in the docs side table (written first, one pass)
         dstats = spark.read.parquet(os.path.join(self.root, "docs")).select(
@@ -670,9 +675,10 @@ class IndexSink:
         from .query import bm25_topk_blocks, normalize_query
         from .tokenize import tokenize
 
-        blocks, tstats, _dstats, meta = self.read(spark)
+        meta = self._meta()
+        tstats = spark.read.parquet(os.path.join(self.root, "tstats"))
         terms, _w = normalize_query(query)
-        idx = self.blocks_for_terms(spark, terms) if terms else blocks
+        idx = self.blocks_for_terms(spark, terms) if terms else self._blocks(spark)
         topk = bm25_topk_blocks(
             idx, tstats, meta["N"], meta["avgdl"], query, k,
             wtf_scale=wtf_scale_of(meta),
@@ -723,16 +729,14 @@ class IndexSink:
         """Partition-pruned scan: only the buckets owning ``terms`` are read
         (driver-side crc32 mirrors the write path's bucket expression)."""
         buckets = sorted({term_bucket_py(t, self.n_buckets) for t in terms})
-        blocks, *_ = self.read(spark)
-        return blocks.where(F.col("bucket").isin(buckets)).where(
+        return self._blocks(spark).where(F.col("bucket").isin(buckets)).where(
             F.col("term").isin(terms)
         )
 
     def verify(self, spark: SparkSession) -> list[int]:
         """Re-derive each committed bucket's content hash from the files on
         disk and diff against the manifest. Returns mismatched buckets."""
-        blocks, *_ = self.read(spark)
-        actual = _bucket_lineage(blocks)
+        actual = _bucket_lineage(self._blocks(spark))
         bad = []
         for entry in read_manifest(self.root):
             b = entry["bucket"]

@@ -424,12 +424,12 @@ def decode_block_postings(blocks: DataFrame) -> DataFrame:
     exact doc_id/tf/doclen/uf/positions), so re-encoding the output under
     the same avgdl reproduces the input blocks byte-for-byte — that is
     what lets :func:`compact_into_index` rebuild ONLY touched buckets
-    without the original corpus. Runs as mapInPandas over block rows
-    (coarse units: one row ≈ up to BLOCK_SIZE postings), numpy decode per
-    stream, one concat per Arrow batch — no per-posting Python."""
+    without the original corpus. Runs as mapInPandas over block rows;
+    each stream of an Arrow batch decodes in one multi-block codec pass —
+    no per-block or per-posting Python."""
     import numpy as np
 
-    from ..codec import decode_doc_ids, decode_positions, varbyte_decode
+    from ..codec import decode_doc_id_blocks, decode_positions, varbyte_decode_blocks
 
     cols = [
         "term", "block_id", "doc_bytes", "tf_bytes", "dl_bytes",
@@ -438,32 +438,20 @@ def decode_block_postings(blocks: DataFrame) -> DataFrame:
 
     def decode(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in iterator:
-            terms, dids, tfs, dls, ufs, plists = [], [], [], [], [], []
-            for r in pdf.itertuples(index=False):
-                d = decode_doc_ids(r.doc_bytes)
-                n = d.size
-                dids.append(d)
-                terms.append(np.full(n, r.term, dtype=object))
-                tfs.append(varbyte_decode(r.tf_bytes).astype(np.int64))
-                dls.append(varbyte_decode(r.dl_bytes).astype(np.int64))
-                ufs.append(varbyte_decode(r.uf_bytes).astype(np.int64))
-                pos, plens = decode_positions(r.pos_bytes, r.plen_bytes)
-                pos = pos.astype(np.int64)
-                plists.extend(
-                    np.split(pos, np.cumsum(plens.astype(np.int64))[:-1])
-                )
-            if not dids:
+            if pdf.empty:
                 continue
-            yield pd.DataFrame(
-                {
-                    "term": np.concatenate(terms),
-                    "doc_id": np.concatenate(dids).astype(np.int64),
-                    "tf": np.concatenate(tfs).astype(np.int32),
-                    "doclen": np.concatenate(dls).astype(np.int32),
-                    "uf": np.concatenate(ufs).astype(np.int32),
-                    "positions": pd.Series(plists, dtype=object),
-                }
+            dids, counts = decode_doc_id_blocks(pdf["doc_bytes"])
+            pos, plens = decode_positions(
+                b"".join(pdf["pos_bytes"]), b"".join(pdf["plen_bytes"])
             )
+            out = {"term": np.repeat(pdf["term"].to_numpy(), counts), "doc_id": dids}
+            for name, col in (("tf", "tf_bytes"), ("doclen", "dl_bytes"), ("uf", "uf_bytes")):
+                out[name] = varbyte_decode_blocks(pdf[col])[0].astype(np.int32)
+            out["positions"] = pd.Series(
+                np.split(pos.astype(np.int64), np.cumsum(plens.astype(np.int64))[:-1]),
+                dtype=object,
+            )
+            yield pd.DataFrame(out)
 
     return blocks.select(*cols).mapInPandas(decode, schema=_DECODED_POSTINGS_SCHEMA)
 
@@ -477,22 +465,15 @@ def decode_block_doc_ids(blocks: DataFrame) -> DataFrame:
     :func:`decode_block_postings` stays the rebuild path."""
     import numpy as np
 
-    from ..codec import decode_doc_ids
+    from ..codec import decode_doc_id_blocks
 
     def decode(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in iterator:
-            terms, dids = [], []
-            for r in pdf.itertuples(index=False):
-                d = decode_doc_ids(r.doc_bytes)
-                dids.append(d)
-                terms.append(np.full(d.size, r.term, dtype=object))
-            if not dids:
+            if pdf.empty:
                 continue
+            dids, counts = decode_doc_id_blocks(pdf["doc_bytes"])
             yield pd.DataFrame(
-                {
-                    "term": np.concatenate(terms),
-                    "doc_id": np.concatenate(dids).astype(np.int64),
-                }
+                {"term": np.repeat(pdf["term"].to_numpy(), counts), "doc_id": dids}
             )
 
     return blocks.select("term", "doc_bytes").mapInPandas(
@@ -580,7 +561,7 @@ def compact_into_index(
     corpus — queries score EXACTLY like a from-scratch rebuild (scoring
     decodes true tf/doclen and uses current N/avgdl/df); only the stored
     max_wtf bounds lag, which the query path covers with the safe
-    max(1, avgdl/encoded_avgdl) scale (query._score_shard_factory).
+    max(1, avgdl/encoded_avgdl) scale (query._bm25_topk).
 
     Idempotent/crash-safe on one POSIX filesystem (same deployment
     requirement as the store protocol, see incremental_index_stream):

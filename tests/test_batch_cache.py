@@ -1,12 +1,12 @@
-"""Bounded shared decode cache in the batch scorer (round-4 verdict
-watch-item): at |Q|≈10³ eval-suite width the previous unbounded
-per-shard cache held decoded float64 arrays for EVERY live block in the
-shard at once. _batch_shard_scorer now runs queries in term-clustered
-order and evicts a term's decoded streams after its last consuming
-query, so the peak footprint is bounded by one term-cluster's streams —
-asserted here against the exact per-term byte bound at a 100-query
-synthetic set — while per-query results stay bit-identical to the
-fresh-cache single-query scorer."""
+"""Bounded decode cache in the BM25 shard scorer (round-4 verdict
+watch-item): at |Q|≈10³ eval-suite width an unbounded per-shard cache
+holds decoded float64 arrays for EVERY live block in the shard at once.
+_bm25_shard_scorer runs queries in term-clustered order and evicts a
+term's decoded streams after its last consuming query, so the peak
+footprint is bounded by one term-cluster's streams — asserted here
+against the exact per-term byte bound at a 100-query synthetic set —
+while per-query results stay bit-identical to the same scorer run with
+one query."""
 
 from __future__ import annotations
 
@@ -20,11 +20,7 @@ from search_engine_spark.index import (
     doc_stats,
     term_stats,
 )
-from search_engine_spark.query import (
-    _batch_shard_scorer,
-    _score_shard_factory,
-    bm25_idf,
-)
+from search_engine_spark.query import _bm25_shard_scorer, bm25_idf
 from search_engine_spark.tokenize import tokenize
 
 N_QUERIES = 100
@@ -50,6 +46,12 @@ def built(spark):
     return N, avgdl, dfs, blocks_pdf
 
 
+def _single(per_query, qid, avgdl, shard_pdf):
+    """(doc_id, score) of ``qid`` scored alone, as bm25_topk_blocks does."""
+    out = _bm25_shard_scorer({qid: per_query[qid]}, 10, float(avgdl), 1.0)(shard_pdf)
+    return out.drop(columns="query_id")
+
+
 def test_peak_cache_bounded_at_100_queries(built):
     N, avgdl, dfs, blocks_pdf = built
     # 100 single-term queries over a 40-term vocabulary: queries SHARE
@@ -57,15 +59,11 @@ def test_peak_cache_bounded_at_100_queries(built):
     # order makes sharers adjacent, so the cache still never holds more
     # than one term's streams at the measurement point
     qterms = {f"q{j:03d}": [f"t{j % VOCAB:02d}"] for j in range(N_QUERIES)}
-    scorers = {
-        qid: _score_shard_factory(
-            {t: bm25_idf(N, dfs[t]) for t in ts}, 1.0, 10, float(avgdl)
-        )
-        for qid, ts in qterms.items()
+    per_query = {
+        qid: ({t: bm25_idf(N, dfs[t]) for t in ts}, 1.0) for qid, ts in qterms.items()
     }
-    terms_by_qid = {qid: tuple(sorted(ts)) for qid, ts in qterms.items()}
     stats: dict = {}
-    fn = _batch_shard_scorer(scorers, terms_by_qid, stats)
+    fn = _bm25_shard_scorer(per_query, 10, float(avgdl), 1.0, stats)
 
     checked = 0
     for _shard, g in blocks_pdf.groupby("shard"):
@@ -78,9 +76,9 @@ def test_peak_cache_bounded_at_100_queries(built):
             f"peak {stats['peak_cache_bytes']} exceeds per-term bound {bound}"
         )
         assert stats["peak_cache_bytes"] > 0
-        # bit-identity vs the fresh-cache single-query scorer
+        # bit-identity vs the scorer run with this one query
         for qid in list(qterms)[:: 7]:  # sample 15 queries per shard
-            single = scorers[qid](g)
+            single = _single(per_query, qid, avgdl, g)
             mine = out[out["query_id"] == qid].drop(columns="query_id").reset_index(drop=True)
             assert np.array_equal(
                 mine["doc_id"].to_numpy(), single["doc_id"].to_numpy()
@@ -101,18 +99,14 @@ def test_multi_term_queries_still_identical(built):
         f"q{j:02d}": sorted({f"t{j % VOCAB:02d}", f"t{(j + 3) % VOCAB:02d}", f"t{(j + 17) % VOCAB:02d}"})
         for j in range(30)
     }
-    scorers = {
-        qid: _score_shard_factory(
-            {t: bm25_idf(N, dfs[t]) for t in ts}, 1.0, 10, float(avgdl)
-        )
-        for qid, ts in qterms.items()
+    per_query = {
+        qid: ({t: bm25_idf(N, dfs[t]) for t in ts}, 1.0) for qid, ts in qterms.items()
     }
-    terms_by_qid = {qid: tuple(ts) for qid, ts in qterms.items()}
-    fn = _batch_shard_scorer(scorers, terms_by_qid)
+    fn = _bm25_shard_scorer(per_query, 10, float(avgdl), 1.0)
     for _shard, g in blocks_pdf.groupby("shard"):
         out = fn(g)
         for qid in qterms:
-            single = scorers[qid](g)
+            single = _single(per_query, qid, avgdl, g)
             mine = out[out["query_id"] == qid].drop(columns="query_id").reset_index(drop=True)
             assert np.array_equal(mine["doc_id"].to_numpy(), single["doc_id"].to_numpy())
             assert np.array_equal(mine["score"].to_numpy(), single["score"].to_numpy())

@@ -261,3 +261,37 @@ def test_subtoken_channel_single_scan_no_shuffle(docs):
     assert plan.count("FileScan") == 1, plan
     assert "Exchange" not in plan, plan
     assert "Python" not in plan, plan
+
+
+def test_block_query_plans_one_shard_exchange_and_pruned_streams(spark, tmp_path):
+    """The three block-index query paths: BM25 single and batch scans
+    never read the position streams (they dominate block bytes), the
+    phrase scan reads them, and each plan has exactly ONE shard
+    exchange — the per-shard scorer's."""
+    import re
+
+    from search_engine_spark.query import (
+        bm25_topk_batch,
+        bm25_topk_blocks,
+        phrase_topk_blocks,
+    )
+    from search_engine_spark.sink import IndexSink
+
+    sink = IndexSink(str(tmp_path / "idx"), n_buckets=8)
+    sink.build(generate_corpus(spark, 50))
+    blocks, tstats, _dstats, meta = sink.read(spark)
+    t1, t2 = [r["term"] for r in tstats.orderBy(F.desc("df"), "term").limit(2).collect()]
+    N, avgdl = meta["N"], meta["avgdl"]
+    plans = {
+        "single": _plan(bm25_topk_blocks(blocks, tstats, N, avgdl, f"{t1} {t2}", 10)),
+        "batch": _plan(bm25_topk_batch(blocks, tstats, N, avgdl, {"a": t1, "b": t2}, 10)),
+        "phrase": _plan(phrase_topk_blocks(blocks, tstats, N, avgdl, terms=[t1, t2], k=10)),
+    }
+    for name, plan in plans.items():
+        # the scan's column list (ReadSchema is truncated for wide scans)
+        m = re.search(r"FileScan parquet \[([^\]]*)\]", plan)
+        assert m, plan
+        read_cols = {c.split("#")[0] for c in m.group(1).split(",")}
+        positions = {"pos_bytes", "plen_bytes"}
+        assert read_cols & positions == (positions if name == "phrase" else set()), (name, plan)
+        assert plan.count("hashpartitioning(shard") == 1, (name, plan)
