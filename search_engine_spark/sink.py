@@ -27,7 +27,13 @@ Iceberg-style *per-partition commit protocol*:
   - **Resume = set difference**: committed buckets (manifest present) are
     skipped; a bucket directory without a manifest (crash between rename
     and manifest write) is swapped out and rewritten — the writer is
-    idempotent per bucket because the encoder is deterministic.
+    idempotent per bucket because the encoder is deterministic. A
+    resume under another (n_buckets, n_shards, url_cols) than
+    ``_layout.json`` records fails instead of mixing layouts.
+  - **One index writer**: the build and the fold
+    (``streaming.compact_into_index``) share every table writer here —
+    :func:`encoder_input`, :func:`publish_buckets`, :func:`write_docs`,
+    :func:`write_tstats`, :func:`refresh_side_tables`.
 
 On a real cluster each wave is an Iceberg ``append`` commit and the
 manifest rows live in a catalog table; the directory-rename + JSON-file
@@ -53,6 +59,7 @@ from .fsutil import atomic_write_json, recover_dirs, swap_dir
 from .index import (
     INDEX_SCHEMA,
     _encoder_stream,
+    corpus_stats,
     with_shard,
 )
 
@@ -102,11 +109,13 @@ def committed_buckets(root: str) -> set[int]:
     return out
 
 
+def _load_json(path: str):
+    with open(path) as fh:
+        return json.load(fh)
+
+
 def read_manifest(root: str) -> list[dict]:
-    return [
-        json.load(open(_manifest_path(root, b)))
-        for b in sorted(committed_buckets(root))
-    ]
+    return [_load_json(_manifest_path(root, b)) for b in sorted(committed_buckets(root))]
 
 
 def _bucket_lineage(df: DataFrame) -> dict[int, dict]:
@@ -176,6 +185,17 @@ def _scan_conf(spark, value: str):
             spark.conf.unset("spark.sql.files.maxPartitionBytes")
 
 
+@contextmanager
+def persisted(df: DataFrame, level=None):
+    """``df`` persisted for the block and unpersisted however it exits,
+    so a failed call leaves no cached frame in a long-lived driver."""
+    df = df.persist(level) if level is not None else df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist()
+
+
 # Encoder exchange width per bucket: a (term, shard) group lands in
 # partition (bucket, shard % FILES_PER_BUCKET), so a hot term's postings
 # split over this many reducers and each bucket is written as at most
@@ -188,6 +208,38 @@ _EMPTY_STATS = {"n_blocks": 0, "n_postings": 0, "n_terms": 0, "content_hash": 0}
 
 def _add_time(phase_t: dict, key: str, t0: float) -> None:
     phase_t[key] = phase_t.get(key, 0.0) + (time.perf_counter() - t0)
+
+
+def encoder_input(
+    postings: DataFrame,
+    doclen: DataFrame,
+    n_shards: int,
+    n_buckets: int,
+    broadcast_doclen: bool = True,
+) -> DataFrame:
+    """Raw-channel postings (doc_id, term, tf, positions, uf) → the rows
+    :func:`publish_buckets` encodes: stem channel added at the POSTING
+    level, doclen joined, shard and bucket assigned.
+
+    Stems are computed over the distinct vocabulary only; renamed rows
+    join back broadcast and COPY the raw row's uf (Search.java:149-163).
+    Two raw terms sharing a stem give duplicate (term, doc) rows, merged
+    by the encoder after its sort (index._encode_batch) — no extra
+    exchange. doclen travels as smallint (bounded by tokenizer
+    truncation); the encoder casts to uint64, so blocks are identical.
+    Broadcast the doclen side while it is small (~16 B/doc)."""
+    from .tokenize import stem_vocab
+
+    raw = postings.select("doc_id", "term", "tf", "positions", "uf")
+    vocab = stem_vocab(raw).where(F.col("stem") != F.col("term"))
+    stemmed = raw.join(F.broadcast(vocab), "term").select(
+        "doc_id", F.col("stem").alias("term"), "tf", "positions", "uf"
+    )
+    dl = doclen.select("doc_id", F.col("doclen").cast("smallint").alias("doclen"))
+    joined = raw.unionByName(stemmed).join(
+        F.broadcast(dl) if broadcast_doclen else dl, "doc_id"
+    )
+    return with_bucket(with_shard(joined, n_shards), n_buckets)
 
 
 def publish_buckets(
@@ -291,6 +343,82 @@ def write_tstats(
     swap_dir(tstats_dir, tmp)
 
 
+def write_docs(
+    spark: SparkSession,
+    root: str,
+    n_doc_buckets: int,
+    rows: DataFrame,
+    drop: DataFrame | None = None,
+) -> None:
+    """Publish the docs side table (doc_id, metadata columns, doclen) in
+    its ``dbucket = pmod(doc_id, n_doc_buckets)`` layout via tmp write +
+    :func:`fsutil.swap_dir`, the :func:`write_tstats` contract:
+    ``drop=None`` swaps ``rows`` in as the whole table; otherwise
+    ``rows`` are added, the ``drop`` doc_ids retired, and only the
+    dbuckets holding either are rewritten and swapped (ids stay
+    distributed; only bucket numbers collect). A flat docs dir (built
+    before the dbucket layout) is republished whole in the layout. An
+    added row lacking a metadata column folds it as null."""
+    docs_dir = os.path.join(root, "docs")
+    tmp = os.path.join(root, "_tmp_docs")
+    dbx = F.pmod(F.col("doc_id"), F.lit(n_doc_buckets)).cast("int")
+    touched = None
+    if drop is not None:
+        cur = spark.read.parquet(docs_dir)
+        if "dbucket" in cur.columns:
+            touched = sorted(
+                int(r["db"])
+                for r in drop.select(dbx.alias("db"))
+                .unionByName(rows.select(dbx.alias("db")))
+                .distinct().collect()
+            )
+            if not touched:
+                return
+            cur = cur.where(F.col("dbucket").isin(touched)).drop("dbucket")
+        kept = cur.join(drop, "doc_id", "left_anti")
+        rows = kept.unionByName(
+            rows.select(*(c for c in kept.columns if c in rows.columns)),
+            allowMissingColumns=True,
+        )
+    shutil.rmtree(tmp, ignore_errors=True)
+    # one exchange of the content-free metadata rows: ≤ 1 file per
+    # (task, dbucket)
+    rows.withColumn("dbucket", dbx).repartition(
+        len(touched) if touched else n_doc_buckets, "dbucket"
+    ).write.mode("overwrite").partitionBy("dbucket").parquet(tmp)
+    if touched is None:
+        swap_dir(docs_dir, tmp)
+        return
+    for db in touched:
+        swap_dir(os.path.join(docs_dir, f"dbucket={db}"), os.path.join(tmp, f"dbucket={db}"))
+    shutil.rmtree(tmp, ignore_errors=True)
+
+
+def refresh_side_tables(
+    spark: SparkSession, root: str, meta: dict, touched: set | list | None
+) -> None:
+    """A fold's tstats + meta refresh from committed state: tstats via
+    :func:`write_tstats` over ``touched`` (a bucket set; ∅ = nothing
+    swapped, no rewrite; None = unknown, full recompute), N/avgdl via
+    :func:`index.corpus_stats` over the docs table's doclen column (a
+    stored running sum could double-advance under a replay), meta's
+    ``encoded_avgdl`` kept. Idempotent, so the fold runs it on EVERY
+    exit path before marking commits folded and a replay after any
+    crash re-derives consistent side tables."""
+    if touched is None or touched:
+        write_tstats(
+            spark, root, int(meta["n_buckets"]),
+            None if touched is None else sorted(touched),
+        )
+    enc_avgdl = float(meta.get("encoded_avgdl", meta["avgdl"]))
+    N, avgdl = corpus_stats(spark.read.parquet(os.path.join(root, "docs")).select("doclen"))
+    meta.update(
+        N=N, avgdl=avgdl, encoded_avgdl=enc_avgdl,
+        compactions=int(meta.get("compactions", 0)) + 1,
+    )
+    atomic_write_json(os.path.join(root, "meta.json"), meta)
+
+
 def recover_index(root: str) -> None:
     """Repair an index left mid-publish by a crashed build or fold:
     root-level swaps (docs, tstats) first, then the partition swaps
@@ -340,6 +468,7 @@ class IndexSink:
                                        so an incremental fold rewrites only the
                                        buckets holding a new/retired doc
           _manifest/bucket_NN.json     one commit record per bucket
+          _layout.json                 n_buckets/n_shards/url_cols the buckets are cut by
           meta.json                    corpus stats + config + lineage summary
     """
 
@@ -382,9 +511,13 @@ class IndexSink:
         never be split apart). Costs one extra id-only groupBy detection
         pass, so it is opt-in for corpora large enough to expect
         collisions (~10^10+ docs); n_remapped lands in meta.json lineage.
+
+        Raises ValueError, before any Spark job, when buckets are already
+        committed under another n_buckets, n_shards or url_cols.
         """
         if on_id_collision not in ("fail", "resolve"):
             raise ValueError(f"on_id_collision: {on_id_collision!r}")
+        self._pin_layout(n_shards, url_cols)
         spark = corpus.sparkSession
         tuned = _tune_scan_granularity(spark, corpus)
         if tuned is None:
@@ -397,6 +530,24 @@ class IndexSink:
             return self._build_inner(
                 corpus, buckets_per_wave, n_shards, url_cols, on_id_collision,
             )
+
+    def _pin_layout(self, n_shards: int, url_cols: tuple[str, ...] | None) -> None:
+        """Record (n_buckets, n_shards, url_cols) before the first bucket
+        commits and refuse a resume under another; an index without the
+        record (built before it existed) resumes unchecked."""
+        path = os.path.join(self.root, "_layout.json")
+        want = {"n_buckets": self.n_buckets, "n_shards": n_shards,
+                "url_cols": list(url_cols) if url_cols else []}
+        if not committed_buckets(self.root):
+            atomic_write_json(path, want)
+        elif os.path.exists(path):
+            have = _load_json(path)
+            for key, val in want.items():
+                if have.get(key) != val:
+                    raise ValueError(
+                        f"index {self.root} has buckets committed with "
+                        f"{key}={have.get(key)!r}; this build asks for {key}={val!r}"
+                    )
 
     def _build_inner(
         self,
@@ -430,13 +581,14 @@ class IndexSink:
         #           doclen = Σtf per doc over the raw channel rides the
         #           cached agg, left-joined onto a content-free metadata
         #           scan (column pruning: the heavy content column is
-        #           never read) → docs side table; N/avgdl read back.
+        #           never read) → docs side table (write_docs, the
+        #           fold's own publish); N/avgdl read back.
         #           Round 1 spent a SECOND full tokenize pass here just
         #           to size the token array — measured 65+ CPU-s at
         #           sf0.1×400k and the worst-scaling phase of the build.
         #   waves   stem channel derived at the POSTING level (vocab =
         #           distinct over the cached postings — NOT another
-        #           tokenize), enrich, encode, commit.
+        #           tokenize), enrich (encoder_input), encode, commit.
         #   tstats  derived AFTER the build from the written blocks
         #           (df(term) = Σ n over block rows) — a free byproduct
         #           of the commit read-back
@@ -446,11 +598,10 @@ class IndexSink:
         from pyspark import StorageLevel
 
         from .index import doc_postings
-        from .tokenize import stem_vocab, tokenize, tokenize_url
+        from .tokenize import tokenize, tokenize_url
 
         t0 = time.perf_counter()
         meta_cols = [c for c in corpus.columns if c != "content"]
-        docs_path = os.path.join(self.root, "docs")
         raw_tokens = (
             tokenize_url(corpus_ids, url_cols) if url_cols else tokenize(corpus_ids)
         )
@@ -467,117 +618,82 @@ class IndexSink:
         # larger token stream — caching tokens was measured at round 1
         # to cap scaling efficiency at ~0.4; at cluster scale this
         # spills to per-node local disk, the standard staging pattern.
-        postings_raw = postings_raw.persist(StorageLevel.MEMORY_AND_DISK)
-        # docs side table: metadata scan (content pruned away) left-joined
-        # with doclen from the cache; a doc whose tokens are ALL filtered
-        # has no postings row and keeps doclen 0 (oracle.py:44 semantics).
-        # Broadcast the doclen side while the doc count allows (12 B/doc —
-        # 5M docs ≈ 60 MB): a broadcast-hash join keeps the docs write a
-        # single narrow stage instead of a two-exchange sort-merge join.
-        # The guard count is metadata-speed: zero columns materialize, the
-        # parquet reader returns row-group counts.
-        doclen_df = postings_raw.groupBy("doc_id").agg(
-            F.sum("tf").cast("int").alias("doclen")
-        )
-        n_docs_est = corpus.count()
-        doclen_side = F.broadcast(doclen_df) if n_docs_est <= 5_000_000 else doclen_df
-        # dbucket-partitioned layout (pmod(doc_id, n_doc_buckets)): an
-        # incremental fold (streaming.compact_into_index) rewrites only
-        # the buckets holding a new/retired doc — delta-proportional docs
-        # maintenance instead of a full corpus-metadata rewrite per fold.
-        # The repartition is one exchange of the CONTENT-FREE metadata
-        # rows (~tens of bytes/doc — negligible next to the corpus scan)
-        # and caps the layout at ≤1 file per (task, dbucket).
-        (
-            corpus_ids.select("doc_id", *meta_cols)
-            .join(doclen_side, "doc_id", "left")
-            .withColumn("doclen", F.coalesce(F.col("doclen"), F.lit(0)).cast("int"))
-            .withColumn(
-                "dbucket",
-                F.pmod(F.col("doc_id"), F.lit(self.n_doc_buckets)).cast("int"),
+        with persisted(postings_raw, StorageLevel.MEMORY_AND_DISK) as postings_raw:
+            # docs side table: metadata scan (content pruned away)
+            # left-joined with doclen from the cache; a doc whose tokens
+            # are ALL filtered has no postings row and keeps doclen 0
+            # (oracle.py:44 semantics). Broadcast the doclen side while
+            # the doc count allows (12 B/doc — 5M docs ≈ 60 MB): a
+            # broadcast-hash join keeps the docs write a single narrow
+            # stage instead of a two-exchange sort-merge join. The guard
+            # count is metadata-speed: zero columns materialize, the
+            # parquet reader returns row-group counts.
+            doclen_df = postings_raw.groupBy("doc_id").agg(
+                F.sum("tf").cast("int").alias("doclen")
             )
-            .repartition(self.n_doc_buckets, "dbucket")
-            .write.mode("overwrite")
-            .partitionBy("dbucket")
-            .parquet(docs_path)
-        )
-        docs_tbl = spark.read.parquet(docs_path)
-        dstats = docs_tbl.select("doc_id", "doclen")
-        # ONE aggregate job yields the corpus scalars AND the doc_id
-        # injectivity gate (rationale: corpus.check_doc_id_injective —
-        # 64-bit xxhash birthday collisions are EXPECTED at the stated
-        # 10^12-file target, ~27k pairs). Checked over the just-written
-        # content-free docs side table, so the gate costs nothing extra:
-        # count_distinct rides the same column-pruned scan that computes
-        # N/avgdl. n_docs_est is the guard count already taken above; a
-        # shortfall in distinct doc_ids means either a hash collision or
-        # duplicate (repo, path, commit) input rows — both must fail the
-        # build loudly rather than silently merge two docs' postings.
-        row = docs_tbl.agg(
-            F.count("*").alias("n"),
-            F.avg("doclen").alias("avgdl"),
-            F.count_distinct("doc_id").alias("n_ids"),
-        ).collect()[0]
-        N, avgdl = int(row["n"]), float(row["avgdl"] or 0.0)
-        if int(row["n_ids"]) != n_docs_est:
-            from .corpus import IdCollisionError
+            n_docs_est = corpus.count()
+            doclen_side = F.broadcast(doclen_df) if n_docs_est <= 5_000_000 else doclen_df
+            write_docs(
+                spark, self.root, self.n_doc_buckets,
+                corpus_ids.select("doc_id", *meta_cols)
+                .join(doclen_side, "doc_id", "left")
+                .withColumn("doclen", F.coalesce(F.col("doclen"), F.lit(0)).cast("int")),
+            )
+            docs_tbl = spark.read.parquet(os.path.join(self.root, "docs"))
+            # ONE aggregate job yields the corpus scalars AND the doc_id
+            # injectivity gate (rationale: corpus.check_doc_id_injective
+            # — 64-bit xxhash birthday collisions are EXPECTED at the
+            # stated 10^12-file target, ~27k pairs). Checked over the
+            # just-written content-free docs side table, so the gate
+            # costs nothing extra: count_distinct rides the same
+            # column-pruned scan that computes N/avgdl. n_docs_est is
+            # the guard count already taken above; a shortfall in
+            # distinct doc_ids means either a hash collision or
+            # duplicate (repo, path, commit) input rows — both must fail
+            # the build loudly rather than silently merge two docs'
+            # postings.
+            row = docs_tbl.agg(
+                F.count("*").alias("n"),
+                F.avg("doclen").alias("avgdl"),
+                F.count_distinct("doc_id").alias("n_ids"),
+            ).collect()[0]
+            N, avgdl = int(row["n"]), float(row["avgdl"] or 0.0)
+            if int(row["n_ids"]) != n_docs_est:
+                from .corpus import IdCollisionError
 
-            raise IdCollisionError(
-                f"doc_id not injective: {n_docs_est} corpus rows → "
-                f"{int(row['n_ids'])} distinct doc_ids; widen the id per "
-                "corpus.with_doc_id or dedup the input before indexing"
-            )
-        phase_t["doc_stats"] = time.perf_counter() - t0
+                raise IdCollisionError(
+                    f"doc_id not injective: {n_docs_est} corpus rows → "
+                    f"{int(row['n_ids'])} distinct doc_ids; widen the id per "
+                    "corpus.with_doc_id or dedup the input before indexing"
+                )
+            phase_t["doc_stats"] = time.perf_counter() - t0
 
-        if pending:
-            # stem channel at the POSTING level: vocabulary = distinct
-            # terms of the cached postings, stems over the vocab only
-            # (Arrow UDF), renamed rows join back broadcast. A raw term
-            # and a different raw term sharing its stem produce duplicate
-            # (term, doc) rows — merged inside the encoder after the
-            # (term, shard) sort (index._encode_batch), so no extra
-            # aggregation exchange is needed.
-            vocab = stem_vocab(postings_raw).where(F.col("stem") != F.col("term"))
-            stemmed = postings_raw.join(F.broadcast(vocab), "term").select(
-                "doc_id", F.col("stem").alias("term"), "tf", "positions", "uf"
-            )
-            postings = postings_raw.unionByName(stemmed)
-            # doclen side of the enrichment join: broadcast while the doc
-            # count allows (a doc_id row is ~16 bytes — 5M docs ≈ 80 MB),
-            # else fall back to a shuffle join. At 10^12 files the block
-            # layout itself removes this join from the QUERY path (doclen
-            # is baked into dl_bytes); this join only runs at build time.
-            dstats_c = dstats.select(
-                "doc_id", F.col("doclen").cast("smallint").alias("doclen")
-            )
-            dstats_side = F.broadcast(dstats_c) if N <= 5_000_000 else dstats_c
-            enriched = with_bucket(
-                with_shard(postings.join(dstats_side, "doc_id"), n_shards),
-                self.n_buckets,
-            )
-            waves = [
-                pending[i : i + buckets_per_wave]
-                for i in range(0, len(pending), buckets_per_wave)
-            ]
-            # multi-wave: persist the joined frame so each wave filters a
-            # cache instead of re-joining; single wave: the cache write
-            # would cost more than it saves (postings are already cached)
-            if len(waves) > 1:
-                enriched = enriched.persist()
-                enriched.count()
-            try:
-                t0 = time.perf_counter()
-                for wi, wave in enumerate(waves):
-                    publish_buckets(
-                        spark, self.root, enriched.where(F.col("bucket").isin(wave)),
-                        wave, self.n_buckets, avgdl, wi, phase_t,
-                    )
-                phase_t["encode_commit"] = time.perf_counter() - t0
-            finally:
-                enriched.unpersist()
-                postings_raw.unpersist()
-        else:
-            postings_raw.unpersist()
+            if pending:
+                enriched = encoder_input(
+                    postings_raw, docs_tbl, n_shards, self.n_buckets,
+                    broadcast_doclen=N <= 5_000_000,
+                )
+                waves = [
+                    pending[i : i + buckets_per_wave]
+                    for i in range(0, len(pending), buckets_per_wave)
+                ]
+                # multi-wave: persist the joined frame so each wave filters
+                # a cache instead of re-joining; single wave: the cache
+                # write would cost more than it saves (postings are
+                # already cached)
+                if len(waves) > 1:
+                    enriched = enriched.persist()
+                    enriched.count()
+                try:
+                    t0 = time.perf_counter()
+                    for wi, wave in enumerate(waves):
+                        publish_buckets(
+                            spark, self.root, enriched.where(F.col("bucket").isin(wave)),
+                            wave, self.n_buckets, avgdl, wi, phase_t,
+                        )
+                    phase_t["encode_commit"] = time.perf_counter() - t0
+                finally:
+                    enriched.unpersist()
 
         # side tables + meta are cheap; (re)written last, unconditionally
         t0 = time.perf_counter()
@@ -623,8 +739,7 @@ class IndexSink:
         return spark.read.option("basePath", path).parquet(path)
 
     def _meta(self) -> dict:
-        with open(os.path.join(self.root, "meta.json")) as f:
-            return json.load(f)
+        return _load_json(os.path.join(self.root, "meta.json"))
 
     def read(self, spark: SparkSession):
         meta = self._meta()

@@ -55,7 +55,16 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..corpus import CORPUS_SCHEMA, with_doc_id
 from ..fsutil import atomic_write_json, recover_dirs, swap_dir
-from ..index import doc_postings
+from ..index import doc_postings, with_shard
+from ..sink import (
+    encoder_input,
+    persisted,
+    publish_buckets,
+    recover_index,
+    refresh_side_tables,
+    with_bucket,
+    write_docs,
+)
 from ..tokenize import tokenize, tokenize_url
 
 EVENTS_SCHEMA = (
@@ -536,24 +545,27 @@ def compact_into_index(
 
     Scale shape (the 100 TB question): cost ∝ |touched buckets| ×
     bucket size + |stream batch|, never corpus size — including the
-    side tables: the docs metadata table is dbucket-partitioned and
-    only the dbuckets holding a new/retired doc are rewritten, and
-    tstats df is re-derived only for touched term buckets (bounded
-    under crash replays by the ``_fold_txn.json`` journal; the one
-    non-delta term left is meta's N/avgdl scalar scan over the docs
-    table's single doclen column — see _refresh_index_side_tables).
-    New-term buckets
-    come straight from the new postings; retired-doc buckets need one
-    doc-stream-only discovery pass (:func:`decode_block_doc_ids`) that
-    projects ONLY term + doc_bytes — the tf/dl/uf/position streams,
-    which dominate block bytes, are column-pruned at the Parquet scan —
-    filtered to the retired ids' shards (shard is a stored column, not
-    a partition key, so the filter prunes decode work row-by-row;
-    row-group pruning on it is best-effort because files are clustered
-    by (term, shard)); the ids themselves stay a distributed semi-join
-    side, never a driver collect. The re-encode and publish is the
-    build's own routine (:func:`sink.publish_buckets`): same exchange
-    geometry, encoder, lineage read-back, swap and manifest commit.
+    side tables, which the fold publishes through the build's own
+    writers: the docs table rewrites only the doc buckets holding a
+    new/retired doc (:func:`sink.write_docs`), and tstats df is
+    re-derived only for touched term buckets (:func:`sink.
+    refresh_side_tables`, bounded under crash replays by the
+    ``_fold_txn.json`` journal); meta's N/avgdl is one scalar scan over
+    the docs table's doclen column. New-term buckets come straight from
+    the new postings; retired-doc buckets need one doc-stream-only
+    discovery pass (:func:`decode_block_doc_ids`) that projects ONLY
+    term + doc_bytes — the tf/dl/uf/position streams, which dominate
+    block bytes, are column-pruned at the Parquet scan — filtered to the
+    retired ids' shards (shard is a stored column, not a partition key,
+    so the filter prunes decode work row-by-row; row-group pruning on it
+    is best-effort because files are clustered by (term, shard)); the
+    ids themselves stay a distributed semi-join side, never a driver
+    collect. The new postings get the build's stem channel and doclen
+    join (:func:`sink.encoder_input`), and the re-encode and publish is
+    the build's own routine (:func:`sink.publish_buckets`). The fold
+    reads the index only through ``sink`` and knows nothing of its
+    on-disk layout: its own logic is the winners, retired-doc discovery,
+    the touched-bucket set and the journal.
 
     Stats handling: touched buckets are re-encoded with the index's
     ORIGINAL ``encoded_avgdl`` so untouched buckets stay byte-stable,
@@ -565,24 +577,16 @@ def compact_into_index(
 
     Idempotent/crash-safe on one POSIX filesystem (same deployment
     requirement as the store protocol, see incremental_index_stream):
-    bucket, docs and tstats swaps are ``fsutil.swap_dir`` rename pairs,
-    repaired by :func:`sink.recover_index` at the start of the next fold
-    or build; folded markers are written LAST, so a
-    crash replays the fold — re-delivered docs are dropped against the
-    updated docs table and already-retired ids retire to a no-op.
+    every table publish is an ``fsutil.swap_dir`` rename pair, repaired
+    by :func:`sink.recover_index` at the start of the next fold or
+    build; folded markers are written LAST, so a crash replays the fold
+    — re-delivered docs are dropped against the updated docs table and
+    already-retired ids retire to a no-op.
 
     Returns {status, touched_buckets, n_new_docs, n_retired, folded}.
     """
-    import json
-    import os
-    import shutil
-
-    from ..index import with_shard
-    from ..sink import publish_buckets, recover_index, with_bucket
-    from ..tokenize import stem_vocab
-
     root = sink.root
-    meta = json.load(open(os.path.join(root, "meta.json")))
+    meta = sink._meta()
     # channel compatibility: the store's tokenization (plain vs
     # URL-injected, and WHICH url columns) must match the index's —
     # folding across channels would mix term spaces silently. The store
@@ -615,8 +619,10 @@ def compact_into_index(
     n_shards = int(meta["n_shards"])
     n_buckets = int(meta["n_buckets"])
     enc_avgdl = float(meta.get("encoded_avgdl", meta["avgdl"]))
+    # an index built before the docs table had doc buckets takes this
+    # sink's count; its docs are republished whole in that layout
+    meta.setdefault("n_doc_buckets", sink.n_doc_buckets)
     docs_tbl = sink.docs(spark)
-    meta_cols = [c for c in docs_tbl.columns if c not in ("doc_id", "doclen")]
 
     # live winners over the FULL docmap (folded history included: a doc
     # folded earlier must still beat an older pending re-delivery), with
@@ -628,190 +634,120 @@ def compact_into_index(
     new_docs = winners.where(F.col("commit_id").isin(pending)).join(
         docs_tbl.select("doc_id"), "doc_id", "left_anti"
     )
-    # retired: the index's version of a (repo, path) the stream superseded
-    retired = (
+    new_ids = F.broadcast(new_docs.select("doc_id"))
+    new_dl = read_live_dstats(spark, store_dir).join(
+        new_ids, "doc_id", "left_semi"
+    ).select("doc_id", "doclen")
+    new_p_q = encoder_input(
+        read_live_postings(spark, store_dir).join(new_ids, "doc_id", "left_semi"),
+        new_dl, n_shards, n_buckets,
+    )
+    # retired: the index's version of a (repo, path) the stream
+    # superseded. It never reaches the driver as rows: only its
+    # ≤ n_shards distinct shard values collect (bucket-pruning
+    # literals), the ids themselves stay a distributed semi-join side.
+    retired_q = (
         docs_tbl.alias("d")
         .join(winners.alias("w"), ["repo", "path"])
         .where(F.col("d.doc_id") != F.col("w.doc_id"))
         .select(F.col("d.doc_id").alias("doc_id"))
     )
+    # both are read more than once (new postings: touched set and
+    # re-encode; retired: shard probe, hit-term semi-join, docs
+    # anti-join) — persisted
+    with persisted(new_p_q) as new_p, persisted(retired_q) as retired:
+        # touched buckets: new terms' buckets + buckets holding retired docs
+        touched = {int(r["bucket"]) for r in new_p.select("bucket").distinct().collect()}
+        n_retired = retired.count()
+        blocks = sink._blocks(spark)
+        if n_retired:
+            shards = sorted(
+                int(r["shard"])
+                for r in retired.select(
+                    F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("int").alias("shard")
+                ).distinct().collect()
+            )
+            hit_terms = (
+                decode_block_doc_ids(blocks.where(F.col("shard").isin(shards)))
+                .join(retired, "doc_id", "left_semi")
+                .select("term").distinct()
+            )
+            touched |= {
+                int(r["bucket"])
+                for r in with_bucket(hit_terms, n_buckets)
+                .select("bucket").distinct().collect()
+            }
+        touched_l = sorted(touched)
+        n_new = new_docs.count()
+        if not touched_l and n_new == 0:
+            # Nothing to re-encode — either a genuinely empty fold set, or
+            # a REPLAY of a fold that crashed after the bucket/docs swaps
+            # but before the side-table rewrite (then the anti-join above
+            # sees the already-updated docs table and the fold set reads
+            # empty). The replay case leaves tstats/meta stale unless
+            # refreshed here, and the two cases are not cheaply
+            # distinguishable — so this branch ALWAYS refreshes the side
+            # tables before marking folded (idempotent: recomputing from
+            # committed blocks + docs is a no-op when they were already
+            # consistent). The crashed attempt's journal bounds the
+            # refresh to ITS touched buckets; no journal (pre-journal
+            # crash, or a genuinely empty fold set) → full.
+            refresh_side_tables(
+                spark, root, meta,
+                touched=prev_touched if isinstance(prev_touched, set) else None,
+            )
+            _mark_folded(store_dir, pending)
+            _clear_fold_txn(root)
+            return {"status": "folded_empty", "touched_buckets": [],
+                    "n_new_docs": 0, "n_retired": 0, "folded": pending}
 
-    new_p = read_live_postings(spark, store_dir).join(
-        F.broadcast(new_docs.select("doc_id")), "doc_id", "left_semi"
-    )
-    # posting-level stem channel, exactly the batch build's
-    # (sink._build_inner): vocab over the new postings only
-    vocab = stem_vocab(new_p).where(F.col("stem") != F.col("term"))
-    # stem rows COPY the raw row's uf, exactly the sink's enrichment
-    # (a stemmed url component keeps the bonus flag, Search.java:149-163)
-    stemmed = new_p.join(F.broadcast(vocab), "term").select(
-        "doc_id", F.col("stem").alias("term"), "tf", "positions", "uf"
-    )
-    new_full = new_p.select("doc_id", "term", "tf", "positions", "uf").unionByName(
-        stemmed
-    )
-    new_dl = read_live_dstats(spark, store_dir).join(
-        F.broadcast(new_docs.select("doc_id")), "doc_id", "left_semi"
-    ).select("doc_id", "doclen")
+        # fold journal, written BEFORE the first swap: a crash-replay must
+        # re-publish every bucket ANY attempt may have swapped — a bucket
+        # only a retired doc touched holds no fold-set posting once
+        # swapped, so this run alone would not see it, yet its manifest
+        # may predate the swap — and refresh the side tables over the
+        # same set. An unreadable journal means that set is unknown →
+        # touched_all None → full side-table recompute (and the corrupt
+        # journal is left in place so a further crash keeps forcing full).
+        if prev_touched == "unknown":
+            touched_all = None
+        else:
+            touched_l = touched_all = sorted(touched | (prev_touched or set()))
+            _write_fold_txn(root, touched_all, pending)
 
-    # touched buckets: new terms' buckets + buckets holding retired docs
-    touched = {
-        int(r["bucket"])
-        for r in with_bucket(new_full.select("term").distinct(), n_buckets)
-        .select("bucket").distinct().collect()
-    }
-    # retired is used three times (shard probe, hit-term semi-join, docs
-    # anti-join) — persist; it never reaches the driver as rows: only
-    # its ≤ n_shards distinct shard values collect (bucket-pruning
-    # literals), the ids themselves stay a distributed semi-join side.
-    retired = retired.persist()
-    n_retired = retired.count()
-    blocks_root = os.path.join(root, "blocks")
-    blocks = spark.read.option("basePath", blocks_root).parquet(blocks_root)
-    if n_retired:
-        shards = sorted(
-            int(r["shard"])
-            for r in retired.select(
-                F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("int").alias("shard")
-            ).distinct().collect()
+        # rebuild touched buckets: decoded survivors ∪ enriched new
+        # postings (touched_l can be empty with n_new > 0 when every
+        # folded doc is token-less — then only the docs table and N/avgdl
+        # change)
+        if touched_l:
+            # Drop the WHOLE fold set (retired ∪ new) from the decoded
+            # side, not just retired: new docs always re-enter from the
+            # store, and after a crash BETWEEN bucket swaps a replay
+            # decodes buckets that already hold the new postings —
+            # keeping them would merge with the re-added store rows in
+            # the encoder and double tf.
+            drop_ids = retired.unionByName(new_docs.select("doc_id"))
+            old_p = decode_block_postings(
+                blocks.where(F.col("bucket").isin(touched_l))
+            ).join(drop_ids, "doc_id", "left_anti")
+            publish_buckets(
+                spark, root,
+                with_bucket(with_shard(old_p, n_shards), n_buckets).unionByName(new_p),
+                touched_l, n_buckets, enc_avgdl, "compact", {},
+            )
+
+        # docs side table: retire superseded rows, add the folded docs
+        # (doclen 0 for token-less docs)
+        write_docs(
+            spark, root, int(meta["n_doc_buckets"]),
+            new_docs.join(new_dl, "doc_id", "left").withColumn(
+                "doclen", F.coalesce(F.col("doclen"), F.lit(0)).cast("int")
+            ),
+            drop=retired,
         )
-        cand = blocks.where(F.col("shard").isin(shards))
-        hit_terms = (
-            decode_block_doc_ids(cand)
-            .join(retired, "doc_id", "left_semi")
-            .select("term").distinct()
-        )
-        touched |= {
-            int(r["bucket"])
-            for r in with_bucket(hit_terms, n_buckets)
-            .select("bucket").distinct().collect()
-        }
-    touched_l = sorted(touched)
-    n_new = new_docs.count()
-    if not touched_l and n_new == 0:
-        # Nothing to re-encode — either a genuinely empty fold set, or a
-        # REPLAY of a fold that crashed after the bucket/docs swaps but
-        # before the side-table rewrite (then the anti-join above sees
-        # the already-updated docs table and the fold set reads empty).
-        # The replay case leaves tstats/meta stale unless refreshed here,
-        # and the two cases are not cheaply distinguishable — so this
-        # branch ALWAYS refreshes the side tables before marking folded
-        # (idempotent: recomputing from committed blocks + docs is a
-        # no-op when they were already consistent). The crashed attempt's
-        # journal bounds the refresh to ITS touched buckets; no journal
-        # (pre-journal crash, or a genuinely empty fold set) → full.
-        _refresh_index_side_tables(
-            spark, root, meta, enc_avgdl,
-            touched=prev_touched if isinstance(prev_touched, set) else None,
-        )
+        refresh_side_tables(spark, root, meta, touched=touched_all)
         _mark_folded(store_dir, pending)
         _clear_fold_txn(root)
-        retired.unpersist()
-        return {"status": "folded_empty", "touched_buckets": [],
-                "n_new_docs": 0, "n_retired": 0, "folded": pending}
-
-    # fold journal, written BEFORE the first swap: a crash-replay must
-    # re-publish every bucket ANY attempt may have swapped — a bucket
-    # only a retired doc touched holds no fold-set posting once swapped,
-    # so this run alone would not see it, yet its manifest may predate
-    # the swap — and refresh the side tables over the same set. An
-    # unreadable journal means that set is unknown → touched_all None →
-    # full side-table recompute (and the corrupt journal is left in
-    # place so a further crash keeps forcing full).
-    if prev_touched == "unknown":
-        touched_all = None
-    else:
-        touched_l = touched_all = sorted(touched | (prev_touched or set()))
-        _write_fold_txn(root, touched_all, pending)
-
-    # rebuild touched buckets: decoded survivors ∪ enriched new postings
-    # (touched_l can be empty with n_new > 0 when every folded doc is
-    # token-less — then only the docs table and N/avgdl change)
-    if touched_l:
-        # Drop the WHOLE fold set (retired ∪ new) from the decoded side,
-        # not just retired: new docs always re-enter from the store, and
-        # after a crash BETWEEN bucket swaps a replay decodes buckets
-        # that already hold the new postings — keeping them would merge
-        # with the re-added store rows in the encoder and double tf.
-        drop_ids = retired.unionByName(new_docs.select("doc_id"))
-        old_p = decode_block_postings(
-            blocks.where(F.col("bucket").isin(touched_l))
-        ).join(drop_ids, "doc_id", "left_anti")
-        new_enriched = new_full.join(F.broadcast(new_dl), "doc_id").select(
-            "term", "doc_id", F.col("tf").cast("int").alias("tf"),
-            F.col("doclen").cast("int").alias("doclen"), "uf", "positions",
-        )
-        merged = with_bucket(
-            with_shard(old_p.unionByName(new_enriched), n_shards), n_buckets
-        )
-        publish_buckets(
-            spark, root, merged, touched_l, n_buckets, enc_avgdl, "compact", {}
-        )
-
-    # docs side table: retire superseded rows, add the folded docs (doclen
-    # 0 for token-less docs)
-    folded_docs = new_docs.join(new_dl, "doc_id", "left").withColumn(
-        "doclen", F.coalesce(F.col("doclen"), F.lit(0)).cast("int")
-    )
-    # a store whose docmap commits ALL predate a passthrough metadata
-    # column (pre-upgrade schema) has no such column even after the
-    # mergeSchema read — fold it as nulls of the docs table's type
-    for c in meta_cols:
-        if c not in folded_docs.columns:
-            folded_docs = folded_docs.withColumn(
-                c, F.lit(None).cast(docs_tbl.schema[c].dataType)
-            )
-    n_db = meta.get("n_doc_buckets")
-    docs_root = os.path.join(root, "docs")
-    if n_db:
-        # dbucket-partitioned docs (sink layout): rewrite ONLY the
-        # buckets holding a new or retired doc — the docs update is
-        # delta-proportional like the blocks side, never a full rewrite
-        # of the corpus-sized metadata table. Only the ≤ n_doc_buckets
-        # distinct bucket values collect; ids stay distributed.
-        n_db = int(n_db)
-        dbx = F.pmod(F.col("doc_id"), F.lit(n_db)).cast("int")
-        touched_db = sorted(
-            int(r["db"])
-            for r in retired.select(dbx.alias("db"))
-            .unionByName(new_docs.select(dbx.alias("db")))
-            .distinct().collect()
-        )
-        if touched_db:
-            docs_raw = spark.read.parquet(docs_root)
-            sub_new = (
-                docs_raw.where(F.col("dbucket").isin(touched_db))
-                .drop("dbucket")
-                .join(retired, "doc_id", "left_anti")
-                .unionByName(folded_docs.select("doc_id", *meta_cols, "doclen"))
-                .withColumn("dbucket", dbx)
-            )
-            docs_tmp = os.path.join(root, "_compact_docs_tmp")
-            shutil.rmtree(docs_tmp, ignore_errors=True)
-            sub_new.repartition(len(touched_db), "dbucket").write.mode(
-                "overwrite"
-            ).partitionBy("dbucket").parquet(docs_tmp)
-            for db in touched_db:
-                swap_dir(
-                    os.path.join(docs_root, f"dbucket={db}"),
-                    os.path.join(docs_tmp, f"dbucket={db}"),
-                )
-            shutil.rmtree(docs_tmp, ignore_errors=True)
-    else:
-        # pre-dbucket index: full rewrite via tmp + swap (can't overwrite
-        # a table being read)
-        docs_new = docs_tbl.join(retired, "doc_id", "left_anti").unionByName(
-            folded_docs.select("doc_id", *meta_cols, "doclen")
-        )
-        docs_tmp = os.path.join(root, "docs.tmp")
-        shutil.rmtree(docs_tmp, ignore_errors=True)
-        docs_new.write.parquet(docs_tmp)
-        swap_dir(docs_root, docs_tmp)
-
-    _refresh_index_side_tables(spark, root, meta, enc_avgdl, touched=touched_all)
-    _mark_folded(store_dir, pending)
-    _clear_fold_txn(root)
-    retired.unpersist()
     return {
         "status": "compacted",
         "touched_buckets": touched_l,
@@ -819,62 +755,6 @@ def compact_into_index(
         "n_retired": int(n_retired),
         "folded": pending,
     }
-
-
-def _refresh_index_side_tables(
-    spark: SparkSession,
-    root: str,
-    meta: dict,
-    enc_avgdl: float,
-    touched: set | list | None = None,
-) -> None:
-    """Rewrite the index's tstats + meta from current committed state —
-    the build's own recipe (tstats from committed blocks, N/avgdl from
-    the docs table). Idempotent by construction, so
-    :func:`compact_into_index` runs it on EVERY exit path before marking
-    commits folded: a fold replayed after a crash anywhere between the
-    bucket/docs swaps and the marker write re-derives consistent side
-    tables instead of trusting whatever the crash left behind.
-
-    ``touched`` bounds the tstats recompute (the 100 TB term: a fold must
-    never pay an index-sized side-table rebuild):
-
-    * a bucket set → delta-proportional refresh. A term lives entirely in
-      its crc32 bucket, so df can only have changed for terms hashing
-      into a swapped bucket: re-derive those from a partition-pruned scan
-      of ``blocks/bucket∈touched``, keep every other term's row from the
-      current tstats, and swap the union in (:func:`sink.write_tstats`,
-      the build's own tstats writer).
-    * the empty set → no bucket was swapped; tstats is already exact and
-      is not rewritten (only meta's N/avgdl advance).
-    * ``None`` → the swapped-bucket set is unknown (corrupt fold journal,
-      or a pre-journal engine's crash) → full recompute from all blocks.
-
-    meta's N/avgdl always recompute from the docs table: one count +
-    one avg over the single ``doclen`` int column of the metadata-sized
-    table (Parquet-pruned — none of the wide metadata columns are read),
-    the price of staying idempotent under crash replays where a stored
-    running sum could be double-advanced."""
-    import os
-
-    from ..sink import write_tstats
-
-    if touched is None or touched:
-        write_tstats(
-            spark, root, int(meta["n_buckets"]),
-            None if touched is None else sorted(touched),
-        )
-    # else: touched == ∅ — no bucket swapped, tstats already exact
-    row = spark.read.parquet(os.path.join(root, "docs")).agg(
-        F.count("*").alias("n"), F.avg("doclen").alias("avgdl")
-    ).collect()[0]
-    meta.update(
-        N=int(row["n"]),
-        avgdl=float(row["avgdl"] or 0.0),
-        encoded_avgdl=enc_avgdl,
-        compactions=int(meta.get("compactions", 0)) + 1,
-    )
-    atomic_write_json(os.path.join(root, "meta.json"), meta)
 
 
 def compact_store(spark: SparkSession, store_dir: str) -> dict:
@@ -900,63 +780,62 @@ def compact_store(spark: SparkSession, store_dir: str) -> dict:
     # set first would see an EMPTY ledger and the rewrite below would
     # erase the whole store
     recover_dirs(store_dir)
-    live = live_doc_ids(spark, store_dir).cache()
-    folded = sorted(folded_commits(store_dir))
-    stats = {}
-    for name in ("postings", "dstats", "docmap"):
-        src = f"{store_dir}/{name}"
-        if not os.path.isdir(src):
-            continue
-        df = _read_committed(spark, store_dir, name)
-        before = df.count()
-        # postings/dstats retire superseded versions AND drop rows of
-        # commits already folded into the block index (every read path
-        # excludes them via _drop_folded and they are served by the
-        # index — on a long-lived store the folded history would
-        # otherwise dominate the bytes and be rewritten forever). The
-        # docmap LEDGER keeps every committed version row, folded
-        # included — it is what detects a re-delivered SUPERSEDED
-        # version (process_batch's anti-join), and dropping its history
-        # would let a replayed old commit re-ingest with a fresh higher
-        # seq and mask the newer one. It is metadata-sized (one short
-        # row per ingested version); compaction still rewrites it to GC
-        # uncommitted partials.
-        if name == "docmap":
-            kept = df
-        else:
-            kept = df.join(live, "doc_id", "left_semi")
-            if folded:
-                kept = kept.where(~F.col("commit_id").isin(folded))
-        tmp = f"{src}.tmp"
-        n_kept = kept.count()
-        if n_kept == 0:
-            # dynamic partitionBy on an EMPTY frame writes a dir with no
-            # data files — unreadable by schema inference after the swap
-            # discarded the original. Write one schema-bearing empty
-            # part UNDER A PARTITION DIRECTORY (never-committed token
-            # "gc0", so reads filter it out) to keep the table's
-            # partitioned layout: a flat part file here would conflict
-            # with the commit_id=... directories the resumed stream
-            # writes next to it and brick partition discovery.
-            kept.drop("commit_id").repartition(1).write.mode("overwrite").parquet(
-                f"{tmp}/commit_id=gc0"
-            )
-        else:
-            kept.write.mode("overwrite").partitionBy("commit_id").parquet(tmp)
-        # prove the rewrite is readable BEFORE the swap discards src
-        # (a raise, not an assert: python -O must not silence the check)
-        n_tmp = spark.read.parquet(tmp).count()
-        if n_tmp != n_kept:
-            raise RuntimeError(
-                f"compact_store: rewrite of {name} is not readable back "
-                f"({n_tmp} rows != {n_kept} kept) — aborting before swap"
-            )
-        swap_dir(src, tmp)
-        stats[name] = {
-            "rows_before": before,
-            "rows_after": _read_committed(spark, store_dir, name).count(),
-        }
-    live.unpersist()
+    with persisted(live_doc_ids(spark, store_dir)) as live:
+        folded = sorted(folded_commits(store_dir))
+        stats = {}
+        for name in ("postings", "dstats", "docmap"):
+            src = f"{store_dir}/{name}"
+            if not os.path.isdir(src):
+                continue
+            df = _read_committed(spark, store_dir, name)
+            before = df.count()
+            # postings/dstats retire superseded versions AND drop rows of
+            # commits already folded into the block index (every read path
+            # excludes them via _drop_folded and they are served by the
+            # index — on a long-lived store the folded history would
+            # otherwise dominate the bytes and be rewritten forever). The
+            # docmap LEDGER keeps every committed version row, folded
+            # included — it is what detects a re-delivered SUPERSEDED
+            # version (process_batch's anti-join), and dropping its history
+            # would let a replayed old commit re-ingest with a fresh higher
+            # seq and mask the newer one. It is metadata-sized (one short
+            # row per ingested version); compaction still rewrites it to GC
+            # uncommitted partials.
+            if name == "docmap":
+                kept = df
+            else:
+                kept = df.join(live, "doc_id", "left_semi")
+                if folded:
+                    kept = kept.where(~F.col("commit_id").isin(folded))
+            tmp = f"{src}.tmp"
+            n_kept = kept.count()
+            if n_kept == 0:
+                # dynamic partitionBy on an EMPTY frame writes a dir with no
+                # data files — unreadable by schema inference after the swap
+                # discarded the original. Write one schema-bearing empty
+                # part UNDER A PARTITION DIRECTORY (never-committed token
+                # "gc0", so reads filter it out) to keep the table's
+                # partitioned layout: a flat part file here would conflict
+                # with the commit_id=... directories the resumed stream
+                # writes next to it and brick partition discovery.
+                kept.drop("commit_id").repartition(1).write.mode("overwrite").parquet(
+                    f"{tmp}/commit_id=gc0"
+                )
+            else:
+                kept.write.mode("overwrite").partitionBy("commit_id").parquet(tmp)
+            # prove the rewrite is readable BEFORE the swap discards src
+            # (a raise, not an assert: python -O must not silence the check)
+            n_tmp = spark.read.parquet(tmp).count()
+            if n_tmp != n_kept:
+                raise RuntimeError(
+                    f"compact_store: rewrite of {name} is not readable back "
+                    f"({n_tmp} rows != {n_kept} kept) — aborting before swap"
+                )
+            swap_dir(src, tmp)
+            stats[name] = {
+                "rows_before": before,
+                "rows_after": _read_committed(spark, store_dir, name).count(),
+            }
     return stats
 
 

@@ -1,14 +1,15 @@
 """Crash-point matrix for the write side's publish protocol.
 
 Every rename in the engine goes through ``fsutil._rename``. A clean run
-of ``compact_into_index`` and of ``compact_store`` is counted, then each
-is crashed before its i-th rename for EVERY i: the stand-in raises at
-that call and at every later one, because a dead process performs no
-further renames (not even a swap's roll-back). Spark's cache is cleared
-after the crash, as a dead driver's would be. Recovery is simply
-re-running the same operation, after which the index must verify
-against its manifests, decode to exactly a clean fold's postings and
-answer every query bit-identically to a clean fold.
+of ``IndexSink.build``, of ``compact_into_index`` and of
+``compact_store`` is counted, then each is crashed before its i-th
+rename for EVERY i: the stand-in raises at that call and at every later
+one, because a dead process performs no further renames (not even a
+swap's roll-back). Spark's cache is cleared after the crash, as a dead
+driver's would be. Recovery is simply re-running the same operation,
+after which the index must verify against its manifests, decode to
+exactly a clean run's postings and answer every query bit-identically
+to a clean run.
 
 The index is small (2 term buckets, 1 doc bucket) so the whole matrix
 stays cheap; the fixture is built once and copied per crash point.
@@ -16,8 +17,10 @@ stays cheap; the fixture is built once and copied per crash point.
 
 from __future__ import annotations
 
+import gc
 import os
 import shutil
+import time
 
 import pytest
 from test_compact_index import _CHANGED_V2, _NARROW, _NEW, QUERIES, _decoded_content, _mk, _topk
@@ -148,6 +151,64 @@ def test_store_compaction_crash_at_every_rename(spark, pristine, clean, tmp_path
         assert compact_into_index(spark, sink, _store(base))["status"] == "compacted"
         assert _index_view(spark, sink) == clean["index_view"], f"crash point {at}/{n}"
         shutil.rmtree(base)
+
+
+def _build(spark, sink: IndexSink) -> None:
+    sink.build(_mk(spark, _NARROW), url_cols=None)
+
+
+def _build_view(spark, sink: IndexSink):
+    meta = sink._meta()
+    docs = sorted(tuple(r) for r in sink.docs(spark).collect())
+    return (
+        _index_view(spark, sink), docs,
+        (meta["N"], meta["avgdl"], meta["encoded_avgdl"]),
+    )
+
+
+def test_build_crash_at_every_rename(spark, tmp_path):
+    sink = _sink(str(tmp_path / "clean"))
+    counter = _Rename()
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(fsutil, "_rename", counter)
+        _build(spark, sink)
+    n, want = counter.calls, _build_view(spark, sink)
+    assert n == 8  # layout, docs, 2 bucket swaps + manifests, tstats, meta
+    for at in range(1, n + 1):
+        sink = _sink(str(tmp_path / f"build{at}"))
+        _crash_then_rerun(spark, lambda: _build(spark, sink), at)
+        assert _build_view(spark, sink) == want, f"crash point {at}/{n}"
+        shutil.rmtree(sink.root)
+
+
+def _persisted_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+@pytest.mark.parametrize("op", ["fold", "store"])
+def test_failed_compaction_keeps_no_cached_frame(spark, pristine, tmp_path, op):
+    """A fold or store compaction that raises must unpersist what it
+    cached, or each failed call in a long-lived driver leaks a frame.
+    Garbage collection runs first: the stem vocabulary's local
+    checkpoint (tokenize.stem_vocab) is released by Spark's context
+    cleaner once unreferenced, on success and failure alike, while a
+    cached frame stays until it is unpersisted."""
+    base = _copy(pristine, str(tmp_path / op))
+    run = {
+        "fold": lambda: compact_into_index(spark, _sink(base), _store(base)),
+        "store": lambda: compact_store(spark, _store(base)),
+    }[op]
+    before = _persisted_rdd_ids(spark)
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(fsutil, "_rename", _Rename(die_at=1))
+        with pytest.raises(_Crash):
+            run()
+    deadline = time.monotonic() + 60
+    while (left := _persisted_rdd_ids(spark) - before) and time.monotonic() < deadline:
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+        time.sleep(0.5)
+    assert not left, f"persisted RDDs {sorted(left)} outlive the failed {op}"
 
 
 def test_fold_replay_republishes_retire_only_bucket(spark, tmp_path):

@@ -205,6 +205,47 @@ def test_build_resume_identical(spark, raw_corpus, tmp_path_factory, monkeypatch
     shutil.rmtree(resumed)
 
 
+@pytest.fixture(scope="module")
+def crashed_mid_build(raw_corpus, tmp_path_factory):
+    """An 8-bucket build that died after wave 1's 3 manifests."""
+    root = str(tmp_path_factory.mktemp("sink") / "crashed")
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(fsutil, "_rename", _crash_after_manifests(3))
+        with pytest.raises(_Crash):
+            IndexSink(root, n_buckets=N_BUCKETS).build(raw_corpus, buckets_per_wave=3)
+    return root
+
+
+@pytest.mark.parametrize(
+    "sink_kw, build_kw, key",
+    [
+        ({"n_buckets": 2 * N_BUCKETS}, {}, "n_buckets"),
+        ({}, {"n_shards": C.N_DOC_SHARDS + 1}, "n_shards"),
+        ({}, {"url_cols": None}, "url_cols"),
+        ({}, {"url_cols": ("path",)}, "url_cols"),
+    ],
+)
+def test_resume_under_another_layout_raises(
+    spark, raw_corpus, crashed_mid_build, sink_kw, build_kw, key
+):
+    """Resuming committed buckets under another layout would mix two
+    layouts in one index; it must fail before any Spark job runs."""
+    before = read_manifest(crashed_mid_build)
+    sc = spark.sparkContext
+    group = f"layout-check-{sink_kw}-{build_kw}"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match=key):
+            IndexSink(crashed_mid_build, **{"n_buckets": N_BUCKETS, **sink_kw}).build(
+                raw_corpus, buckets_per_wave=3, **build_kw
+            )
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert read_manifest(crashed_mid_build) == before
+
+
 def test_build_resumes_after_crashed_fold_swap(spark, raw_corpus, tmp_path_factory):
     """A fold that died inside a bucket swap leaves ``bucket=N.old`` next
     to (or instead of) ``bucket=N``. A later build must repair that —
