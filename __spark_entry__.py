@@ -1217,7 +1217,7 @@ def q_bm25_url_bonus(spark, sf_dir):
     from search_engine_spark.tokenize import tokenize_url
 
     d = _read(spark, sf_dir, "documents")
-    postings = doc_postings(tokenize_url(d, ("source",), "text", with_flag=True))
+    postings = doc_postings(tokenize_url(d, ("source",), "text"))
     dstats = doc_stats_direct(d, "text", "doc_id", ("source",))
     tstats = term_stats(postings)
     N, avgdl = corpus_stats(dstats)

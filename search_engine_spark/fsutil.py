@@ -32,6 +32,11 @@ def _rename(src: str, dst: str) -> None:
     os.replace(src, dst)
 
 
+def read_json(path: str):
+    with open(path) as fh:
+        return json.load(fh)
+
+
 def atomic_write_json(path: str, obj) -> None:
     os.makedirs(os.path.dirname(path), exist_ok=True)
     tmp = path + ".tmp"

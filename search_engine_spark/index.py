@@ -4,9 +4,10 @@ Pipeline (all lazy DataFrame ops until the sink writes):
 
   corpus(repo,path,commit,lang,content)
     → with_doc_id (doc_id = xxhash64, content_sha invariant)
-    → tokenize_with_stems (narrow, codegen)           [tokenize.py]
+    → tokenize / tokenize_url (narrow, codegen)       [tokenize.py]
     → doc_postings: groupBy(doc_id, term)             [1 shuffle, partial agg]
     → doc_stats:    groupBy(doc_id)                   [reuses same exchange]
+    → stem channel at the posting level               [sink.encoder_input]
     → term/shard postings: groupBy(term, shard)       [1 shuffle on (term,shard)]
     → encode blocks (applyInPandas, Arrow)            [codec.py]
     → sink partitioned by term_bucket                 [sink.py]
@@ -39,7 +40,7 @@ from .codec import varbyte_encode_with_lengths
 def doc_postings(tokens: DataFrame, compact: bool = False) -> DataFrame:
     """(doc_id, term, pos[, is_url]) → (doc_id, term, tf, positions
     [, uf]). One shuffle on (doc_id, term) with map-side partial
-    aggregation. When tokens carry is_url (tokenize_url with_flag), the
+    aggregation. When tokens carry is_url (tokenize_url), the
     URL-bonus flag uf = max(is_url) rides the SAME aggregation — no extra
     pass or join (Search.java:98 bonus, precomputed at build time).
 
@@ -298,7 +299,6 @@ def build_block_index(
     dstats: DataFrame,
     avgdl: float,
     n_shards: int = C.N_DOC_SHARDS,
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """(doc_id, term, tf, positions) ⋈ doc_stats → encoded block rows.
 
@@ -312,11 +312,9 @@ def build_block_index(
     if "uf" not in postings.columns:
         postings = postings.withColumn("uf", F.lit(0))
     enriched = with_shard(postings.join(dstats, "doc_id"), n_shards)
-    if n_partitions:
-        enriched = enriched.repartition(n_partitions, "term", "shard")
-    else:
-        enriched = enriched.repartition("term", "shard")
-    ordered = enriched.sortWithinPartitions("term", "shard", "doc_id")
+    ordered = enriched.repartition("term", "shard").sortWithinPartitions(
+        "term", "shard", "doc_id"
+    )
     return ordered.mapInPandas(_encoder_stream(float(avgdl)), schema=INDEX_SCHEMA)
 
 

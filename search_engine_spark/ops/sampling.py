@@ -3,8 +3,8 @@
 Training mixtures are specified as per-group fractions ("keep 30% of
 English, 100% of the rare languages"); at 100 TB the draw must be
 deterministic (reproducible across reruns and engines — no
-per-partition RNG state) and embarrassingly parallel. Both operators
-gate each row on a cryptographic hash of its id: a row is kept iff
+per-partition RNG state) and embarrassingly parallel. The operator
+gates each row on a cryptographic hash of its id: a row is kept iff
 ``hash(id) < fraction · 2^32``, so membership is a pure row-local
 predicate — no shuffle, no sampling pass, pushdown-friendly — and any
 two engines that agree on md5 agree on the sample. The reference's only
@@ -28,15 +28,6 @@ def _gate(id_col, salt: str):
         16,
         10,
     ).cast("long")
-
-
-def hash_sample(
-    df: DataFrame, fraction: float, id_col: str = "doc_id", salt: str = "s0"
-) -> DataFrame:
-    """Deterministic Bernoulli(fraction) sample: keep iff
-    hash(salt|id) < fraction·2^32. Change ``salt`` for an independent
-    redraw; identical inputs always produce the identical sample."""
-    return df.where(_gate(F.col(id_col), salt) < F.lit(int(fraction * _GATE_SPAN)))
 
 
 def stratified_sample(

@@ -43,19 +43,18 @@ service (SURVEY.md §7 "sandbox fallback").
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import time
 import zlib
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import constants as C
 from .corpus import with_doc_id
-from .fsutil import atomic_write_json, recover_dirs, swap_dir
+from .fsutil import atomic_write_json, read_json, recover_dirs, swap_dir
 from .index import (
     INDEX_SCHEMA,
     _encoder_stream,
@@ -109,13 +108,8 @@ def committed_buckets(root: str) -> set[int]:
     return out
 
 
-def _load_json(path: str):
-    with open(path) as fh:
-        return json.load(fh)
-
-
 def read_manifest(root: str) -> list[dict]:
-    return [_load_json(_manifest_path(root, b)) for b in sorted(committed_buckets(root))]
+    return [read_json(_manifest_path(root, b)) for b in sorted(committed_buckets(root))]
 
 
 def _bucket_lineage(df: DataFrame) -> dict[int, dict]:
@@ -520,13 +514,9 @@ class IndexSink:
         self._pin_layout(n_shards, url_cols)
         spark = corpus.sparkSession
         tuned = _tune_scan_granularity(spark, corpus)
-        if tuned is None:
-            return self._build_inner(
-                corpus, buckets_per_wave, n_shards, url_cols, on_id_collision,
-            )
         # one save/restore/unset implementation: the same _scan_conf the
         # read-back paths use, so the tuned split size can never leak
-        with _scan_conf(spark, tuned):
+        with nullcontext() if tuned is None else _scan_conf(spark, tuned):
             return self._build_inner(
                 corpus, buckets_per_wave, n_shards, url_cols, on_id_collision,
             )
@@ -541,7 +531,7 @@ class IndexSink:
         if not committed_buckets(self.root):
             atomic_write_json(path, want)
         elif os.path.exists(path):
-            have = _load_json(path)
+            have = read_json(path)
             for key, val in want.items():
                 if have.get(key) != val:
                     raise ValueError(
@@ -739,7 +729,7 @@ class IndexSink:
         return spark.read.option("basePath", path).parquet(path)
 
     def _meta(self) -> dict:
-        return _load_json(os.path.join(self.root, "meta.json"))
+        return read_json(os.path.join(self.root, "meta.json"))
 
     def read(self, spark: SparkSession):
         meta = self._meta()

@@ -8,7 +8,7 @@ capabilities a continuously-ingesting 100 TB corpus needs:
 
 - :func:`incremental_index_stream` — new corpus files appear in a
   directory; each micro-batch tokenizes its documents and lands their
-  postings + doc stats in the index store under a per-batch commit
+  postings in the index store under a per-batch commit
   partition. The write protocol is ATOMIC PER BATCH:
 
   * every batch writes into its own ``commit_id=<token>`` partition
@@ -17,10 +17,10 @@ capabilities a continuously-ingesting 100 TB corpus needs:
     content-addressed, so the same data gets the same token under ANY
     batch numbering (incl. after a checkpoint reset);
   * a marker file ``_commits/<token>.json`` is written
-    (``fsutil.atomic_write_json``) only AFTER postings, dstats and
-    docmap have all landed;
+    (``fsutil.atomic_write_json``) only AFTER postings and docmap
+    have both landed;
   * read paths (:func:`read_live_postings` etc.) filter to committed
-    tokens, so a crash between the three writes leaves invisible
+    tokens, so a crash between the two writes leaves invisible
     partials, and the replay — same data ⇒ same token — OVERWRITES
     them before committing. A batch is always fully redone or fully
     skipped; postings can never double-count.
@@ -46,6 +46,8 @@ capabilities a continuously-ingesting 100 TB corpus needs:
 
 from __future__ import annotations
 
+import contextlib
+import os
 from collections.abc import Iterator
 
 import pandas as pd
@@ -54,7 +56,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..corpus import CORPUS_SCHEMA, with_doc_id
-from ..fsutil import atomic_write_json, recover_dirs, swap_dir
+from ..fsutil import atomic_write_json, read_json, recover_dirs, swap_dir
 from ..index import doc_postings, with_shard
 from ..sink import (
     encoder_input,
@@ -98,25 +100,19 @@ def committed_commits(store_dir: str) -> dict[str, int]:
     set is the store's source of truth for what is readable: data
     partitions without a marker are crash leftovers, invisible to read
     paths and garbage-collected by :func:`compact_store`."""
-    import json
-    import os
-
     d = _commits_dir(store_dir)
     out: dict[str, int] = {}
     if not os.path.isdir(d):
         return out
     for f in os.listdir(d):
         if f.endswith(".json"):
-            with open(os.path.join(d, f)) as fh:
-                rec = json.load(fh)
+            rec = read_json(os.path.join(d, f))
             out[rec["token"]] = int(rec["seq"])
     return out
 
 
 def _mark_committed(store_dir: str, token: str, seq: int, n_docs: int) -> None:
     """Atomic commit point: tmp write + rename AFTER all data landed."""
-    import os
-
     atomic_write_json(
         os.path.join(_commits_dir(store_dir), f"{token}.json"),
         {"token": token, "seq": seq, "n_docs": n_docs},
@@ -129,8 +125,6 @@ def _read_committed(spark: SparkSession, store_dir: str, name: str) -> DataFrame
     (one per micro-batch); an isin over it is a broadcast-able predicate
     — at very long stream lifetimes (10^5+ batches) swap the isin for a
     broadcast join against a commits table; the protocol is unchanged."""
-    import os
-
     if not os.path.isdir(f"{store_dir}/{name}"):
         return None
     committed = sorted(committed_commits(store_dir))
@@ -152,14 +146,10 @@ def _write_store_meta(store_dir: str, url_cols) -> None:
     compaction) against the same store must agree — mixing term spaces
     (URL-injected vs plain) inside one store would corrupt merge-on-read
     and folds silently."""
-    import json
-    import os
-
     want = {"url_cols": list(url_cols) if url_cols else []}
     p = _store_meta_path(store_dir)
     if os.path.exists(p):
-        with open(p) as fh:
-            have = json.load(fh)
+        have = read_json(p)
         if have.get("url_cols", []) != want["url_cols"]:
             raise ValueError(
                 f"store {store_dir} was ingested with url_cols="
@@ -183,14 +173,10 @@ def _write_store_meta(store_dir: str, url_cols) -> None:
 
 
 def store_url_cols(store_dir: str) -> list[str]:
-    import json
-    import os
-
     p = _store_meta_path(store_dir)
     if not os.path.exists(p):
         return []
-    with open(p) as fh:
-        return list(json.load(fh).get("url_cols", []))
+    return list(read_json(p).get("url_cols", []))
 
 
 def incremental_index_stream(
@@ -235,14 +221,13 @@ def incremental_index_stream(
         # skips a wholly-seen batch BEFORE tokenizing; a mixed batch
         # anti-joins the already-committed ids. A CHANGED doc (same
         # repo/path, new commit) gets a NEW doc_id; the stale version is
-        # masked by read_live_* and retired by compact_store.
+        # masked by read_live_postings and retired by compact_store.
         # persist the id'd batch: four consumers follow (signature agg,
         # anti-join, tokenize, docmap write) — without the cache each one
         # re-scans and re-hashes the batch source (micro-batch-sized, so
         # the cache is cheap; the sink's no-token-cache rule is about the
         # FULL-corpus stream, not a batch)
         ids = with_doc_id(batch_df).dropDuplicates(["doc_id"]).persist()
-        posted = None
         try:
             sig = ids.agg(
                 F.count("*").alias("n"), F.bit_xor(F.xxhash64("doc_id")).alias("x")
@@ -280,24 +265,21 @@ def incremental_index_stream(
             fresh = ids
             if seen_src is not None:
                 fresh = ids.join(seen_src.select("doc_id"), "doc_id", "left_anti")
-            # ONE tokenize pass: dstats (doclen = Σtf) derives from the
-            # persisted aggregated postings, exactly doc_stats semantics
+            # the postings are the store's only copy of the batch's terms:
+            # doclen (Σ tf) is derived from them where it is needed, by
+            # compact_into_index
             toks = (
                 tokenize_url(fresh, url_cols) if url_cols else tokenize(fresh)
             )
             posted = doc_postings(toks)
             if "uf" not in posted.columns:
                 posted = posted.withColumn("uf", F.lit(0).cast("int"))
-            posted = posted.persist()
             # each table writes into ITS OWN commit partition with overwrite:
             # a replay of a crashed attempt (same data ⇒ same token) rewrites
             # the partial files instead of appending next to them
             posted.write.mode("overwrite").parquet(
                 f"{store_dir}/postings/commit_id={token}"
             )
-            posted.groupBy("doc_id").agg(
-                F.sum("tf").cast("int").alias("doclen")
-            ).write.mode("overwrite").parquet(f"{store_dir}/dstats/commit_id={token}")
             # docmap: the tiny content-free ledger (every input column except
             # content/content_sha, so repo/path/commit plus passthrough
             # metadata like lang) that makes upsert-by-path resolvable at
@@ -314,8 +296,6 @@ def incremental_index_stream(
             _mark_committed(store_dir, token, seq, n_docs)
         finally:
             ids.unpersist()
-            if posted is not None:
-                posted.unpersist()
 
     return (
         stream.writeStream.foreachBatch(process_batch)
@@ -362,7 +342,18 @@ def live_doc_ids(spark: SparkSession, store_dir: str) -> DataFrame:
 _POSTINGS_SCHEMA = (
     "doc_id long, term string, tf int, positions array<int>, uf int, commit_id string"
 )
-_DSTATS_SCHEMA = "doc_id long, doclen int, commit_id string"
+
+
+def _committed_postings(spark: SparkSession, store_dir: str) -> DataFrame:
+    """Postings of COMMITTED batches, every version, with the uf column
+    even in a store written before it existed. An empty/brand-new store
+    reads as an empty frame."""
+    tbl = _read_committed(spark, store_dir, "postings")
+    if tbl is None:
+        return spark.createDataFrame([], _POSTINGS_SCHEMA)
+    if "uf" not in tbl.columns:
+        tbl = tbl.withColumn("uf", F.lit(0).cast("int"))
+    return tbl
 
 
 def read_live_postings(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -370,21 +361,8 @@ def read_live_postings(spark: SparkSession, store_dir: str) -> DataFrame:
     document versions masked (merge-on-read): a doc_id-keyed left-semi
     join against :func:`live_doc_ids`. One shuffle on doc_id; AQE
     broadcasts the live-id side when it is small relative to the
-    postings scan. An empty/brand-new store reads as an empty frame."""
-    tbl = _read_committed(spark, store_dir, "postings")
-    if tbl is None:
-        return spark.createDataFrame([], _POSTINGS_SCHEMA)
-    if "uf" not in tbl.columns:  # store written before the uf column
-        tbl = tbl.withColumn("uf", F.lit(0).cast("int"))
-    tbl = _drop_folded(tbl, store_dir)
-    return tbl.join(live_doc_ids(spark, store_dir), "doc_id", "left_semi")
-
-
-def read_live_dstats(spark: SparkSession, store_dir: str) -> DataFrame:
-    tbl = _read_committed(spark, store_dir, "dstats")
-    if tbl is None:
-        return spark.createDataFrame([], _DSTATS_SCHEMA)
-    tbl = _drop_folded(tbl, store_dir)
+    postings scan."""
+    tbl = _drop_folded(_committed_postings(spark, store_dir), store_dir)
     return tbl.join(live_doc_ids(spark, store_dir), "doc_id", "left_semi")
 
 
@@ -397,8 +375,6 @@ def folded_commits(store_dir: str) -> set[str]:
     :func:`compact_into_index`. Their docs are served by the index, so
     live-store reads exclude them; the docmap ledger keeps their rows
     (upsert resolution and re-delivery detection still need history)."""
-    import os
-
     d = _folded_dir(store_dir)
     if not os.path.isdir(d):
         return set()
@@ -406,8 +382,6 @@ def folded_commits(store_dir: str) -> set[str]:
 
 
 def _mark_folded(store_dir: str, tokens: list[str]) -> None:
-    import os
-
     d = _folded_dir(store_dir)
     os.makedirs(d, exist_ok=True)
     for t in tokens:
@@ -499,18 +473,14 @@ def _read_fold_txn(root: str) -> set[int] | str | None:
     journal is written before the first swap, removed after the folded
     markers land). None when no fold is in flight; the string
     ``"unknown"`` when a journal exists but is unreadable — the touched
-    set of the crashed attempt is then unknown and the caller MUST fall
-    back to a FULL side-table recompute (an empty/partial set would
-    leave the crashed attempt's buckets stale in tstats)."""
-    import json
-    import os
-
+    set of the crashed attempt is then unknown and the caller MUST treat
+    every bucket as touched (an empty/partial set would leave the
+    crashed attempt's buckets stale in their manifests and tstats)."""
     p = _fold_txn_path(root)
     if not os.path.exists(p):
         return None
     try:
-        with open(p) as fh:
-            return {int(b) for b in json.load(fh)["touched"]}
+        return {int(b) for b in read_json(p)["touched"]}
     except (OSError, ValueError, KeyError, TypeError):
         return "unknown"
 
@@ -522,9 +492,6 @@ def _write_fold_txn(root: str, touched: list[int], pending: list[str]) -> None:
 
 
 def _clear_fold_txn(root: str) -> None:
-    import contextlib
-    import os
-
     with contextlib.suppress(OSError):
         os.remove(_fold_txn_path(root))
 
@@ -560,8 +527,12 @@ def compact_into_index(
     so the filter prunes decode work row-by-row; row-group pruning on it
     is best-effort because files are clustered by (term, shard)); the
     ids themselves stay a distributed semi-join side, never a driver
-    collect. The new postings get the build's stem channel and doclen
-    join (:func:`sink.encoder_input`), and the re-encode and publish is
+    collect. The live winners are resolved once per fold (one docmap
+    read and window shuffle, persisted); the new docs' postings are
+    read from the pending commits only, and their doclen is Σ tf of
+    those same postings — the store keeps no second copy of it. The new
+    postings get the build's stem channel and doclen join
+    (:func:`sink.encoder_input`), and the re-encode and publish is
     the build's own routine (:func:`sink.publish_buckets`). The fold
     reads the index only through ``sink`` and knows nothing of its
     on-disk layout: its own logic is the winners, retired-doc discovery,
@@ -601,11 +572,15 @@ def compact_into_index(
             "index_stream(url_cols=...)) or rebuild the index."
         )
     recover_index(root)
+    n_shards = int(meta["n_shards"])
+    n_buckets = int(meta["n_buckets"])
     # fold journal of a PREVIOUS attempt that crashed mid-fold: its
     # touched buckets may already be swapped, so this run re-publishes
-    # them and its side-table refresh covers them too (set), or
-    # everything ("unknown").
+    # them and its side-table refresh covers them too. An unreadable
+    # journal leaves that set unknown, so every bucket counts as touched.
     prev_touched = _read_fold_txn(root)
+    if prev_touched == "unknown":
+        prev_touched = set(range(n_buckets))
     committed = committed_commits(store_dir)
     pending = sorted(set(committed) - folded_commits(store_dir))
     if not pending:
@@ -616,8 +591,6 @@ def compact_into_index(
         return {"status": "noop", "touched_buckets": [], "n_new_docs": 0,
                 "n_retired": 0, "folded": []}
 
-    n_shards = int(meta["n_shards"])
-    n_buckets = int(meta["n_buckets"])
     enc_avgdl = float(meta.get("encoded_avgdl", meta["avgdl"]))
     # an index built before the docs table had doc buckets takes this
     # sink's count; its docs are republished whole in that layout
@@ -627,7 +600,8 @@ def compact_into_index(
     # live winners over the FULL docmap (folded history included: a doc
     # folded earlier must still beat an older pending re-delivery), with
     # their metadata rows for the docs-table update — the SAME resolution
-    # rule as read-time masking (_winners; one definition on purpose)
+    # rule as read-time masking (_winners; one definition on purpose),
+    # resolved once per fold
     winners = _winners(_read_committed(spark, store_dir, "docmap"))
     # fold set: winners from still-pending commits whose exact version is
     # not already in the index (re-delivery of an indexed version → no-op)
@@ -635,13 +609,17 @@ def compact_into_index(
         docs_tbl.select("doc_id"), "doc_id", "left_anti"
     )
     new_ids = F.broadcast(new_docs.select("doc_id"))
-    new_dl = read_live_dstats(spark, store_dir).join(
-        new_ids, "doc_id", "left_semi"
-    ).select("doc_id", "doclen")
-    new_p_q = encoder_input(
-        read_live_postings(spark, store_dir).join(new_ids, "doc_id", "left_semi"),
-        new_dl, n_shards, n_buckets,
+    # their postings: the pending commits' rows of exactly those ids (a
+    # winner of a pending commit is live and unfolded by construction, so
+    # no merge-on-read mask applies); doclen = Σ tf, the token count the
+    # build's doc_stats takes (a token-less doc gets 0 at the docs write)
+    new_postings = (
+        _committed_postings(spark, store_dir)
+        .where(F.col("commit_id").isin(pending))
+        .join(new_ids, "doc_id", "left_semi")
     )
+    new_dl = new_postings.groupBy("doc_id").agg(F.sum("tf").cast("int").alias("doclen"))
+    new_p_q = encoder_input(new_postings, new_dl, n_shards, n_buckets)
     # retired: the index's version of a (repo, path) the stream
     # superseded. It never reaches the driver as rows: only its
     # ≤ n_shards distinct shard values collect (bucket-pruning
@@ -652,10 +630,11 @@ def compact_into_index(
         .where(F.col("d.doc_id") != F.col("w.doc_id"))
         .select(F.col("d.doc_id").alias("doc_id"))
     )
-    # both are read more than once (new postings: touched set and
-    # re-encode; retired: shard probe, hit-term semi-join, docs
-    # anti-join) — persisted
-    with persisted(new_p_q) as new_p, persisted(retired_q) as retired:
+    # each is read more than once (winners: fold set and retired;
+    # new postings: touched set and re-encode; retired: shard probe,
+    # hit-term semi-join, docs anti-join) — persisted, winners first so
+    # the other two read it from the cache
+    with persisted(winners), persisted(new_p_q) as new_p, persisted(retired_q) as retired:
         # touched buckets: new terms' buckets + buckets holding retired docs
         touched = {int(r["bucket"]) for r in new_p.select("bucket").distinct().collect()}
         n_retired = retired.count()
@@ -663,9 +642,7 @@ def compact_into_index(
         if n_retired:
             shards = sorted(
                 int(r["shard"])
-                for r in retired.select(
-                    F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("int").alias("shard")
-                ).distinct().collect()
+                for r in with_shard(retired, n_shards).select("shard").distinct().collect()
             )
             hit_terms = (
                 decode_block_doc_ids(blocks.where(F.col("shard").isin(shards)))
@@ -692,10 +669,7 @@ def compact_into_index(
             # consistent). The crashed attempt's journal bounds the
             # refresh to ITS touched buckets; no journal (pre-journal
             # crash, or a genuinely empty fold set) → full.
-            refresh_side_tables(
-                spark, root, meta,
-                touched=prev_touched if isinstance(prev_touched, set) else None,
-            )
+            refresh_side_tables(spark, root, meta, touched=prev_touched)
             _mark_folded(store_dir, pending)
             _clear_fold_txn(root)
             return {"status": "folded_empty", "touched_buckets": [],
@@ -706,14 +680,9 @@ def compact_into_index(
         # only a retired doc touched holds no fold-set posting once
         # swapped, so this run alone would not see it, yet its manifest
         # may predate the swap — and refresh the side tables over the
-        # same set. An unreadable journal means that set is unknown →
-        # touched_all None → full side-table recompute (and the corrupt
-        # journal is left in place so a further crash keeps forcing full).
-        if prev_touched == "unknown":
-            touched_all = None
-        else:
-            touched_l = touched_all = sorted(touched | (prev_touched or set()))
-            _write_fold_txn(root, touched_all, pending)
+        # same set.
+        touched_l = sorted(touched | (prev_touched or set()))
+        _write_fold_txn(root, touched_l, pending)
 
         # rebuild touched buckets: decoded survivors ∪ enriched new
         # postings (touched_l can be empty with n_new > 0 when every
@@ -745,7 +714,7 @@ def compact_into_index(
             ),
             drop=retired,
         )
-        refresh_side_tables(spark, root, meta, touched=touched_all)
+        refresh_side_tables(spark, root, meta, touched=touched_l)
         _mark_folded(store_dir, pending)
         _clear_fold_txn(root)
     return {
@@ -759,7 +728,7 @@ def compact_into_index(
 
 def compact_store(spark: SparkSession, store_dir: str) -> dict:
     """Offline compaction — the write-time half of the MERGE sink: rewrite
-    postings/dstats keeping only live doc versions from COMMITTED
+    the postings keeping only live doc versions from COMMITTED, unfolded
     batches (docmap keeps its full committed version history — see the
     loop comment), so read-time masking goes back to a no-op, dead bytes
     are reclaimed, and uncommitted crash partials are garbage-collected.
@@ -771,9 +740,9 @@ def compact_store(spark: SparkSession, store_dir: str) -> dict:
     The per-row ``commit_id`` partition values are preserved, so the
     marker set stays valid. Returns row counts before/after for
     observability (``rows_before`` counts committed rows only; partials
-    were never readable)."""
-    import os
-
+    were never readable; ``rows_after`` is the rewrite's row count,
+    checked by reading it back before the swap). A table directory an
+    older store wrote and this one no longer does is left untouched."""
     # recover ALL tables before reading anything: live_doc_ids reads the
     # docmap, and a previous compaction crashed mid-swap may have left
     # docmap absent with its content in docmap.old — computing the live
@@ -783,13 +752,13 @@ def compact_store(spark: SparkSession, store_dir: str) -> dict:
     with persisted(live_doc_ids(spark, store_dir)) as live:
         folded = sorted(folded_commits(store_dir))
         stats = {}
-        for name in ("postings", "dstats", "docmap"):
+        for name in ("postings", "docmap"):
             src = f"{store_dir}/{name}"
             if not os.path.isdir(src):
                 continue
             df = _read_committed(spark, store_dir, name)
             before = df.count()
-            # postings/dstats retire superseded versions AND drop rows of
+            # postings retire superseded versions AND drop rows of
             # commits already folded into the block index (every read path
             # excludes them via _drop_folded and they are served by the
             # index — on a long-lived store the folded history would
@@ -832,10 +801,9 @@ def compact_store(spark: SparkSession, store_dir: str) -> dict:
                     f"({n_tmp} rows != {n_kept} kept) — aborting before swap"
                 )
             swap_dir(src, tmp)
-            stats[name] = {
-                "rows_before": before,
-                "rows_after": _read_committed(spark, store_dir, name).count(),
-            }
+            # every kept row is committed and the gc0 partition is empty,
+            # so the committed view of the swapped table holds n_kept rows
+            stats[name] = {"rows_before": before, "rows_after": n_kept}
     return stats
 
 

@@ -99,13 +99,12 @@ def tokenize_url(
     url_cols: tuple[str, ...] = ("repo", "path"),
     content_col: str = "content",
     id_col: str = "doc_id",
-    with_flag: bool = True,
 ) -> DataFrame:
     """tokenize() with reference URL-token injection: the token stream is
     url tokens then content tokens, contiguous positions over the combined
     surviving stream. Same narrow single-stage plan as tokenize().
 
-    ``with_flag`` adds is_url ∈ {0,1}: URL tokens occupy positions 1..m
+    Each token carries is_url ∈ {0,1}: URL tokens occupy positions 1..m
     (m = surviving url-token count, a second narrow size() over the url
     part), so is_url = pos ≤ m. Aggregating max(is_url) per (doc, term) —
     with stem-channel rows COPYING raw positions — yields the URL-bonus
@@ -124,7 +123,7 @@ def tokenize_url(
         "doc_id",
         "term",
         (F.col("pos0") + 1).cast("int").alias("pos"),
-        *( [(F.col("pos0") < F.col("_m")).cast("int").alias("is_url")] if with_flag else [] ),
+        (F.col("pos0") < F.col("_m")).cast("int").alias("is_url"),
     )
     return out
 
@@ -159,24 +158,6 @@ def stem_vocab(tokens: DataFrame) -> DataFrame:
         .withColumn("stem", _stem_udf("term"))
         .localCheckpoint()
     )
-
-
-def tokenize_with_stems(corpus: DataFrame, content_col: str = "content", id_col: str = "doc_id") -> DataFrame:
-    """Reference parity: every token is indexed both raw and stemmed when
-    the stem differs (Indexer.java:256,263-283 posts both forms).
-
-    Returns (doc_id, term, pos) where stemmed variants appear as extra
-    rows at the same position. The stem map is joined back broadcast —
-    vocabulary is small relative to occurrences by Zipf's law.
-    """
-    tokens = tokenize(corpus, content_col, id_col)
-    vocab = stem_vocab(tokens)
-    stemmed = (
-        tokens.join(F.broadcast(vocab), "term")
-        .where(F.col("stem") != F.col("term"))
-        .select("doc_id", F.col("stem").alias("term"), "pos")
-    )
-    return tokens.unionByName(stemmed)
 
 
 # --- Code-identifier subtoken channel -------------------------------------

@@ -602,7 +602,7 @@ def test_predbucket_docs_layout_still_folds(spark, tmp_path):
 
 
 def test_compact_store_gcs_folded_commits(spark, tmp_path):
-    """After a fold, the store's postings/dstats rows for folded commits
+    """After a fold, the store's postings rows for folded commits
     are dead bytes (served by the index, excluded by every read path) —
     compact_store must reclaim them, keep the docmap ledger's history,
     and leave the store in a layout the RESUMED stream can keep writing
@@ -629,9 +629,8 @@ def test_compact_store_gcs_folded_commits(spark, tmp_path):
     assert spark.read.parquet(f"{store}/postings").count() > 0  # dead bytes
 
     stats = compact_store(spark, store)
-    # folded postings/dstats reclaimed; docmap history intact
+    # folded postings reclaimed; docmap history intact
     assert stats["postings"]["rows_after"] == 0
-    assert stats["dstats"]["rows_after"] == 0
     assert stats["docmap"]["rows_after"] == 2
     assert spark.read.parquet(f"{store}/postings").count() == 0
 

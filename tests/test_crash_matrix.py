@@ -9,7 +9,8 @@ swap's roll-back). Spark's cache is cleared after the crash, as a dead
 driver's would be. Recovery is simply re-running the same operation,
 after which the index must verify against its manifests, decode to
 exactly a clean run's postings and answer every query bit-identically
-to a clean run.
+to a clean run. The Spark jobs of the clean fold and store compaction
+are counted too, each against its own budget.
 
 The index is small (2 term buckets, 1 doc bucket) so the whole matrix
 stays cheap; the fixture is built once and copied per crash point.
@@ -96,9 +97,23 @@ def pristine(spark, tmp_path_factory):
     return base
 
 
+def _spark_jobs(spark, group: str, run) -> int:
+    """Run ``run`` inside its own job group; the number of Spark jobs it
+    started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="module")
 def clean(spark, pristine, tmp_path_factory):
-    """Rename counts of clean runs, and the states they leave."""
+    """Rename and Spark job counts of clean runs, and the states they
+    leave."""
     base = _copy(pristine, str(tmp_path_factory.mktemp("crash") / "clean"))
     sink = _sink(base)
     out = {}
@@ -109,12 +124,24 @@ def clean(spark, pristine, tmp_path_factory):
         counter = _Rename()
         with pytest.MonkeyPatch.context() as m:
             m.setattr(fsutil, "_rename", counter)
-            run()
+            out[op + "_jobs"] = _spark_jobs(spark, f"crash-matrix-clean-{op}", run)
         out[op + "_renames"] = counter.calls
         if op == "store":
             out["store_view"] = _store_view(spark, _store(base))
     out["index_view"] = _index_view(spark, sink)
     return out
+
+
+# Spark jobs of the clean fixture's runs (store compaction before the
+# fold, then the fold), each pinned at the largest count seen over
+# repeated runs: a job the write path starts without need shows up as a
+# count above its budget.
+_JOB_BUDGET = {"store": 23, "fold": 59}
+
+
+def test_write_path_job_budget(clean):
+    for op, budget in _JOB_BUDGET.items():
+        assert clean[op + "_jobs"] <= budget, f"{op}: {clean[op + '_jobs']} jobs > {budget}"
 
 
 def _crash_then_rerun(spark, run, at: int) -> None:
@@ -142,7 +169,7 @@ def test_store_compaction_crash_at_every_rename(spark, pristine, clean, tmp_path
     """compact_store runs BEFORE the fold here, so a store it damaged
     (say, a docmap lost mid-swap) would show up in the folded index."""
     n = clean["store_renames"]
-    assert n == 6  # postings, dstats, docmap: two renames per swap
+    assert n == 4  # postings, docmap: two renames per swap
     for at in range(1, n + 1):
         base = _copy(pristine, str(tmp_path / f"store{at}"))
         sink = _sink(base)
@@ -211,14 +238,16 @@ def test_failed_compaction_keeps_no_cached_frame(spark, pristine, tmp_path, op):
     assert not left, f"persisted RDDs {sorted(left)} outlive the failed {op}"
 
 
-def test_fold_replay_republishes_retire_only_bucket(spark, tmp_path):
+@pytest.mark.parametrize("corrupt_journal", [False, True])
+def test_fold_replay_republishes_retire_only_bucket(spark, tmp_path, corrupt_journal):
     """A bucket touched ONLY by a retired doc (no new term hashes into
     it) is re-encoded without that doc, so the replay of a fold that died
     between its swap and its manifest finds no retired posting there and
     would not touch it again — leaving a manifest that no longer matches
     the bucket. The replay must re-publish every bucket the crashed
-    attempt journaled."""
+    attempt journaled, and every bucket when the journal is unreadable."""
     from search_engine_spark.sink import term_bucket_py
+    from search_engine_spark.streaming.jobs import _fold_txn_path
 
     old = [("rt", "x.py", "c1", "py", "zqalpha zqmu"), ("rt", "y.py", "c1", "py", "zqalpha komodo")]
     new = [("rt", "x.py", "c2", "py", "zqalpha")]
@@ -243,6 +272,9 @@ def test_fold_replay_republishes_retire_only_bucket(spark, tmp_path):
         with pytest.raises(_Crash):
             compact_into_index(spark, sink, store)
     spark.catalog.clearCache()
+    if corrupt_journal:
+        with open(_fold_txn_path(sink.root), "w") as fh:
+            fh.write("{not json")
     res = compact_into_index(spark, sink, store)
     assert res["status"] == "compacted" and retire_only in res["touched_buckets"]
     assert sink.verify(spark) == []

@@ -73,10 +73,6 @@ def test_incremental_index_matches_batch(spark, tmp_path):
     q = incremental_index_stream(spark, corpus_dir, store, str(tmp_path / "ckpt2"))
     _await(q)
     assert spark.read.parquet(f"{store}/postings").count() == len(s)
-    assert (
-        spark.read.parquet(f"{store}/dstats").groupBy("doc_id").count().agg(F.max("count")).collect()[0][0]
-        == 1
-    )
     full.unpersist()
 
 
@@ -87,7 +83,6 @@ def test_upsert_by_path_merge_on_read_and_compact(spark, tmp_path):
     from search_engine_spark.streaming import (
         compact_store,
         live_doc_ids,
-        read_live_dstats,
         read_live_postings,
     )
 
@@ -125,9 +120,8 @@ def test_upsert_by_path_merge_on_read_and_compact(spark, tmp_path):
         read_live_postings(spark, store).select("doc_id", "term", "tf", "positions").collect()
     )
     assert live_rows == key(expected.collect())
-    assert read_live_dstats(spark, store).count() == 60
 
-    # compaction: postings/dstats shrink to exactly the live rows; the
+    # compaction: postings shrink to exactly the live rows; the
     # docmap LEDGER keeps its full version history (it is what detects a
     # re-delivered superseded version)
     stats = compact_store(spark, store)
@@ -251,14 +245,14 @@ def test_compaction_crash_recovery(spark, tmp_path):
 
 def test_compaction_with_empty_live_set(spark, tmp_path):
     """Every live doc version tokenizes to NOTHING (v2 of each path has
-    empty content) → the compacted postings/dstats rewrite is an EMPTY
+    empty content) → the compacted postings rewrite is an EMPTY
     table. The rewrite must stay readable (schema-bearing part file, not
     a data-less partitionBy dir) and the store must survive further
     reads and compactions — regression gate for the empty-kept swap bug
     (round-3 advice)."""
     from search_engine_spark.streaming import (
         compact_store,
-        read_live_dstats,
+        live_doc_ids,
         read_live_postings,
     )
 
@@ -270,7 +264,7 @@ def test_compaction_with_empty_live_set(spark, tmp_path):
     q = incremental_index_stream(spark, corpus_dir, store, str(tmp_path / "ck"))
     _await(q)
 
-    # v2 of EVERY path: empty content → zero postings, zero dstats rows
+    # v2 of EVERY path: empty content → zero postings
     v2 = v1.withColumn("commit", F.concat(F.lit("v2-"), "commit")).withColumn(
         "content", F.lit("")
     )
@@ -281,12 +275,10 @@ def test_compaction_with_empty_live_set(spark, tmp_path):
 
     stats = compact_store(spark, store)
     assert stats["postings"]["rows_after"] == 0
-    assert stats["dstats"]["rows_after"] == 0
     # the original data was discarded and the store still READS — both
     # through the committed filter and as a raw parquet dir
     assert spark.read.parquet(f"{store}/postings").count() == 0
     assert read_live_postings(spark, store).count() == 0
-    assert read_live_dstats(spark, store).count() == 0
     # docmap keeps full committed history (24 version rows), and a
     # second compaction over the emptied store is a clean no-op
     assert stats["docmap"]["rows_after"] == 24
@@ -302,7 +294,7 @@ def test_compaction_with_empty_live_set(spark, tmp_path):
     q = incremental_index_stream(spark, corpus_dir, store, str(tmp_path / "ck"))
     _await(q)
     assert read_live_postings(spark, store).count() > 0
-    assert read_live_dstats(spark, store).count() == 12  # v3 wins every path
+    assert live_doc_ids(spark, store).count() == 12  # v3 wins every path
     v1.unpersist()
 
 
@@ -358,7 +350,6 @@ def test_read_paths_on_empty_store(spark, tmp_path):
     the right schema, not AttributeError on None."""
     from search_engine_spark.streaming import (
         live_doc_ids,
-        read_live_dstats,
         read_live_postings,
     )
 
@@ -367,9 +358,6 @@ def test_read_paths_on_empty_store(spark, tmp_path):
     p = read_live_postings(spark, store)
     assert p.count() == 0
     assert set(p.columns) == {"doc_id", "term", "tf", "positions", "uf", "commit_id"}
-    d = read_live_dstats(spark, store)
-    assert d.count() == 0
-    assert set(d.columns) == {"doc_id", "doclen", "commit_id"}
 
 
 @pytest.fixture(scope="module")
