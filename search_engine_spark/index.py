@@ -99,22 +99,6 @@ def doc_stats_direct(
     )
 
 
-
-
-def doc_stats_from_postings(postings: DataFrame) -> DataFrame:
-    """doclen recovered from combined (raw+stem) postings, avoiding a
-    second corpus scan: positions are contiguous 1..n over the RAW
-    surviving token stream (filters applied before posexplode,
-    tokenize._token_array) and stemmed rows copy raw positions, so the
-    global max position in a document IS its raw token count. Equality
-    with doc_stats(raw_tokens) is asserted in tests/test_tokenizer.py.
-    Docs with zero surviving tokens have no postings and are absent here —
-    callers owning the corpus frame should use doc_stats_direct."""
-    return postings.groupBy("doc_id").agg(
-        F.max(F.element_at("positions", -1)).cast("int").alias("doclen")
-    )
-
-
 def term_stats(postings: DataFrame) -> DataFrame:
     """(term) → df (document frequency). postings is unique per
     (doc_id, term) so a plain count is df."""

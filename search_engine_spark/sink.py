@@ -33,7 +33,11 @@ Iceberg-style *per-partition commit protocol*:
   - **One index writer**: the build and the fold
     (``streaming.compact_into_index``) share every table writer here —
     :func:`encoder_input`, :func:`publish_buckets`, :func:`write_docs`,
-    :func:`write_tstats`, :func:`refresh_side_tables`.
+    :func:`refresh_side_tables`.
+  - **One copy of each fact**: df(term) is not stored. Each block row
+    covers ``n`` postings = ``n`` distinct docs of its term, so
+    :func:`term_df` derives df from the committed blocks' ``n`` column
+    — the columnar per-block metadata kept next to the postings.
 
 On a real cluster each wave is an Iceberg ``append`` commit and the
 manifest rows live in a catalog table; the directory-rename + JSON-file
@@ -162,9 +166,9 @@ def _dir_bytes(path: str) -> int:
 def _scan_conf(spark, value: str):
     """Temporarily pin spark.sql.files.maxPartitionBytes. The build tunes
     splits FINE for the corpus-tokenize scans (see _tune_scan_granularity)
-    but the lineage read-back / tstats scans over the just-written index
-    want LARGE splits — hundreds of small block files pack into a handful
-    of tasks instead of one task per file."""
+    but the lineage read-back over the just-written index wants LARGE
+    splits — hundreds of small block files pack into a handful of tasks
+    instead of one task per file."""
     old = spark.conf.get("spark.sql.files.maxPartitionBytes", None)
     spark.conf.set("spark.sql.files.maxPartitionBytes", value)
     try:
@@ -301,40 +305,11 @@ def publish_buckets(
     shutil.rmtree(tmp, ignore_errors=True)
 
 
-def write_tstats(
-    spark: SparkSession, root: str, n_buckets: int, touched: list[int] | None = None
-) -> None:
-    """(Re)derive the term → df side table from the committed blocks —
-    each block row covers n postings = n distinct docs of its term — and
-    publish it with :func:`fsutil.swap_dir`. ``touched=None`` recomputes
-    every term; a bucket list recomputes only the terms hashing into
-    those buckets (a term lives entirely in its crc32 bucket) and keeps
-    every other row of the current table, so a fold pays for the
-    buckets it rewrote, never the whole index."""
-    blocks_dir = os.path.join(root, "blocks")
-    tstats_dir = os.path.join(root, "tstats")
-    tmp = tstats_dir + ".tmp"
-    with _scan_conf(spark, str(128 << 20)):
-        blocks = spark.read.option("basePath", blocks_dir).parquet(blocks_dir)
-        if touched is not None:
-            blocks = blocks.where(F.col("bucket").isin(touched))
-        df = blocks.groupBy("term").agg(F.sum("n").cast("long").alias("df"))
-        if touched is not None:
-            kept = (
-                with_bucket(spark.read.parquet(tstats_dir).select("term", "df"), n_buckets)
-                .where(~F.col("bucket").isin(touched))
-                .drop("bucket")
-            )
-            df = kept.unionByName(df)
-        shutil.rmtree(tmp, ignore_errors=True)
-        df.write.parquet(tmp)
-        if not any(f.startswith("part-") for f in os.listdir(tmp)):
-            # an all-retired fold can empty the whole term space; an
-            # empty write leaves a data-less dir that bricks schema
-            # inference — force one schema-bearing part file
-            shutil.rmtree(tmp, ignore_errors=True)
-            df.repartition(1).write.parquet(tmp)
-    swap_dir(tstats_dir, tmp)
+def term_df(blocks: DataFrame) -> DataFrame:
+    """(term, df) over block rows: a block row covers n postings = n
+    distinct docs of its term, so df = Σ n. Lazy — a ``term IN`` filter
+    on the result pushes into the blocks scan."""
+    return blocks.groupBy("term").agg(F.sum("n").cast("long").alias("df"))
 
 
 def write_docs(
@@ -346,11 +321,10 @@ def write_docs(
 ) -> None:
     """Publish the docs side table (doc_id, metadata columns, doclen) in
     its ``dbucket = pmod(doc_id, n_doc_buckets)`` layout via tmp write +
-    :func:`fsutil.swap_dir`, the :func:`write_tstats` contract:
-    ``drop=None`` swaps ``rows`` in as the whole table; otherwise
-    ``rows`` are added, the ``drop`` doc_ids retired, and only the
-    dbuckets holding either are rewritten and swapped (ids stay
-    distributed; only bucket numbers collect). A flat docs dir (built
+    :func:`fsutil.swap_dir`: ``drop=None`` swaps ``rows`` in as the
+    whole table; otherwise ``rows`` are added, the ``drop`` doc_ids
+    retired, and only the dbuckets holding either are rewritten and
+    swapped (ids stay distributed; only bucket numbers collect). A flat docs dir (built
     before the dbucket layout) is republished whole in the layout. An
     added row lacking a metadata column folds it as null."""
     docs_dir = os.path.join(root, "docs")
@@ -388,22 +362,13 @@ def write_docs(
     shutil.rmtree(tmp, ignore_errors=True)
 
 
-def refresh_side_tables(
-    spark: SparkSession, root: str, meta: dict, touched: set | list | None
-) -> None:
-    """A fold's tstats + meta refresh from committed state: tstats via
-    :func:`write_tstats` over ``touched`` (a bucket set; ∅ = nothing
-    swapped, no rewrite; None = unknown, full recompute), N/avgdl via
+def refresh_side_tables(spark: SparkSession, root: str, meta: dict) -> None:
+    """A fold's meta refresh from committed state: N/avgdl via
     :func:`index.corpus_stats` over the docs table's doclen column (a
     stored running sum could double-advance under a replay), meta's
     ``encoded_avgdl`` kept. Idempotent, so the fold runs it on EVERY
     exit path before marking commits folded and a replay after any
-    crash re-derives consistent side tables."""
-    if touched is None or touched:
-        write_tstats(
-            spark, root, int(meta["n_buckets"]),
-            None if touched is None else sorted(touched),
-        )
+    crash re-derives a consistent meta."""
     enc_avgdl = float(meta.get("encoded_avgdl", meta["avgdl"]))
     N, avgdl = corpus_stats(spark.read.parquet(os.path.join(root, "docs")).select("doclen"))
     meta.update(
@@ -415,8 +380,8 @@ def refresh_side_tables(
 
 def recover_index(root: str) -> None:
     """Repair an index left mid-publish by a crashed build or fold:
-    root-level swaps (docs, tstats) first, then the partition swaps
-    inside blocks/ and docs/."""
+    the root-level docs swap first, then the partition swaps inside
+    blocks/ and docs/."""
     for parent in (root, os.path.join(root, "blocks"), os.path.join(root, "docs")):
         recover_dirs(parent)
 
@@ -456,7 +421,6 @@ class IndexSink:
         root/
           blocks/bucket=NN/*.parquet   encoded posting blocks (partition-pruned
                                        by the query path via term→bucket)
-          tstats/                      term df side table
           docs/dbucket=NN/*.parquet    doc metadata + doclen (result assembly),
                                        partitioned by pmod(doc_id, n_doc_buckets)
                                        so an incremental fold rewrites only the
@@ -464,6 +428,9 @@ class IndexSink:
           _manifest/bucket_NN.json     one commit record per bucket
           _layout.json                 n_buckets/n_shards/url_cols the buckets are cut by
           meta.json                    corpus stats + config + lineage summary
+
+    df(term) has no table of its own: :meth:`read` derives it from the
+    blocks (:func:`term_df`).
     """
 
     def __init__(
@@ -579,9 +546,8 @@ class IndexSink:
         #   waves   stem channel derived at the POSTING level (vocab =
         #           distinct over the cached postings — NOT another
         #           tokenize), enrich (encoder_input), encode, commit.
-        #   tstats  derived AFTER the build from the written blocks
-        #           (df(term) = Σ n over block rows) — a free byproduct
-        #           of the commit read-back
+        #   df      not stored: read as Σ n over the committed block
+        #           rows (term_df)
         # The heavy (positions-bearing) token stream is NEVER cached: a
         # multi-GB materialization is serial disk I/O at any executor
         # count (measured: caching capped scaling efficiency at ~0.4).
@@ -685,10 +651,9 @@ class IndexSink:
                 finally:
                     enriched.unpersist()
 
-        # side tables + meta are cheap; (re)written last, unconditionally
+        # meta is (re)written last, unconditionally; side_tables times
+        # the meta step up to its write (the write carries the timings)
         t0 = time.perf_counter()
-        write_tstats(spark, self.root, self.n_buckets)
-        phase_t["side_tables"] = time.perf_counter() - t0
         # encoded_avgdl: the avgdl the BLOCK BOUNDS (max_wtf) were computed
         # with. A fresh/resumed build encodes with the current corpus avgdl;
         # compact_into_index re-encodes touched buckets with this SAME value
@@ -702,6 +667,7 @@ class IndexSink:
                 enc_avgdl = float(self._meta().get("encoded_avgdl", avgdl))
             except (OSError, ValueError):
                 pass
+        phase_t["side_tables"] = time.perf_counter() - t0
         meta = {
             "N": N,
             "avgdl": avgdl,
@@ -732,14 +698,16 @@ class IndexSink:
         return read_json(os.path.join(self.root, "meta.json"))
 
     def read(self, spark: SparkSession):
+        """(blocks, (term, df), (doc_id, doclen), meta); df is the lazy
+        :func:`term_df` over the blocks, so a caller serving many queries
+        caches it once per opened index."""
         meta = self._meta()
         blocks = self._blocks(spark)
-        tstats = spark.read.parquet(os.path.join(self.root, "tstats"))
         # doclen lives in the docs side table (written first, one pass)
         dstats = spark.read.parquet(os.path.join(self.root, "docs")).select(
             "doc_id", "doclen"
         )
-        return blocks, tstats, dstats, meta
+        return blocks, term_df(blocks), dstats, meta
 
     def docs(self, spark: SparkSession) -> DataFrame:
         """The doc-metadata side table (doc_id + every non-content input
@@ -781,11 +749,10 @@ class IndexSink:
         from .tokenize import tokenize
 
         meta = self._meta()
-        tstats = spark.read.parquet(os.path.join(self.root, "tstats"))
         terms, _w = normalize_query(query)
         idx = self.blocks_for_terms(spark, terms) if terms else self._blocks(spark)
         topk = bm25_topk_blocks(
-            idx, tstats, meta["N"], meta["avgdl"], query, k,
+            idx, term_df(idx), meta["N"], meta["avgdl"], query, k,
             wtf_scale=wtf_scale_of(meta),
         )
         w = Window.orderBy(F.desc("score"), F.asc("doc_id"))

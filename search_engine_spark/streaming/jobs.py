@@ -475,7 +475,7 @@ def _read_fold_txn(root: str) -> set[int] | str | None:
     ``"unknown"`` when a journal exists but is unreadable — the touched
     set of the crashed attempt is then unknown and the caller MUST treat
     every bucket as touched (an empty/partial set would leave the
-    crashed attempt's buckets stale in their manifests and tstats)."""
+    crashed attempt's buckets stale in their manifests)."""
     p = _fold_txn_path(root)
     if not os.path.exists(p):
         return None
@@ -514,12 +514,11 @@ def compact_into_index(
     bucket size + |stream batch|, never corpus size — including the
     side tables, which the fold publishes through the build's own
     writers: the docs table rewrites only the doc buckets holding a
-    new/retired doc (:func:`sink.write_docs`), and tstats df is
-    re-derived only for touched term buckets (:func:`sink.
-    refresh_side_tables`, bounded under crash replays by the
-    ``_fold_txn.json`` journal); meta's N/avgdl is one scalar scan over
-    the docs table's doclen column. New-term buckets come straight from
-    the new postings; retired-doc buckets need one doc-stream-only
+    new/retired doc (:func:`sink.write_docs`), and meta's N/avgdl is
+    one scalar scan over the docs table's doclen column
+    (:func:`sink.refresh_side_tables`); df is not stored, so the
+    re-encoded blocks are all it needs. New-term buckets come straight
+    from the new postings; retired-doc buckets need one doc-stream-only
     discovery pass (:func:`decode_block_doc_ids`) that projects ONLY
     term + doc_bytes — the tf/dl/uf/position streams, which dominate
     block bytes, are column-pruned at the Parquet scan — filtered to the
@@ -529,22 +528,24 @@ def compact_into_index(
     ids themselves stay a distributed semi-join side, never a driver
     collect. The live winners are resolved once per fold (one docmap
     read and window shuffle, persisted); the new docs' postings are
-    read from the pending commits only, and their doclen is Σ tf of
-    those same postings — the store keeps no second copy of it. The new
-    postings get the build's stem channel and doclen join
-    (:func:`sink.encoder_input`), and the re-encode and publish is
-    the build's own routine (:func:`sink.publish_buckets`). The fold
+    read from the pending commits only, once (persisted), and their
+    doclen is Σ tf of those same postings — the store keeps no second
+    copy of it. The new postings get the build's stem channel and
+    doclen join (:func:`sink.encoder_input`), and the re-encode and
+    publish is the build's own routine (:func:`sink.publish_buckets`). The fold
     reads the index only through ``sink`` and knows nothing of its
     on-disk layout: its own logic is the winners, retired-doc discovery,
-    the touched-bucket set and the journal.
+    the touched-bucket set and the journal, which bounds a crash
+    replay's re-publish to the buckets an attempt may have swapped.
 
     Stats handling: touched buckets are re-encoded with the index's
     ORIGINAL ``encoded_avgdl`` so untouched buckets stay byte-stable,
-    while meta N/avgdl (and tstats df) advance to the post-compaction
-    corpus — queries score EXACTLY like a from-scratch rebuild (scoring
-    decodes true tf/doclen and uses current N/avgdl/df); only the stored
-    max_wtf bounds lag, which the query path covers with the safe
-    max(1, avgdl/encoded_avgdl) scale (query._bm25_topk).
+    while meta N/avgdl (and the block-derived df) advance to the
+    post-compaction corpus — queries score EXACTLY like a from-scratch
+    rebuild (scoring decodes true tf/doclen and uses current
+    N/avgdl/df); only the stored max_wtf bounds lag, which the query
+    path covers with the safe max(1, avgdl/encoded_avgdl) scale
+    (query._bm25_topk).
 
     Idempotent/crash-safe on one POSIX filesystem (same deployment
     requirement as the store protocol, see incremental_index_stream):
@@ -576,8 +577,8 @@ def compact_into_index(
     n_buckets = int(meta["n_buckets"])
     # fold journal of a PREVIOUS attempt that crashed mid-fold: its
     # touched buckets may already be swapped, so this run re-publishes
-    # them and its side-table refresh covers them too. An unreadable
-    # journal leaves that set unknown, so every bucket counts as touched.
+    # them. An unreadable journal leaves that set unknown, so every
+    # bucket counts as touched.
     prev_touched = _read_fold_txn(root)
     if prev_touched == "unknown":
         prev_touched = set(range(n_buckets))
@@ -617,9 +618,9 @@ def compact_into_index(
         _committed_postings(spark, store_dir)
         .where(F.col("commit_id").isin(pending))
         .join(new_ids, "doc_id", "left_semi")
+        .select("doc_id", "term", "tf", "positions", "uf")
     )
     new_dl = new_postings.groupBy("doc_id").agg(F.sum("tf").cast("int").alias("doclen"))
-    new_p_q = encoder_input(new_postings, new_dl, n_shards, n_buckets)
     # retired: the index's version of a (repo, path) the stream
     # superseded. It never reaches the driver as rows: only its
     # ≤ n_shards distinct shard values collect (bucket-pruning
@@ -630,11 +631,18 @@ def compact_into_index(
         .where(F.col("d.doc_id") != F.col("w.doc_id"))
         .select(F.col("d.doc_id").alias("doc_id"))
     )
-    # each is read more than once (winners: fold set and retired;
-    # new postings: touched set and re-encode; retired: shard probe,
-    # hit-term semi-join, docs anti-join) — persisted, winners first so
-    # the other two read it from the cache
-    with persisted(winners), persisted(new_p_q) as new_p, persisted(retired_q) as retired:
+    # each is read more than once (winners: fold set and retired; new
+    # postings: doclen, stem vocab, raw and stem channels; encoder input:
+    # touched set and re-encode; retired: shard probe, hit-term
+    # semi-join, docs anti-join) — persisted in this order, so each reads
+    # the ones before it from the cache (encoder_input's eager stem vocab
+    # included)
+    with (
+        persisted(winners),
+        persisted(new_postings),
+        persisted(encoder_input(new_postings, new_dl, n_shards, n_buckets)) as new_p,
+        persisted(retired_q) as retired,
+    ):
         # touched buckets: new terms' buckets + buckets holding retired docs
         touched = {int(r["bucket"]) for r in new_p.select("bucket").distinct().collect()}
         n_retired = retired.count()
@@ -659,17 +667,15 @@ def compact_into_index(
         if not touched_l and n_new == 0:
             # Nothing to re-encode — either a genuinely empty fold set, or
             # a REPLAY of a fold that crashed after the bucket/docs swaps
-            # but before the side-table rewrite (then the anti-join above
-            # sees the already-updated docs table and the fold set reads
-            # empty). The replay case leaves tstats/meta stale unless
+            # but before the meta rewrite (then the anti-join above sees
+            # the already-updated docs table and the fold set reads
+            # empty). The replay case leaves meta N/avgdl stale unless
             # refreshed here, and the two cases are not cheaply
-            # distinguishable — so this branch ALWAYS refreshes the side
-            # tables before marking folded (idempotent: recomputing from
-            # committed blocks + docs is a no-op when they were already
-            # consistent). The crashed attempt's journal bounds the
-            # refresh to ITS touched buckets; no journal (pre-journal
-            # crash, or a genuinely empty fold set) → full.
-            refresh_side_tables(spark, root, meta, touched=prev_touched)
+            # distinguishable — so this branch ALWAYS refreshes meta
+            # before marking folded (idempotent: recomputing from the
+            # committed docs table is a no-op when it was already
+            # consistent).
+            refresh_side_tables(spark, root, meta)
             _mark_folded(store_dir, pending)
             _clear_fold_txn(root)
             return {"status": "folded_empty", "touched_buckets": [],
@@ -679,8 +685,7 @@ def compact_into_index(
         # re-publish every bucket ANY attempt may have swapped — a bucket
         # only a retired doc touched holds no fold-set posting once
         # swapped, so this run alone would not see it, yet its manifest
-        # may predate the swap — and refresh the side tables over the
-        # same set.
+        # may predate the swap.
         touched_l = sorted(touched | (prev_touched or set()))
         _write_fold_txn(root, touched_l, pending)
 
@@ -714,7 +719,7 @@ def compact_into_index(
             ),
             drop=retired,
         )
-        refresh_side_tables(spark, root, meta, touched=touched_l)
+        refresh_side_tables(spark, root, meta)
         _mark_folded(store_dir, pending)
         _clear_fold_txn(root)
     return {

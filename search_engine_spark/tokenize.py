@@ -31,7 +31,7 @@ def _token_array(content_col, truncate: bool = True):
     """Filtered token array: empties, overlong tokens and skip-words are
     removed ON THE ARRAY (before any explode), so downstream positions are
     contiguous 1..n over the SURVIVING stream — doclen == max position ==
-    count, the identity doc_stats_from_postings relies on."""
+    count."""
     norm = F.lower(F.substring(content_col, 1, C.MAX_PAGE_LEN)) if truncate else F.lower(content_col)
     toks = F.split(norm, C.TOKEN_SPLIT_RE)
     skips = F.array(*[F.lit(w) for w in sorted(C.SKIP_WORDS)])

@@ -277,21 +277,16 @@ def test_compact_replay_after_partial_crash(spark, tmp_path):
 
 def test_compact_replay_after_docs_swap_crash(spark, tmp_path):
     """The LATE crash window: buckets AND the docs table are swapped but
-    the crash hit before the tstats/meta rewrite and the fold markers.
-    The replay then sees an empty fold set (the anti-join runs against
-    the already-updated docs table) and takes the nothing-to-re-encode
-    path — which must still refresh tstats/meta before marking folded,
-    or df/N/avgdl stay pre-fold forever and BM25 silently diverges from
-    a rebuild."""
-    import json
+    the crash hit before the meta rewrite and the fold markers. The
+    replay then sees an empty fold set (the anti-join runs against the
+    already-updated docs table) and takes the nothing-to-re-encode path
+    — which must still refresh meta before marking folded, or N/avgdl
+    stay pre-fold forever and BM25 silently diverges from a rebuild."""
     import shutil
 
     batch = _mk(spark, _NARROW)
     sink = IndexSink(str(tmp_path / "idx"), n_buckets=8)
     sink.build(batch, url_cols=None)
-    tstats_dir = os.path.join(sink.root, "tstats")
-    tstats_backup = str(tmp_path / "tstats_pre")
-    shutil.copytree(tstats_dir, tstats_backup)
     meta_backup = open(os.path.join(sink.root, "meta.json")).read()
 
     corpus_dir = str(tmp_path / "in")
@@ -304,10 +299,8 @@ def test_compact_replay_after_docs_swap_crash(spark, tmp_path):
 
     assert compact_into_index(spark, sink, store)["status"] == "compacted"
 
-    # rewind to the crash point: blocks + docs are post-fold, tstats and
-    # meta are pre-fold, no fold markers
-    shutil.rmtree(tstats_dir)
-    shutil.copytree(tstats_backup, tstats_dir)
+    # rewind to the crash point: blocks + docs are post-fold, meta is
+    # pre-fold, no fold markers
     with open(os.path.join(sink.root, "meta.json"), "w") as fh:
         fh.write(meta_backup)
     shutil.rmtree(os.path.join(store, "_folded"))
@@ -315,7 +308,7 @@ def test_compact_replay_after_docs_swap_crash(spark, tmp_path):
     res = compact_into_index(spark, sink, store)
     assert res["status"] == "folded_empty"  # nothing left to re-encode...
 
-    # ...but the side tables must now equal a from-scratch rebuild
+    # ...but meta and df must now equal a from-scratch rebuild
     final = (
         batch.join(
             _mk(spark, _CHANGED_V2).select("repo", "path"),
@@ -369,8 +362,7 @@ def test_docs_dbucket_incremental_rewrite(spark, tmp_path):
     """The docs metadata table is dbucket-partitioned and a fold rewrites
     ONLY the dbuckets holding a new or retired doc (the round-4 closure of
     the full-docs-rewrite O(index) fold term) — every other dbucket dir is
-    byte-identical. And tstats after the (journal-bounded) incremental
-    refresh exactly equals a full recompute from the committed blocks."""
+    byte-identical."""
     batch = generate_corpus(spark, 60).unionByName(_mk(spark, _NARROW)).cache()
     batch.count()
     sink = IndexSink(str(tmp_path / "idx"), n_buckets=N_BUCKETS)
@@ -411,61 +403,23 @@ def test_docs_dbucket_incremental_rewrite(spark, tmp_path):
     assert len(untouched) >= n_db // 2  # the claim is actually exercised
     for db in untouched:
         assert post[db] == pre[db], f"untouched dbucket {db} changed"
-
-    # tstats (incremental refresh) ≡ full recompute from committed blocks
-    blocks, tstats, _d, _m = sink.read(spark)
-    full = {
-        (r["term"], r["df"])
-        for r in blocks.groupBy("term")
-        .agg(F.sum("n").cast("long").alias("df"))
-        .collect()
-    }
-    assert {(r["term"], r["df"]) for r in tstats.collect()} == full
     batch.unpersist()
 
 
-def _poison_tstats_row(spark, root, term, df_val):
-    """Rewrite one term's df to a sentinel — a tracer for whether a
-    side-table refresh recomputed that term's bucket or kept it."""
-    import shutil
-
-    tdir = os.path.join(root, "tstats")
-    cur = spark.read.parquet(tdir)
-    poisoned = cur.withColumn(
-        "df",
-        F.when(F.col("term") == term, F.lit(df_val).cast("long")).otherwise(
-            F.col("df")
-        ),
-    )
-    tmp = tdir + ".poison"
-    poisoned.write.parquet(tmp)
-    shutil.rmtree(tdir)
-    os.rename(tmp, tdir)
-
-
 def test_fold_journal_bounds_replay_refresh(spark, tmp_path):
-    """Crash window: blocks + docs swapped, journal present, tstats/meta
-    pre-fold. The replay takes the folded_empty path and its side-table
-    refresh must be BOUNDED by the journal's touched set (delta cost),
-    while still converging df/N/avgdl to the rebuild values. The bound is
-    proven with a tracer: a poisoned df on an UNTOUCHED bucket's term
-    survives the replay (kept, not recomputed); touched buckets match the
-    rebuild exactly."""
+    """Crash window: blocks + docs swapped, journal present, meta
+    pre-fold. The replay takes the folded_empty path, converges N/avgdl
+    to the post-fold values and clears the journal."""
     import json
     import shutil
 
-    from search_engine_spark.sink import term_bucket_py
     from search_engine_spark.streaming.jobs import _read_fold_txn, _write_fold_txn
 
     batch = generate_corpus(spark, 60).unionByName(_mk(spark, _NARROW)).cache()
     batch.count()
     sink = IndexSink(str(tmp_path / "idx"), n_buckets=N_BUCKETS)
     sink.build(batch, url_cols=None)
-    tstats_dir = os.path.join(sink.root, "tstats")
-    tstats_backup = str(tmp_path / "tstats_pre")
-    shutil.copytree(tstats_dir, tstats_backup)
     meta_backup = open(os.path.join(sink.root, "meta.json")).read()
-    pre_terms = [r["term"] for r in spark.read.parquet(tstats_dir).collect()]
 
     store, res = _stream_and_fold(spark, tmp_path, sink, _CHANGED_V2 + _NEW)
     assert res["status"] == "compacted"
@@ -473,38 +427,15 @@ def test_fold_journal_bounds_replay_refresh(spark, tmp_path):
     assert _read_fold_txn(sink.root) is None  # clean fold clears the journal
 
     # rewind to the crash point, with the journal the crash would leave
-    shutil.rmtree(tstats_dir)
-    shutil.copytree(tstats_backup, tstats_dir)
     with open(os.path.join(sink.root, "meta.json"), "w") as fh:
         fh.write(meta_backup)
     shutil.rmtree(os.path.join(store, "_folded"))
     _write_fold_txn(sink.root, touched, res["folded"])
 
-    tracer = next(
-        t for t in pre_terms if term_bucket_py(t, N_BUCKETS) not in touched
-    )
-    _poison_tstats_row(spark, sink.root, tracer, 424242)
-
     res2 = compact_into_index(spark, sink, store)
     assert res2["status"] == "folded_empty"
     assert _read_fold_txn(sink.root) is None  # replay cleared it
 
-    got = {(r["term"], r["df"]) for r in spark.read.parquet(tstats_dir).collect()}
-    assert (tracer, 424242) in got, (
-        "tracer on an untouched bucket was recomputed — the replay refresh "
-        "is NOT bounded by the journal (O(index) fold cost regression)"
-    )
-    # every touched-bucket term matches a full recompute from blocks
-    blocks, _t, _d, meta = sink.read(spark)
-    full = {
-        (r["term"], r["df"])
-        for r in blocks.groupBy("term")
-        .agg(F.sum("n").cast("long").alias("df"))
-        .collect()
-    }
-    assert {(t, d) for (t, d) in got if term_bucket_py(t, N_BUCKETS) in touched} == {
-        (t, d) for (t, d) in full if term_bucket_py(t, N_BUCKETS) in touched
-    }
     # N/avgdl advanced to post-fold truth despite the rewound meta
     meta_now = json.load(open(os.path.join(sink.root, "meta.json")))
     docs_now = spark.read.parquet(os.path.join(sink.root, "docs"))
@@ -515,10 +446,9 @@ def test_fold_journal_bounds_replay_refresh(spark, tmp_path):
 
 
 def test_corrupt_fold_journal_forces_full_refresh(spark, tmp_path):
-    """An unreadable journal means the crashed attempt's touched set is
-    unknown — the replay must fall back to a FULL side-table recompute
-    (fail-wide): the tracer poison is scrubbed everywhere and tstats
-    equals the from-blocks truth exactly."""
+    """An unreadable journal leaves the crashed attempt's touched set
+    unknown; the replay must still converge (fail-wide) — meta refreshed,
+    journal cleared, every query served."""
     import shutil
 
     from search_engine_spark.streaming.jobs import _fold_txn_path, _read_fold_txn
@@ -526,36 +456,23 @@ def test_corrupt_fold_journal_forces_full_refresh(spark, tmp_path):
     batch = _mk(spark, _NARROW)
     sink = IndexSink(str(tmp_path / "idx"), n_buckets=8)
     sink.build(batch, url_cols=None)
-    tstats_dir = os.path.join(sink.root, "tstats")
     meta_backup = open(os.path.join(sink.root, "meta.json")).read()
-    tstats_backup = str(tmp_path / "tstats_pre")
-    shutil.copytree(tstats_dir, tstats_backup)
 
     store, res = _stream_and_fold(spark, tmp_path, sink, _CHANGED_V2 + _NEW)
     assert res["status"] == "compacted"
+    folded_meta = sink._meta()
 
-    shutil.rmtree(tstats_dir)
-    shutil.copytree(tstats_backup, tstats_dir)
     with open(os.path.join(sink.root, "meta.json"), "w") as fh:
         fh.write(meta_backup)
     shutil.rmtree(os.path.join(store, "_folded"))
     with open(_fold_txn_path(sink.root), "w") as fh:
         fh.write("{not json")
-    _poison_tstats_row(spark, sink.root, "komodo", 424242)
 
     res2 = compact_into_index(spark, sink, store)
     assert res2["status"] == "folded_empty"
-    assert _read_fold_txn(sink.root) is None  # cleared after the full refresh
-
-    blocks, tstats, _d, _m = sink.read(spark)
-    full = {
-        (r["term"], r["df"])
-        for r in blocks.groupBy("term")
-        .agg(F.sum("n").cast("long").alias("df"))
-        .collect()
-    }
-    got = {(r["term"], r["df"]) for r in tstats.collect()}
-    assert got == full  # poison scrubbed, no stale rows
+    assert _read_fold_txn(sink.root) is None  # cleared after the replay
+    meta = sink._meta()
+    assert (meta["N"], meta["avgdl"]) == (folded_meta["N"], folded_meta["avgdl"])
     for qs in QUERIES:
         assert _topk(spark, sink, qs)  # index still serves
 

@@ -9,8 +9,8 @@ swap's roll-back). Spark's cache is cleared after the crash, as a dead
 driver's would be. Recovery is simply re-running the same operation,
 after which the index must verify against its manifests, decode to
 exactly a clean run's postings and answer every query bit-identically
-to a clean run. The Spark jobs of the clean fold and store compaction
-are counted too, each against its own budget.
+to a clean run. The Spark jobs of the clean build, fold and store
+compaction are counted too, each against its own budget.
 
 The index is small (2 term buckets, 1 doc bucket) so the whole matrix
 stays cheap; the fixture is built once and copied per crash point.
@@ -84,19 +84,6 @@ def _index_view(spark, sink: IndexSink):
     return _decoded_content(spark, sink), {q: _topk(spark, sink, q) for q in QUERIES}
 
 
-@pytest.fixture(scope="module")
-def pristine(spark, tmp_path_factory):
-    """Built index + an ingested, unfolded store holding new and changed
-    docs (so the fold both adds and retires)."""
-    base = str(tmp_path_factory.mktemp("crash") / "pristine")
-    _sink(base).build(_mk(spark, _NARROW), url_cols=None)
-    corpus_dir = os.path.join(base, "in")
-    _mk(spark, _CHANGED_V2 + _NEW).coalesce(1).write.parquet(corpus_dir)
-    q = incremental_index_stream(spark, corpus_dir, _store(base), os.path.join(base, "ck"))
-    assert q.awaitTermination(120)
-    return base
-
-
 def _spark_jobs(spark, group: str, run) -> int:
     """Run ``run`` inside its own job group; the number of Spark jobs it
     started."""
@@ -111,12 +98,35 @@ def _spark_jobs(spark, group: str, run) -> int:
 
 
 @pytest.fixture(scope="module")
-def clean(spark, pristine, tmp_path_factory):
+def built(spark, tmp_path_factory):
+    """A clean build of the index, and the Spark jobs it ran."""
+    base = str(tmp_path_factory.mktemp("crash") / "pristine")
+    jobs = _spark_jobs(
+        spark, "crash-matrix-clean-build",
+        lambda: _sink(base).build(_mk(spark, _NARROW), url_cols=None),
+    )
+    return base, jobs
+
+
+@pytest.fixture(scope="module")
+def pristine(spark, built):
+    """Built index + an ingested, unfolded store holding new and changed
+    docs (so the fold both adds and retires)."""
+    base = built[0]
+    corpus_dir = os.path.join(base, "in")
+    _mk(spark, _CHANGED_V2 + _NEW).coalesce(1).write.parquet(corpus_dir)
+    q = incremental_index_stream(spark, corpus_dir, _store(base), os.path.join(base, "ck"))
+    assert q.awaitTermination(120)
+    return base
+
+
+@pytest.fixture(scope="module")
+def clean(spark, built, pristine, tmp_path_factory):
     """Rename and Spark job counts of clean runs, and the states they
     leave."""
     base = _copy(pristine, str(tmp_path_factory.mktemp("crash") / "clean"))
     sink = _sink(base)
-    out = {}
+    out = {"build_jobs": built[1]}
     for op, run in (
         ("store", lambda: compact_store(spark, _store(base))),
         ("fold", lambda: compact_into_index(spark, sink, _store(base))),
@@ -132,11 +142,11 @@ def clean(spark, pristine, tmp_path_factory):
     return out
 
 
-# Spark jobs of the clean fixture's runs (store compaction before the
-# fold, then the fold), each pinned at the largest count seen over
-# repeated runs: a job the write path starts without need shows up as a
-# count above its budget.
-_JOB_BUDGET = {"store": 23, "fold": 59}
+# Spark jobs of the clean runs (the fixture's build, then store
+# compaction before the fold, then the fold), each pinned at the largest
+# count seen over repeated runs: a job the write path starts without
+# need shows up as a count above its budget.
+_JOB_BUDGET = {"build": 21, "store": 23, "fold": 49}
 
 
 def test_write_path_job_budget(clean):
@@ -155,7 +165,7 @@ def _crash_then_rerun(spark, run, at: int) -> None:
 
 def test_fold_crash_at_every_rename(spark, pristine, clean, tmp_path):
     n = clean["fold_renames"]
-    assert n >= 10  # journal, 2 bucket swaps + manifests, docs, tstats, meta
+    assert n >= 10  # journal, 2 bucket swaps + manifests, docs, meta
     for at in range(1, n + 1):
         base = _copy(pristine, str(tmp_path / f"fold{at}"))
         sink = _sink(base)
@@ -200,7 +210,7 @@ def test_build_crash_at_every_rename(spark, tmp_path):
         m.setattr(fsutil, "_rename", counter)
         _build(spark, sink)
     n, want = counter.calls, _build_view(spark, sink)
-    assert n == 8  # layout, docs, 2 bucket swaps + manifests, tstats, meta
+    assert n == 7  # layout, docs, 2 bucket swaps + manifests, meta
     for at in range(1, n + 1):
         sink = _sink(str(tmp_path / f"build{at}"))
         _crash_then_rerun(spark, lambda: _build(spark, sink), at)

@@ -452,3 +452,7 @@ def test_meta_roundtrip(built):
     assert meta["n_buckets"] == N_BUCKETS
     assert meta["N"] == 200 and meta["avgdl"] > 0
     assert meta["bm25_k1"] == C.BM25_K1 and meta["bm25_b"] == C.BM25_B
+    # the build's layer timings, read by name by perfbench (--trace 1)
+    assert set(meta["phase_timings_s"]) == {
+        "doc_stats", "encode_write", "lineage_readback", "encode_commit", "side_tables",
+    }

@@ -112,25 +112,6 @@ def _group(rows):
     return g.items()
 
 
-def test_doc_stats_from_postings_equals_raw_count(spark, corpus):
-    """doclen recovered as max position over combined (raw+stem) postings
-    must equal the raw-token count — the identity doc_stats_from_postings
-    relies on (stemmed rows copy raw positions, never extend them)."""
-    from search_engine_spark.index import (
-        build_index_frames,
-        doc_stats,
-        doc_stats_from_postings,
-    )
-    from search_engine_spark.tokenize import tokenize
-
-    tokens, postings, dstats, tstats = build_index_frames(corpus)
-    via_postings = {
-        r["doc_id"]: r["doclen"] for r in doc_stats_from_postings(postings).collect()
-    }
-    via_raw = {r["doc_id"]: r["doclen"] for r in doc_stats(tokenize(corpus)).collect()}
-    assert via_postings == via_raw
-
-
 def test_stem_udf_stays_on_distinct_vocab(spark, corpus):
     """Regression: Catalyst's PushDownPredicates treats a downstream
     ``stem != term`` filter as a deterministic predicate on the grouping
