@@ -422,17 +422,22 @@ def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tokenize(_read(spark, sf_dir, "documents"), content_col="text", id_col="doc_id")
 
 
+def _doc_index(spark: SparkSession, sf_dir: str):
+    """The registry's raw index recipe over the documents table:
+    (tokens, postings, doc stats, term stats, N, avgdl)."""
+    toks = _doc_tokens(spark, sf_dir)
+    postings = doc_postings(toks)
+    dstats = doc_stats(toks)
+    return (toks, postings, dstats, term_stats(postings), *corpus_stats(dstats))
+
+
 # ---------------------------------------------------------------------------
 # flagship
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: tokenize sf0.001 documents → postings → BM25 top-k."""
-    toks = _doc_tokens(spark, SF_DEFAULT)
-    postings = doc_postings(toks)
-    dstats = doc_stats(toks)
-    tstats = term_stats(postings)
-    N, avgdl = corpus_stats(dstats)
+    _, postings, dstats, tstats, N, avgdl = _doc_index(spark, SF_DEFAULT)
     return bm25_score_terms(postings, dstats, tstats, N, avgdl, BM25_TERMS, 1.0, C.TOP_K)
 
 
@@ -462,11 +467,7 @@ def q_term_stats(spark, sf_dir):
 
 
 def q_bm25_topk(spark, sf_dir):
-    toks = _doc_tokens(spark, sf_dir)
-    postings = doc_postings(toks)
-    dstats = doc_stats(toks)
-    tstats = term_stats(postings)
-    N, avgdl = corpus_stats(dstats)
+    _, postings, dstats, tstats, N, avgdl = _doc_index(spark, sf_dir)
     top = bm25_score_terms(postings, dstats, tstats, N, avgdl, BM25_TERMS, 1.0, C.TOP_K)
     return top.select("doc_id", F.round("score", 6).alias("score"))
 
@@ -508,11 +509,7 @@ def q_bm25_batch(spark, sf_dir):
     from search_engine_spark.index import build_block_index
     from search_engine_spark.query import bm25_topk_batch
 
-    toks = _doc_tokens(spark, sf_dir)
-    postings = doc_postings(toks)
-    dstats = doc_stats(toks)
-    tstats = term_stats(postings)
-    N, avgdl = corpus_stats(dstats)
+    _, postings, dstats, tstats, N, avgdl = _doc_index(spark, sf_dir)
     blocks = build_block_index(postings, dstats, avgdl)
     out = bm25_topk_batch(blocks, tstats, N, avgdl, dict(BM25_BATCH_QUERIES), k=C.TOP_K)
     return out.select(
@@ -539,10 +536,7 @@ def q_block_decode_roundtrip(spark, sf_dir):
     from search_engine_spark.index import build_block_index
     from search_engine_spark.streaming import decode_block_postings
 
-    toks = _doc_tokens(spark, sf_dir)
-    postings = doc_postings(toks)
-    dstats = doc_stats(toks)
-    _N, avgdl = corpus_stats(dstats)
+    _, postings, dstats, _tstats, _N, avgdl = _doc_index(spark, sf_dir)
     blocks = build_block_index(postings, dstats, avgdl)
     return decode_block_postings(blocks).select(
         "doc_id",
@@ -571,11 +565,7 @@ def q_phrase_topk_blocks(spark, sf_dir):
     from search_engine_spark.index import build_block_index
     from search_engine_spark.query import phrase_topk_blocks
 
-    toks = _doc_tokens(spark, sf_dir)
-    postings = doc_postings(toks)
-    dstats = doc_stats(toks)
-    tstats = term_stats(postings)
-    N, avgdl = corpus_stats(dstats)
+    _, postings, dstats, tstats, N, avgdl = _doc_index(spark, sf_dir)
     blocks = build_block_index(postings, dstats, avgdl)
     out = phrase_topk_blocks(blocks, tstats, N, avgdl, terms=PHRASE_BLOCK_TERMS, k=C.TOP_K)
     return out.select(
@@ -1157,11 +1147,7 @@ def q_bm25_conjunctive(spark, sf_dir):
     # RankerCharles.java:161-164) — only docs containing every term score
     from search_engine_spark.query import bm25_conjunctive_topk
 
-    toks = _doc_tokens(spark, sf_dir)
-    postings = doc_postings(toks)
-    dstats = doc_stats(toks)
-    tstats = term_stats(postings)
-    N, avgdl = corpus_stats(dstats)
+    _, postings, dstats, tstats, N, avgdl = _doc_index(spark, sf_dir)
     top = bm25_conjunctive_topk(postings, dstats, tstats, N, avgdl, BM25_TERMS, C.TOP_K)
     return top.select("doc_id", F.round("score", 6).alias("score"))
 
@@ -1238,11 +1224,7 @@ def q_search_results(spark, sf_dir):
     # the document's token stream. Window reconstruction touches only
     # the 25 ranked docs (broadcast semi-join before the token scan);
     # the ranked side stays broadcast throughout.
-    toks = _doc_tokens(spark, sf_dir)
-    postings = doc_postings(toks)
-    dstats = doc_stats(toks)
-    tstats = term_stats(postings)
-    N, avgdl = corpus_stats(dstats)
+    toks, postings, dstats, tstats, N, avgdl = _doc_index(spark, sf_dir)
     top = bm25_score_terms(postings, dstats, tstats, N, avgdl, BM25_TERMS, 1.0, 25)
     w = W.orderBy(F.desc("score"), F.asc("doc_id"))
     ranked = top.withColumn("rank", F.row_number().over(w).cast("long"))
@@ -1308,11 +1290,7 @@ def q_bm25_pagerank_blend(spark, sf_dir):
     from search_engine_spark.ops.pagerank import pagerank
     from search_engine_spark.query import blend_with_pagerank
 
-    toks = _doc_tokens(spark, sf_dir)
-    postings = doc_postings(toks)
-    dstats = doc_stats(toks)
-    tstats = term_stats(postings)
-    N, avgdl = corpus_stats(dstats)
+    _, postings, dstats, tstats, N, avgdl = _doc_index(spark, sf_dir)
     top = bm25_score_terms(postings, dstats, tstats, N, avgdl, BM25_TERMS, 1.0, C.TOP_K)
     pr = pagerank(_doc_edges(spark, sf_dir), fixed_iters=3, checkpoint=False)
     blended = blend_with_pagerank(top, pr, k=C.TOP_K)

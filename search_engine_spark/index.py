@@ -1,16 +1,21 @@
 """Inverted-index construction.
 
-Pipeline (all lazy DataFrame ops until the sink writes):
+Pipeline of the one index build, ``sink.IndexSink.build`` (all lazy
+DataFrame ops until the sink writes):
 
   corpus(repo,path,commit,lang,content)
     → with_doc_id (doc_id = xxhash64, content_sha invariant)
     → tokenize / tokenize_url (narrow, codegen)       [tokenize.py]
-    → doc_postings: groupBy(doc_id, term)             [1 shuffle, partial agg]
-    → doc_stats:    groupBy(doc_id)                   [reuses same exchange]
-    → stem channel at the posting level               [sink.encoder_input]
-    → term/shard postings: groupBy(term, shard)       [1 shuffle on (term,shard)]
-    → encode blocks (applyInPandas, Arrow)            [codec.py]
-    → sink partitioned by term_bucket                 [sink.py]
+    → doc_postings: groupBy(doc_id, term)             [1 shuffle, partial agg; cached]
+    → doclen = Σ tf per doc over the cached postings  [sink.py docs table]
+    → stem channel at the posting level, doclen join  [sink.encoder_input]
+    → repartition(bucket, shard % FILES_PER_BUCKET)   [1 shuffle, sink.publish_buckets]
+    → encode blocks (mapInPandas, Arrow)              [codec.py]
+    → write partitioned by term bucket                [sink.py]
+
+The generic registry entries and the unit tests build in-memory blocks
+from token-level postings with :func:`build_block_index` — the same
+encoder behind a plain (term, shard) exchange.
 
 Skew design: the reference concatenates all of a term's postings into one
 KVS cell via foldByKey (/root/reference/src/cis5550/jobs_archive/
@@ -84,9 +89,9 @@ def doc_stats_direct(
     """(doc_id) → doclen computed as size(filtered token array): one
     NARROW projection — no explode, no shuffle — and docs whose tokens are
     all filtered (empty/whitespace files) survive with doclen 0, so N and
-    avgdl agree with the oracle's whole-corpus accounting. This is the
-    scale path for build-time corpus stats. With ``url_cols``, doclen
-    counts the URL-injected stream (reference Indexer.java:236-238)."""
+    avgdl agree with the oracle's whole-corpus accounting. With
+    ``url_cols``, doclen counts the URL-injected stream (reference
+    Indexer.java:236-238)."""
     from .tokenize import _token_array, full_text_col
 
     arr = (
@@ -301,42 +306,3 @@ def build_block_index(
     )
     return ordered.mapInPandas(_encoder_stream(float(avgdl)), schema=INDEX_SCHEMA)
 
-
-def build_index_frames(
-    corpus_with_ids: DataFrame, url_cols: tuple[str, ...] | None = None
-):
-    """Convenience: corpus (with doc_id) → (tokens, postings, dstats,
-    tstats) lazy frames. Caller computes corpus_stats and the block index
-    when needed.
-
-    doclen is defined over the RAW token stream only — the stemmed channel
-    adds duplicate postings rows (Indexer.java:256 posts both forms) but
-    must not inflate document length, or BM25 length normalization drifts
-    from the oracle's.
-
-    With ``url_cols``, URL tokens are injected into the stream
-    (Indexer.java:236-238) and postings carry the uf bonus flag
-    (Search.java:98) — doclen/tf/N then count the combined stream.
-    """
-    from .tokenize import stem_vocab, tokenize, tokenize_url
-
-    raw_tokens = (
-        tokenize_url(corpus_with_ids, url_cols) if url_cols else tokenize(corpus_with_ids)
-    )
-    vocab = stem_vocab(raw_tokens)
-    # stem-channel rows copy raw positions AND the is_url marker, so the
-    # uf aggregation covers {component} ∪ {stem(component)}
-    extra = ["is_url"] if url_cols else []
-    stemmed = (
-        raw_tokens.join(F.broadcast(vocab), "term")
-        .where(F.col("stem") != F.col("term"))
-        .select("doc_id", F.col("stem").alias("term"), "pos", *extra)
-    )
-    tokens = raw_tokens.unionByName(stemmed)
-    postings = doc_postings(tokens)
-    # narrow size()-projection over the corpus: keeps empty docs (doclen
-    # 0) in N/avgdl and costs no shuffle — cheaper than deriving from
-    # postings and correct where that is not (all-tokens-filtered docs)
-    dstats = doc_stats_direct(corpus_with_ids, url_cols=url_cols)
-    tstats = term_stats(postings)
-    return tokens, postings, dstats, tstats

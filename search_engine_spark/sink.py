@@ -13,10 +13,10 @@ Iceberg-style *per-partition commit protocol*:
     commit, resume, lineage and metrics.  At 100 TB, raise ``n_buckets``
     into the thousands; the protocol is unchanged.
   - Buckets are written in **waves** (``buckets_per_wave`` per Spark job)
-    from one cached enriched-postings frame: each wave filters its
-    buckets, encodes blocks (index.build_block_index plan), writes to a
-    temp dir, atomically swaps each ``bucket=NN`` directory into the
-    final layout, and only then writes that bucket's manifest entry
+    from one enriched-postings frame (:func:`encoder_input`): each wave
+    filters its buckets, encodes blocks, writes to a temp dir,
+    atomically swaps each ``bucket=NN`` directory into the final
+    layout, and only then writes that bucket's manifest entry
     (:func:`publish_buckets`; the rename protocol is ``fsutil``'s).
   - A manifest entry is one JSON file ``_manifest/bucket_NNNNN.json``
     carrying status, row/block/byte counts, wall_ms, and a
@@ -33,7 +33,8 @@ Iceberg-style *per-partition commit protocol*:
   - **One index writer**: the build and the fold
     (``streaming.compact_into_index``) share every table writer here —
     :func:`encoder_input`, :func:`publish_buckets`, :func:`write_docs`,
-    :func:`refresh_side_tables`.
+    :func:`refresh_side_tables` — and every blocks read goes through
+    :func:`read_blocks`.
   - **One copy of each fact**: df(term) is not stored. Each block row
     covers ``n`` postings = ``n`` distinct docs of its term, so
     :func:`term_df` derives df from the committed blocks' ``n`` column
@@ -208,16 +209,23 @@ def _add_time(phase_t: dict, key: str, t0: float) -> None:
     phase_t[key] = phase_t.get(key, 0.0) + (time.perf_counter() - t0)
 
 
+@contextmanager
 def encoder_input(
     postings: DataFrame,
     doclen: DataFrame,
     n_shards: int,
     n_buckets: int,
     broadcast_doclen: bool = True,
-) -> DataFrame:
+):
     """Raw-channel postings (doc_id, term, tf, positions, uf) → the rows
     :func:`publish_buckets` encodes: stem channel added at the POSTING
     level, doclen joined, shard and bucket assigned.
+
+    A context manager because it owns the stem vocabulary's local
+    checkpoint (:func:`tokenize.stem_vocab`): the block's exit releases
+    it, however the block exits, instead of leaving it to Spark's
+    context cleaner. The yielded frame (and any cache of it) is
+    unreadable afterwards.
 
     Stems are computed over the distinct vocabulary only; renamed rows
     join back broadcast and COPY the raw row's uf (Search.java:149-163).
@@ -229,15 +237,20 @@ def encoder_input(
     from .tokenize import stem_vocab
 
     raw = postings.select("doc_id", "term", "tf", "positions", "uf")
-    vocab = stem_vocab(raw).where(F.col("stem") != F.col("term"))
-    stemmed = raw.join(F.broadcast(vocab), "term").select(
-        "doc_id", F.col("stem").alias("term"), "tf", "positions", "uf"
-    )
-    dl = doclen.select("doc_id", F.col("doclen").cast("smallint").alias("doclen"))
-    joined = raw.unionByName(stemmed).join(
-        F.broadcast(dl) if broadcast_doclen else dl, "doc_id"
-    )
-    return with_bucket(with_shard(joined, n_shards), n_buckets)
+    vocab = stem_vocab(raw)
+    try:
+        renames = vocab.where(F.col("stem") != F.col("term"))
+        stemmed = raw.join(F.broadcast(renames), "term").select(
+            "doc_id", F.col("stem").alias("term"), "tf", "positions", "uf"
+        )
+        dl = doclen.select("doc_id", F.col("doclen").cast("smallint").alias("doclen"))
+        joined = raw.unionByName(stemmed).join(
+            F.broadcast(dl) if broadcast_doclen else dl, "doc_id"
+        )
+        yield with_bucket(with_shard(joined, n_shards), n_buckets)
+    finally:
+        # the checkpoint is the RDD under the vocabulary's LogicalRDD
+        vocab._jdf.queryExecution().analyzed().rdd().unpersist(True)
 
 
 def publish_buckets(
@@ -282,12 +295,8 @@ def publish_buckets(
     encoded.write.partitionBy("bucket").mode("overwrite").parquet(tmp)
     _add_time(phase_t, "encode_write", t_w)
     t_l = time.perf_counter()
-    # explicit schema: an all-retired fold writes zero part files and
-    # schema inference would fail on the bare directory
     with _scan_conf(spark, str(128 << 20)):
-        stats = _bucket_lineage(
-            spark.read.schema(INDEX_SCHEMA + ", bucket int").parquet(tmp)
-        )
+        stats = _bucket_lineage(read_blocks(spark, tmp))
     _add_time(phase_t, "lineage_readback", t_l)
     wall_ms = int((time.perf_counter() - t0) * 1000)
     for b in buckets:
@@ -303,6 +312,18 @@ def publish_buckets(
             **stats.get(b, _EMPTY_STATS),
         })
     shutil.rmtree(tmp, ignore_errors=True)
+
+
+def read_blocks(spark: SparkSession, path: str) -> DataFrame:
+    """Block rows of a ``bucket=NN``-partitioned directory, read with the
+    declared schema: no footer-reading inference job, and a directory an
+    all-retired fold left without part files reads as empty. A missing
+    directory still raises."""
+    return (
+        spark.read.schema(INDEX_SCHEMA + ", bucket int")
+        .option("basePath", path)
+        .parquet(path)
+    )
 
 
 def term_df(blocks: DataFrame) -> DataFrame:
@@ -625,10 +646,6 @@ class IndexSink:
             phase_t["doc_stats"] = time.perf_counter() - t0
 
             if pending:
-                enriched = encoder_input(
-                    postings_raw, docs_tbl, n_shards, self.n_buckets,
-                    broadcast_doclen=N <= 5_000_000,
-                )
                 waves = [
                     pending[i : i + buckets_per_wave]
                     for i in range(0, len(pending), buckets_per_wave)
@@ -637,10 +654,16 @@ class IndexSink:
                 # a cache instead of re-joining; single wave: the cache
                 # write would cost more than it saves (postings are
                 # already cached)
-                if len(waves) > 1:
-                    enriched = enriched.persist()
-                    enriched.count()
-                try:
+                multi = len(waves) > 1
+                with (
+                    encoder_input(
+                        postings_raw, docs_tbl, n_shards, self.n_buckets,
+                        broadcast_doclen=N <= 5_000_000,
+                    ) as enriched,
+                    persisted(enriched) if multi else nullcontext(enriched) as enriched,
+                ):
+                    if multi:
+                        enriched.count()
                     t0 = time.perf_counter()
                     for wi, wave in enumerate(waves):
                         publish_buckets(
@@ -648,8 +671,6 @@ class IndexSink:
                             wave, self.n_buckets, avgdl, wi, phase_t,
                         )
                     phase_t["encode_commit"] = time.perf_counter() - t0
-                finally:
-                    enriched.unpersist()
 
         # meta is (re)written last, unconditionally; side_tables times
         # the meta step up to its write (the write carries the timings)
@@ -691,8 +712,7 @@ class IndexSink:
     # -- read path ----------------------------------------------------------
 
     def _blocks(self, spark: SparkSession) -> DataFrame:
-        path = os.path.join(self.root, "blocks")
-        return spark.read.option("basePath", path).parquet(path)
+        return read_blocks(spark, os.path.join(self.root, "blocks"))
 
     def _meta(self) -> dict:
         return read_json(os.path.join(self.root, "meta.json"))
@@ -761,7 +781,9 @@ class IndexSink:
         if corpus is not None and terms:
             # tokenize ONLY the k result docs (broadcast semi-join prunes
             # the scan); stems must match the index's term space, so the
-            # match test runs on the stemmed token
+            # match test runs on the stemmed token. The returned frame
+            # still reads this k-doc vocabulary, so its checkpoint is
+            # left to Spark's context cleaner.
             from .tokenize import stem_vocab
 
             hit_docs = with_doc_id(corpus).join(

@@ -636,11 +636,12 @@ def compact_into_index(
     # touched set and re-encode; retired: shard probe, hit-term
     # semi-join, docs anti-join) — persisted in this order, so each reads
     # the ones before it from the cache (encoder_input's eager stem vocab
-    # included)
+    # included); the vocab is released after the encoder input's cache
     with (
         persisted(winners),
         persisted(new_postings),
-        persisted(encoder_input(new_postings, new_dl, n_shards, n_buckets)) as new_p,
+        encoder_input(new_postings, new_dl, n_shards, n_buckets) as enc,
+        persisted(enc) as new_p,
         persisted(retired_q) as retired,
     ):
         # touched buckets: new terms' buckets + buckets holding retired docs

@@ -9,15 +9,17 @@ import pytest
 from pyspark.sql import functions as F
 
 from search_engine_spark import constants as C
-from search_engine_spark.index import build_index_frames, corpus_stats
+from search_engine_spark.index import corpus_stats, doc_postings, doc_stats, term_stats
 from search_engine_spark.ops.pagerank import pagerank
 from search_engine_spark.query import bm25_topk_df, blend_with_pagerank
+from search_engine_spark.tokenize import tokenize
 
 
 def test_blend_matches_python(spark, corpus):
-    tokens, postings, dstats, tstats = build_index_frames(corpus)
-    postings = postings.cache()
-    dstats = dstats.cache()
+    tokens = tokenize(corpus)
+    postings = doc_postings(tokens).cache()
+    dstats = doc_stats(tokens).cache()
+    tstats = term_stats(postings)
     N, avgdl = corpus_stats(dstats)
     top = bm25_topk_df(postings, dstats, tstats, N, avgdl, "import def", k=50)
 

@@ -146,7 +146,7 @@ def clean(spark, built, pristine, tmp_path_factory):
 # compaction before the fold, then the fold), each pinned at the largest
 # count seen over repeated runs: a job the write path starts without
 # need shows up as a count above its budget.
-_JOB_BUDGET = {"build": 21, "store": 23, "fold": 49}
+_JOB_BUDGET = {"build": 21, "store": 23, "fold": 48}
 
 
 def test_write_path_job_budget(clean):

@@ -89,11 +89,13 @@ def test_bm25_df_path_single_doc_shuffle(spark):
     """BM25 DataFrame path: idf/doclen ride broadcasts; the only
     exchanges are the doc_id score fold and the final top-k — the corpus
     postings are never joined by sort-merge."""
-    from search_engine_spark.index import build_index_frames, corpus_stats
+    from search_engine_spark.index import corpus_stats, doc_postings, doc_stats, term_stats
     from search_engine_spark.query import bm25_score_terms
+    from search_engine_spark.tokenize import tokenize
 
-    corpus = with_doc_id(generate_corpus(spark, 200))
-    _, postings, dstats, tstats = build_index_frames(corpus)
+    tokens = tokenize(with_doc_id(generate_corpus(spark, 200)))
+    postings, dstats = doc_postings(tokens), doc_stats(tokens)
+    tstats = term_stats(postings)
     N, avgdl = corpus_stats(dstats)
     df = bm25_score_terms(postings, dstats, tstats, N, avgdl, ["join", "scan"], 1.0, 10)
     plan = _plan(df)

@@ -2,26 +2,40 @@
 top-k (docIDs, ranks, float64 scores) must be BIT-IDENTICAL to the
 pure-Python oracle ranker on the reference query set, on both physical
 paths (uncompressed DataFrame and compressed block index with block-max
-pruning). k=200 per Search.java:25; tie-break (score DESC, doc_id ASC)."""
+pruning). k=200 per Search.java:25; tie-break (score DESC, doc_id ASC).
+
+Both engines check the index the engine ships: ``IndexSink.build``
+writes it, ``IndexSink.read`` opens it, and the DataFrame path scores
+its postings as decoded from the blocks."""
 
 import pytest
 
 from search_engine_spark import constants as C
 from search_engine_spark.corpus import reference_queries, with_doc_id
-from search_engine_spark.index import build_block_index, build_index_frames, corpus_stats
 from search_engine_spark.oracle import OracleIndex
 from search_engine_spark.query import bm25_topk_blocks, bm25_topk_df
+from search_engine_spark.sink import IndexSink
+from search_engine_spark.streaming import decode_block_postings
+
+RAW_COLS = ("repo", "path", "commit", "lang", "content")
+
+
+def _sink_engine(spark, root, corpus, url_cols):
+    """Build ``corpus`` with the production sink and open it: (postings
+    decoded from the blocks, doclen, df, blocks, N, avgdl)."""
+    sink = IndexSink(str(root), n_buckets=2, n_doc_buckets=1)
+    sink.build(corpus.select(*RAW_COLS), url_cols=url_cols)
+    blocks, tstats, dstats, meta = sink.read(spark)
+    blocks, tstats, dstats = blocks.cache(), tstats.cache(), dstats.cache()
+    postings = decode_block_postings(blocks).cache()
+    return postings, dstats, tstats, blocks, meta["N"], meta["avgdl"]
 
 
 @pytest.fixture(scope="module")
-def engine(spark, corpus):
-    tokens, postings, dstats, tstats = build_index_frames(corpus)
-    postings = postings.cache()
-    dstats = dstats.cache()
-    tstats = tstats.cache()
-    N, avgdl = corpus_stats(dstats)
-    index_df = build_block_index(postings, dstats, avgdl).cache()
-    index_df.count()
+def engine(spark, corpus, tmp_path_factory):
+    postings, dstats, tstats, index_df, N, avgdl = _sink_engine(
+        spark, tmp_path_factory.mktemp("rank") / "plain", corpus, None
+    )
     docs = [(r["doc_id"], r["content"]) for r in corpus.select("doc_id", "content").collect()]
     oi = OracleIndex(docs)
     assert oi.N == N and abs(oi.avgdl - avgdl) < 1e-12
@@ -56,20 +70,16 @@ EXTRA_DOCS = [
 
 
 @pytest.fixture(scope="module")
-def url_engine(spark, corpus):
+def url_engine(spark, corpus, tmp_path_factory):
     extra = with_doc_id(
         spark.createDataFrame(
             EXTRA_DOCS, "repo string, path string, commit string, lang string, content string"
         )
     )
     full = corpus.unionByName(extra)
-    tokens, postings, dstats, tstats = build_index_frames(full, url_cols=("repo", "path"))
-    postings = postings.cache()
-    dstats = dstats.cache()
-    tstats = tstats.cache()
-    N, avgdl = corpus_stats(dstats)
-    index_df = build_block_index(postings, dstats, avgdl).cache()
-    index_df.count()
+    postings, dstats, tstats, index_df, N, avgdl = _sink_engine(
+        spark, tmp_path_factory.mktemp("rank") / "url", full, ("repo", "path")
+    )
     docs = [
         (r["doc_id"], f'{r["repo"]}/{r["path"]}', r["content"])
         for r in full.select("doc_id", "repo", "path", "content").collect()
@@ -86,6 +96,12 @@ URL_QUERIES = reference_queries() + [
     (102, "py mod3"),  # extension + module dir
     (103, "def file5"),  # mixed content + path terms
     (104, "empty"),  # matches a planted empty doc only via its path
+    (105, "import"),
+    (106, "def return"),
+    (107, "file3"),
+    (108, "src mod1"),
+    (109, "the of and"),  # all stopwords
+    (110, "zzzmissing"),  # absent term
 ]
 
 

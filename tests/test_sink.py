@@ -322,33 +322,6 @@ def test_bucket_pruned_query_matches_full_scan(spark, built):
     assert [tuple(r) for r in full] == [tuple(r) for r in fast]
 
 
-def test_sink_index_rank_identity(spark, raw_corpus, built):
-    """The SINK-built block index (posting-level stem channel + encoder
-    duplicate-merge) must be rank/score bit-identical to the pure-Python
-    oracle — the same gate build_index_frames' path passes."""
-    from search_engine_spark.oracle import OracleIndex
-
-    sink, root = built
-    blocks, tstats, dstats, meta = sink.read(spark)
-    N, avgdl = meta["N"], meta["avgdl"]
-    docs = [
-        (r["doc_id"], f'{r["repo"]}/{r["path"]}', r["content"])
-        for r in spark.read.parquet(os.path.join(root, "docs"))
-        .join(raw_corpus.select("repo", "path", "content"), ["repo", "path"])
-        .select("doc_id", "repo", "path", "content")
-        .collect()
-    ]
-    oi = OracleIndex(docs)
-    assert oi.N == N and abs(oi.avgdl - avgdl) < 1e-12
-    for q in ["import", "def return", "file3", "src mod1", "the of and", "zzzmissing"]:
-        expected = oi.query(q, k=50)
-        got = [
-            (r["doc_id"], r["score"])
-            for r in bm25_topk_blocks(blocks, tstats, N, avgdl, q, k=50).collect()
-        ]
-        assert got == expected, f"sink index diverges from oracle for {q!r}"
-
-
 def test_batch_query_bit_identical_to_per_query(spark, built):
     """bm25_topk_batch (whole query set, ONE job) must be bit-identical —
     docs, float64 scores, ranks — to looping bm25_topk_blocks, including
