@@ -10,7 +10,7 @@ DataFrame ops until the sink writes):
     → doclen = Σ tf per doc over the cached postings  [sink.py docs table]
     → stem channel at the posting level, doclen join  [sink.encoder_input]
     → repartition(bucket, shard % FILES_PER_BUCKET)   [1 shuffle, sink.publish_buckets]
-    → encode blocks (mapInPandas, Arrow)              [codec.py]
+    → encode blocks (mapInPandas, Arrow)              [_encode_batch → codec.py]
     → write partitioned by term bucket                [sink.py]
 
 The generic registry entries and the unit tests build in-memory blocks
@@ -28,7 +28,10 @@ chosen so it doubles as the document-sharding used at query time
 (document-partitioned index, the standard distributed-search layout).
 Within a (term, shard) group, postings are doc_id-sorted and cut into
 BLOCK_SIZE blocks with per-block max impact (block-max metadata for
-WAND-style pruning).
+WAND-style pruning). The encoder owns only that geometry, the merge of
+duplicate stem rows and the block-max reduce: every byte stream comes
+from codec.py's block encoders, and the bound is query.py's canonical
+BM25 weight at idf 1.
 """
 
 from __future__ import annotations
@@ -39,7 +42,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import constants as C
-from .codec import varbyte_encode_with_lengths
+from .codec import encode_doc_id_blocks, encode_position_blocks, varbyte_encode_blocks
+from .query import _bm25_w_np
 
 
 def doc_postings(tokens: DataFrame, compact: bool = False) -> DataFrame:
@@ -128,9 +132,6 @@ INDEX_SCHEMA = (
 )
 
 
-_U63 = np.uint64(1) << np.uint64(63)
-
-
 def _encode_batch(pdf: pd.DataFrame, avgdl: float) -> pd.DataFrame:
     """Vectorized block encoder over a batch sorted by (term, shard,
     doc_id) containing only COMPLETE (term, shard) groups.
@@ -191,50 +192,16 @@ def _encode_batch(pdf: pd.DataFrame, avgdl: float) -> pd.DataFrame:
     block_end_idx[-1] = n_rows
     block_id = (row_in_group[block_start_idx] // C.BLOCK_SIZE).astype(np.int32)
 
-    # doc-id deltas reset at block starts (each block decodes standalone)
-    u = doc.astype(np.uint64) + _U63
-    deltas = np.empty(n_rows, dtype=np.uint64)
-    deltas[0] = u[0]
-    deltas[1:] = u[1:] - u[:-1]
-    deltas[block_start_idx] = u[block_start_idx]
+    doc_bytes = encode_doc_id_blocks(doc, block_start_idx, block_end_idx)
+    tf_bytes = varbyte_encode_blocks(tfs.astype(np.uint64), block_start_idx, block_end_idx)
+    dl_bytes = varbyte_encode_blocks(dls.astype(np.uint64), block_start_idx, block_end_idx)
+    uf_bytes = varbyte_encode_blocks(ufs.astype(np.uint64), block_start_idx, block_end_idx)
+    pos_bytes, plen_bytes = encode_position_blocks(plists, block_start_idx, block_end_idx)
 
-    def sliced(values: np.ndarray, starts: np.ndarray, ends: np.ndarray) -> list[bytes]:
-        buf, lens = varbyte_encode_with_lengths(values)
-        off = np.zeros(lens.size + 1, dtype=np.int64)
-        np.cumsum(lens, out=off[1:])
-        raw = buf.tobytes()
-        return [raw[off[s] : off[e]] for s, e in zip(starts, ends)]
-
-    doc_bytes = sliced(deltas, block_start_idx, block_end_idx)
-    tf_bytes = sliced(tfs.astype(np.uint64), block_start_idx, block_end_idx)
-    dl_bytes = sliced(dls.astype(np.uint64), block_start_idx, block_end_idx)
-    uf_bytes = sliced(ufs.astype(np.uint64), block_start_idx, block_end_idx)
-
-    # positions: flatten all rows once; per-position deltas reset at each
-    # row (doc) boundary; per-block slices via row→flat offsets
-    plens = np.fromiter((len(p) for p in plists), count=n_rows, dtype=np.int64)
-    flat = (
-        np.concatenate([np.asarray(p, dtype=np.uint64) for p in plists])
-        if n_rows and plens.sum()
-        else np.empty(0, dtype=np.uint64)
-    )
-    row_off = np.zeros(n_rows + 1, dtype=np.int64)
-    np.cumsum(plens, out=row_off[1:])
-    pdeltas = np.empty_like(flat)
-    if flat.size:
-        pdeltas[0] = flat[0]
-        pdeltas[1:] = flat[1:] - flat[:-1]
-        pdeltas[row_off[:-1][plens > 0]] = flat[row_off[:-1][plens > 0]]
-    pos_bytes = sliced(pdeltas, row_off[block_start_idx], row_off[block_end_idx])
-    plen_bytes = sliced(plens.astype(np.uint64), block_start_idx, block_end_idx)
-
-    # block-max impact metadata (idf-free BM25 tf component); tf_eff
-    # carries the reference's URL bonus (Search.java:98) so the bound
-    # stays exact for bonus-bearing postings
-    k1, b = C.BM25_K1, C.BM25_B
-    tf_eff = tfs + C.URL_BONUS * ufs
-    wtf = tf_eff * (k1 + 1.0) / (tf_eff + k1 * (1.0 - b + b * dls / avgdl))
-    max_wtf = np.maximum.reduceat(wtf, block_start_idx)
+    # block-max impact metadata: the canonical BM25 weight at idf 1
+    # (multiplying by 1.0 is exact), so the bound is exact for every
+    # posting, URL-bonus-bearing ones included
+    max_wtf = np.maximum.reduceat(_bm25_w_np(tfs, ufs, dls, 1.0, avgdl), block_start_idx)
 
     return pd.DataFrame(
         {

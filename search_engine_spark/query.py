@@ -80,6 +80,12 @@ def bm25_idf(N: int, df: int) -> float:
     return math.log(1.0 + (N - df + 0.5) / (df + 0.5))
 
 
+def _term_dfs(tstats: DataFrame, terms: list[str]) -> dict[str, int]:
+    """{term: df} for the terms present in ``tstats`` — one driver
+    collect."""
+    return {r["term"]: int(r["df"]) for r in tstats.where(F.col("term").isin(terms)).collect()}
+
+
 def _fold_sum_by_term(scored: DataFrame) -> DataFrame:
     """(doc_id, term, w) → (doc_id, score) with deterministic
     term-ascending float64 accumulation."""
@@ -134,7 +140,7 @@ def bm25_score_terms(
     # idf computed driver-side with math.log so ALL paths (DataFrame,
     # block, pure-Python oracle) share bit-identical idf values — JVM
     # F.log could differ from libm by 1 ulp and break rank identity.
-    dfs = {r["term"]: int(r["df"]) for r in tstats.where(F.col("term").isin(terms)).collect()}
+    dfs = _term_dfs(tstats, terms)
     idf_rows = [(t, bm25_idf(N, dfs[t])) for t in terms if t in dfs]
     if not idf_rows:
         return spark.createDataFrame([], "doc_id long, score double")
@@ -233,7 +239,8 @@ def blend_with_pagerank(
 
 def _bm25_w_np(tfs: np.ndarray, ufs: np.ndarray, dls: np.ndarray, idf: float, avgdl: float, weight: float = 1.0) -> np.ndarray:
     """CANONICAL BM25 float64 expression, numpy form — the ONE copy,
-    used by the block-index fold _exact_scores. Must stay
+    used by the block-index fold _exact_scores and, at idf 1, by the
+    index encoder's block-max bound (index._encode_batch). Must stay
     token-identical to bm25_score_terms' Column expression and
     oracle.py's Python form for bit-exact rank identity across paths.
     tf_eff carries the URL bonus (Search.java:98); uf=0 → tf + 0.0 == tf
@@ -436,10 +443,7 @@ def _bm25_shard_topk(
     if not all_terms:
         return None
     # idf computed driver-side with math.log (see bm25_score_terms)
-    dfs = {
-        r["term"]: int(r["df"])
-        for r in tstats.where(F.col("term").isin(all_terms)).collect()
-    }
+    dfs = _term_dfs(tstats, all_terms)
     per_query = {}
     for qid, (terms, weight) in norm.items():
         idf_by_term = {t: bm25_idf(N, dfs[t]) for t in terms if t in dfs}
@@ -700,10 +704,7 @@ def phrase_topk_blocks(
     if not terms:
         return _phrase_empty_df(spark)
     uterms = sorted(set(terms))
-    dfs = {
-        r["term"]: int(r["df"])
-        for r in tstats.where(F.col("term").isin(uterms)).collect()
-    }
+    dfs = _term_dfs(tstats, uterms)
     if any(t not in dfs for t in uterms):
         # a term absent from the corpus cannot appear in any phrase match
         return _phrase_empty_df(spark)

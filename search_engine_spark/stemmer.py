@@ -5,9 +5,9 @@ token both raw and stemmed via a Java Porter implementation
 an independent implementation of the same published algorithm, NOT a
 translation of that file.
 
-Used by the engine through :func:`stem_terms` (vectorized over a pandas
-Series of *distinct* vocabulary terms — never per token occurrence) and by
-the pure-Python oracle ranker directly.
+Used by the engine through ``tokenize._stem_udf`` (a pandas UDF over the
+*distinct* vocabulary terms — never per token occurrence), by query
+normalization, and by the pure-Python oracle ranker directly.
 """
 
 from __future__ import annotations
@@ -165,8 +165,3 @@ def porter_stem(word: str) -> str:
         w = w[:-1]
 
     return w
-
-
-def stem_terms(terms) -> list[str]:
-    """Stem an iterable of terms (vocabulary-level, not per-occurrence)."""
-    return [porter_stem(t) for t in terms]

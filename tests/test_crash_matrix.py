@@ -18,10 +18,8 @@ stays cheap; the fixture is built once and copied per crash point.
 
 from __future__ import annotations
 
-import gc
 import os
 import shutil
-import time
 
 import pytest
 from test_compact_index import _CHANGED_V2, _NARROW, _NEW, QUERIES, _decoded_content, _mk, _topk
@@ -226,10 +224,10 @@ def _persisted_rdd_ids(spark) -> set[int]:
 def test_failed_compaction_keeps_no_cached_frame(spark, pristine, tmp_path, op):
     """A fold or store compaction that raises must unpersist what it
     cached, or each failed call in a long-lived driver leaks a frame.
-    Garbage collection runs first: the stem vocabulary's local
-    checkpoint (tokenize.stem_vocab) is released by Spark's context
-    cleaner once unreferenced, on success and failure alike, while a
-    cached frame stays until it is unpersisted."""
+    The check runs right after the failed call, with no garbage
+    collection or wait: the stem vocabulary's local checkpoint
+    (tokenize.stem_vocab) is released by sink.encoder_input on exit,
+    and every cached frame by the operation's own cleanup."""
     base = _copy(pristine, str(tmp_path / op))
     run = {
         "fold": lambda: compact_into_index(spark, _sink(base), _store(base)),
@@ -240,11 +238,7 @@ def test_failed_compaction_keeps_no_cached_frame(spark, pristine, tmp_path, op):
         m.setattr(fsutil, "_rename", _Rename(die_at=1))
         with pytest.raises(_Crash):
             run()
-    deadline = time.monotonic() + 60
-    while (left := _persisted_rdd_ids(spark) - before) and time.monotonic() < deadline:
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
-        time.sleep(0.5)
+    left = _persisted_rdd_ids(spark) - before
     assert not left, f"persisted RDDs {sorted(left)} outlive the failed {op}"
 
 
