@@ -1314,9 +1314,10 @@ def q_html_strip_tokens(spark, sf_dir):
 
 def q_doc_id_collisions(spark, sf_dir):
     # the injectivity audit the 64-bit hashed doc_id demands at 10^12
-    # files (corpus.check_doc_id_injective; widening recipe in
-    # corpus.with_doc_id). Engine-portable twin: ids derived from md5
-    # (xxhash64 has no DuckDB equivalent) over the natural key column.
+    # files (the engine's own check rides IndexSink.build's docs
+    # aggregate; widening recipe in corpus.with_doc_id). Engine-portable
+    # twin: ids derived from md5 (xxhash64 has no DuckDB equivalent) over
+    # the natural key column.
     d = _read(spark, sf_dir, "documents")
     return d.agg(
         F.count("*").alias("n_rows"),

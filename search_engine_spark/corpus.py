@@ -164,46 +164,6 @@ class IdCollisionError(RuntimeError):
     duplicate key rows in the input."""
 
 
-def id_collision_stats(
-    df: DataFrame, key_cols: tuple[str, ...] = ("repo", "path", "commit"), id_col: str = "doc_id"
-):
-    """One aggregate job over a column-pruned scan (the key/id columns
-    only — content is never read): (n_rows, n_keys, n_ids). Injective ⇔
-    n_keys == n_ids; duplicate input rows show as n_rows > n_keys."""
-    row = df.agg(
-        F.count("*").alias("n_rows"),
-        F.count_distinct(*[F.col(c) for c in key_cols]).alias("n_keys"),
-        F.count_distinct(id_col).alias("n_ids"),
-    ).collect()[0]
-    return int(row["n_rows"]), int(row["n_keys"]), int(row["n_ids"])
-
-
-def check_doc_id_injective(
-    df: DataFrame, key_cols: tuple[str, ...] = ("repo", "path", "commit"), id_col: str = "doc_id"
-) -> dict:
-    """The loud-failure gate for the 64-bit doc_id documented above: at
-    the stated 10^12-file target the birthday bound expects ~27k
-    colliding pairs, so any REAL corpus build must either widen the id
-    (recipe in :func:`with_doc_id`) or prove injectivity held for its
-    inputs. Raises :class:`IdCollisionError` on (a) a hash collision
-    (two distinct keys, one id) or (b) duplicate key rows (one key
-    ingested twice — silently doubled postings downstream). Returns the
-    stats dict for lineage/metrics when the invariant holds."""
-    n_rows, n_keys, n_ids = id_collision_stats(df, key_cols, id_col)
-    if n_ids != n_keys:
-        raise IdCollisionError(
-            f"doc_id collision: {n_keys} distinct {key_cols} keys map to "
-            f"{n_ids} distinct {id_col} values — widen the id per the "
-            "recipe in corpus.with_doc_id before building at this scale"
-        )
-    if n_rows != n_keys:
-        raise IdCollisionError(
-            f"duplicate input rows: {n_rows} rows but only {n_keys} distinct "
-            f"{key_cols} keys — dedup the corpus before indexing"
-        )
-    return {"n_rows": n_rows, "n_keys": n_keys, "n_ids": n_ids}
-
-
 def resolve_id_collisions(
     df: DataFrame,
     key_cols: tuple[str, ...] = ("repo", "path", "commit"),

@@ -204,6 +204,10 @@ FILES_PER_BUCKET = 8
 
 _EMPTY_STATS = {"n_blocks": 0, "n_postings": 0, "n_terms": 0, "content_hash": 0}
 
+# Corpus rows up to which the build broadcasts its doclen side (12 B/doc:
+# 5M docs ≈ 60 MB)
+BROADCAST_DOCLEN_MAX_DOCS = 5_000_000
+
 
 def _add_time(phase_t: dict, key: str, t0: float) -> None:
     phase_t[key] = phase_t.get(key, 0.0) + (time.perf_counter() - t0)
@@ -452,6 +456,10 @@ class IndexSink:
 
     df(term) has no table of its own: :meth:`read` derives it from the
     blocks (:func:`term_df`).
+
+    The constructor's layout arguments only shape a new build: a built
+    index is read, pruned and folded with the layout its meta records
+    (a fold takes ``n_doc_buckets`` only where meta predates it).
     """
 
     def __init__(
@@ -599,17 +607,17 @@ class IndexSink:
             # docs side table: metadata scan (content pruned away)
             # left-joined with doclen from the cache; a doc whose tokens
             # are ALL filtered has no postings row and keeps doclen 0
-            # (oracle.py:44 semantics). Broadcast the doclen side while
-            # the doc count allows (12 B/doc — 5M docs ≈ 60 MB): a
-            # broadcast-hash join keeps the docs write a single narrow
-            # stage instead of a two-exchange sort-merge join. The guard
-            # count is metadata-speed: zero columns materialize, the
-            # parquet reader returns row-group counts.
+            # (oracle.py:44 semantics). One broadcast decision for the
+            # docs write and the encoder input: a broadcast-hash join
+            # keeps the docs write a single narrow stage instead of a
+            # two-exchange sort-merge join. The guard count is
+            # metadata-speed: the parquet reader returns row-group counts.
             doclen_df = postings_raw.groupBy("doc_id").agg(
                 F.sum("tf").cast("int").alias("doclen")
             )
             n_docs_est = corpus.count()
-            doclen_side = F.broadcast(doclen_df) if n_docs_est <= 5_000_000 else doclen_df
+            broadcast_doclen = n_docs_est <= BROADCAST_DOCLEN_MAX_DOCS
+            doclen_side = F.broadcast(doclen_df) if broadcast_doclen else doclen_df
             write_docs(
                 spark, self.root, self.n_doc_buckets,
                 corpus_ids.select("doc_id", *meta_cols)
@@ -618,17 +626,14 @@ class IndexSink:
             )
             docs_tbl = spark.read.parquet(os.path.join(self.root, "docs"))
             # ONE aggregate job yields the corpus scalars AND the doc_id
-            # injectivity gate (rationale: corpus.check_doc_id_injective
-            # — 64-bit xxhash birthday collisions are EXPECTED at the
-            # stated 10^12-file target, ~27k pairs). Checked over the
-            # just-written content-free docs side table, so the gate
-            # costs nothing extra: count_distinct rides the same
-            # column-pruned scan that computes N/avgdl. n_docs_est is
-            # the guard count already taken above; a shortfall in
-            # distinct doc_ids means either a hash collision or
-            # duplicate (repo, path, commit) input rows — both must fail
-            # the build loudly rather than silently merge two docs'
-            # postings.
+            # injectivity gate: the 64-bit id's birthday bound expects
+            # n²/2^65 colliding pairs (~27k at the 10^12-file target), so
+            # a build must widen the id (corpus.with_doc_id), remap
+            # collisions (on_id_collision="resolve") or prove injectivity.
+            # count_distinct rides the column-pruned docs scan that
+            # computes N/avgdl. Fewer distinct ids than corpus rows means
+            # a hash collision or duplicate (repo, path, commit) rows —
+            # fail loudly rather than silently merge two docs' postings.
             row = docs_tbl.agg(
                 F.count("*").alias("n"),
                 F.avg("doclen").alias("avgdl"),
@@ -658,7 +663,7 @@ class IndexSink:
                 with (
                     encoder_input(
                         postings_raw, docs_tbl, n_shards, self.n_buckets,
-                        broadcast_doclen=N <= 5_000_000,
+                        broadcast_doclen=broadcast_doclen,
                     ) as enriched,
                     persisted(enriched) if multi else nullcontext(enriched) as enriched,
                 ):
@@ -699,7 +704,6 @@ class IndexSink:
             "bm25_b": C.BM25_B,
             "engine": ENGINE_VERSION,
             "url_cols": list(url_cols) if url_cols else [],
-            "built_buckets": self.n_buckets,
             "n_doc_buckets": self.n_doc_buckets,
             "id_collisions_resolved": n_remapped,
             "wall_s_this_run": round(time.perf_counter() - t_start, 3),
@@ -707,6 +711,8 @@ class IndexSink:
             "phase_timings_s": {k: round(v, 2) for k, v in phase_t.items()},
         }
         atomic_write_json(os.path.join(self.root, "meta.json"), meta)
+        # renames bypass Spark's cache manager: drop frames cached over old files
+        spark.catalog.refreshByPath(self.root)
         return {"status": "committed", "meta": meta, "built": len(pending)}
 
     # -- read path ----------------------------------------------------------
@@ -821,8 +827,10 @@ class IndexSink:
 
     def blocks_for_terms(self, spark: SparkSession, terms: list[str]) -> DataFrame:
         """Partition-pruned scan: only the buckets owning ``terms`` are read
-        (driver-side crc32 mirrors the write path's bucket expression)."""
-        buckets = sorted({term_bucket_py(t, self.n_buckets) for t in terms})
+        (driver-side crc32 over the index's own n_buckets mirrors the
+        write path's bucket expression)."""
+        n_buckets = int(self._meta()["n_buckets"])
+        buckets = sorted({term_bucket_py(t, n_buckets) for t in terms})
         return self._blocks(spark).where(F.col("bucket").isin(buckets)).where(
             F.col("term").isin(terms)
         )

@@ -551,11 +551,16 @@ def compact_into_index(
     requirement as the store protocol, see incremental_index_stream):
     every table publish is an ``fsutil.swap_dir`` rename pair, repaired
     by :func:`sink.recover_index` at the start of the next fold or
-    build; folded markers are written LAST, so a crash replays the fold
-    — re-delivered docs are dropped against the updated docs table and
-    already-retired ids retire to a no-op.
+    build. Every fold with pending commits ends in ONE commit tail (meta
+    refresh, folded markers, journal removal), so a crash replays the
+    fold — re-delivered docs are dropped against the updated docs table,
+    already-retired ids retire to a no-op, and a replay with nothing
+    left to re-encode still refreshes meta. The renames bypass Spark's
+    cache manager, so the fold ends by refreshing the index path there.
 
-    Returns {status, touched_buckets, n_new_docs, n_retired, folded}.
+    Returns {status, touched_buckets, n_new_docs, n_retired, folded};
+    status is noop (nothing pending), folded_empty (nothing to add,
+    re-encode or retire) or compacted.
     """
     root = sink.root
     meta = sink._meta()
@@ -665,66 +670,56 @@ def compact_into_index(
             }
         touched_l = sorted(touched)
         n_new = new_docs.count()
-        if not touched_l and n_new == 0:
-            # Nothing to re-encode — either a genuinely empty fold set, or
-            # a REPLAY of a fold that crashed after the bucket/docs swaps
-            # but before the meta rewrite (then the anti-join above sees
-            # the already-updated docs table and the fold set reads
-            # empty). The replay case leaves meta N/avgdl stale unless
-            # refreshed here, and the two cases are not cheaply
-            # distinguishable — so this branch ALWAYS refreshes meta
-            # before marking folded (idempotent: recomputing from the
-            # committed docs table is a no-op when it was already
-            # consistent).
-            refresh_side_tables(spark, root, meta)
-            _mark_folded(store_dir, pending)
-            _clear_fold_txn(root)
-            return {"status": "folded_empty", "touched_buckets": [],
-                    "n_new_docs": 0, "n_retired": 0, "folded": pending}
-
-        # fold journal, written BEFORE the first swap: a crash-replay must
-        # re-publish every bucket ANY attempt may have swapped — a bucket
-        # only a retired doc touched holds no fold-set posting once
-        # swapped, so this run alone would not see it, yet its manifest
-        # may predate the swap.
-        touched_l = sorted(touched | (prev_touched or set()))
-        _write_fold_txn(root, touched_l, pending)
-
-        # rebuild touched buckets: decoded survivors ∪ enriched new
-        # postings (touched_l can be empty with n_new > 0 when every
-        # folded doc is token-less — then only the docs table and N/avgdl
-        # change)
-        if touched_l:
-            # Drop the WHOLE fold set (retired ∪ new) from the decoded
-            # side, not just retired: new docs always re-enter from the
-            # store, and after a crash BETWEEN bucket swaps a replay
-            # decodes buckets that already hold the new postings —
-            # keeping them would merge with the re-added store rows in
-            # the encoder and double tf.
-            drop_ids = retired.unionByName(new_docs.select("doc_id"))
-            old_p = decode_block_postings(
-                blocks.where(F.col("bucket").isin(touched_l))
-            ).join(drop_ids, "doc_id", "left_anti")
-            publish_buckets(
-                spark, root,
-                with_bucket(with_shard(old_p, n_shards), n_buckets).unionByName(new_p),
-                touched_l, n_buckets, enc_avgdl, "compact", {},
+        # empty: nothing to add, re-encode or retire — a genuinely empty
+        # fold set, or a REPLAY of a fold that crashed after its docs
+        # swaps (the anti-join above sees the updated docs table). It
+        # skips the publish; the replay needs the commit tail's meta refresh.
+        empty = not touched_l and n_new == 0 and n_retired == 0
+        if not empty:
+            # fold journal, written BEFORE the first swap: a crash-replay
+            # must re-publish every bucket ANY attempt may have swapped — a
+            # bucket only a retired doc touched holds no fold-set posting
+            # once swapped, so this run alone would not see it, yet its
+            # manifest may predate the swap.
+            touched_l = sorted(touched | (prev_touched or set()))
+            _write_fold_txn(root, touched_l, pending)
+            # rebuild touched buckets: decoded survivors ∪ enriched new
+            # postings (touched_l can be empty with n_new > 0 when every
+            # folded doc is token-less — then only the docs table and
+            # N/avgdl change)
+            if touched_l:
+                # Drop the WHOLE fold set (retired ∪ new) from the decoded
+                # side, not just retired: new docs always re-enter from the
+                # store, and after a crash BETWEEN bucket swaps a replay
+                # decodes buckets that already hold the new postings —
+                # keeping them would merge with the re-added store rows in
+                # the encoder and double tf.
+                drop_ids = retired.unionByName(new_docs.select("doc_id"))
+                old_p = decode_block_postings(
+                    blocks.where(F.col("bucket").isin(touched_l))
+                ).join(drop_ids, "doc_id", "left_anti")
+                publish_buckets(
+                    spark, root,
+                    with_bucket(with_shard(old_p, n_shards), n_buckets).unionByName(new_p),
+                    touched_l, n_buckets, enc_avgdl, "compact", {},
+                )
+            # docs side table: retire superseded rows, add the folded docs
+            # (doclen 0 for token-less docs)
+            write_docs(
+                spark, root, int(meta["n_doc_buckets"]),
+                new_docs.join(new_dl, "doc_id", "left").withColumn(
+                    "doclen", F.coalesce(F.col("doclen"), F.lit(0)).cast("int")
+                ),
+                drop=retired,
             )
-
-        # docs side table: retire superseded rows, add the folded docs
-        # (doclen 0 for token-less docs)
-        write_docs(
-            spark, root, int(meta["n_doc_buckets"]),
-            new_docs.join(new_dl, "doc_id", "left").withColumn(
-                "doclen", F.coalesce(F.col("doclen"), F.lit(0)).cast("int")
-            ),
-            drop=retired,
-        )
+        # the commit tail (the meta refresh is idempotent)
         refresh_side_tables(spark, root, meta)
         _mark_folded(store_dir, pending)
         _clear_fold_txn(root)
+    # renames bypass Spark's cache manager: drop frames cached over old files
+    spark.catalog.refreshByPath(root)
     return {
-        "status": "compacted",
+        "status": "folded_empty" if empty else "compacted",
         "touched_buckets": touched_l,
         "n_new_docs": int(n_new),
         "n_retired": int(n_retired),
@@ -763,7 +758,6 @@ def compact_store(spark: SparkSession, store_dir: str) -> dict:
             if not os.path.isdir(src):
                 continue
             df = _read_committed(spark, store_dir, name)
-            before = df.count()
             # postings retire superseded versions AND drop rows of
             # commits already folded into the block index (every read path
             # excludes them via _drop_folded and they are served by the
@@ -778,12 +772,13 @@ def compact_store(spark: SparkSession, store_dir: str) -> dict:
             # uncommitted partials.
             if name == "docmap":
                 kept = df
+                n_kept = before = df.count()
             else:
                 kept = df.join(live, "doc_id", "left_semi")
                 if folded:
                     kept = kept.where(~F.col("commit_id").isin(folded))
+                before, n_kept = df.count(), kept.count()
             tmp = f"{src}.tmp"
-            n_kept = kept.count()
             if n_kept == 0:
                 # dynamic partitionBy on an EMPTY frame writes a dir with no
                 # data files — unreadable by schema inference after the swap

@@ -24,8 +24,9 @@ from pyspark.sql import functions as F
 
 from search_engine_spark.corpus import generate_corpus, with_doc_id
 from search_engine_spark.index import doc_postings
-from search_engine_spark.query import bm25_topk_blocks
-from search_engine_spark.sink import IndexSink, wtf_scale_of
+from search_engine_spark.query import bm25_topk_blocks, normalize_query
+from search_engine_spark.sink import IndexSink, term_bucket_py, wtf_scale_of
+from search_engine_spark.stemmer import porter_stem
 from search_engine_spark.streaming import (
     compact_into_index,
     decode_block_postings,
@@ -541,7 +542,15 @@ def test_compact_store_gcs_folded_commits(spark, tmp_path):
     q = incremental_index_stream(spark, corpus_dir, store, str(tmp_path / "ck1"))
     assert q.awaitTermination(120)
 
-    assert compact_into_index(spark, sink, store)["status"] == "compacted"
+    # a fold that retires nothing touches exactly the buckets of the new
+    # docs' raw and stemmed terms
+    res = compact_into_index(spark, sink, store)
+    assert res["status"] == "compacted"
+    assert res["n_retired"] == 0 and res["n_new_docs"] == 2
+    terms = {t for row in _NEW for t in row[4].split()}
+    assert res["touched_buckets"] == sorted(
+        {term_bucket_py(t, 8) for t in terms | {porter_stem(t) for t in terms}}
+    )
     assert len(folded_commits(store)) == 1
     assert spark.read.parquet(f"{store}/postings").count() > 0  # dead bytes
 
@@ -562,6 +571,62 @@ def test_compact_store_gcs_folded_commits(spark, tmp_path):
     res = compact_into_index(spark, sink, store)
     assert res["status"] == "compacted"
     assert res["n_new_docs"] == 2 and res["n_retired"] == 2
+
+
+def test_reopened_index_prunes_with_its_own_layout(spark, tmp_path):
+    """An index opened without its build arguments (``IndexSink(root)``,
+    default n_buckets) prunes buckets with the n_buckets it was built
+    with: the same blocks and search results as the building sink."""
+    root = str(tmp_path / "idx")
+    builder = IndexSink(root, n_buckets=2)
+    builder.build(_mk(spark, _NARROW), url_cols=None)
+    reopened = IndexSink(root)
+    assert reopened.n_buckets != 2
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    assert rows(reopened.search_results(spark, "komodo")) == rows(
+        builder.search_results(spark, "komodo")
+    )
+    assert len(rows(builder.search_results(spark, "komodo"))) == 3
+    for q in QUERIES:
+        terms = normalize_query(q)[0]
+        assert rows(reopened.blocks_for_terms(spark, terms)) == rows(
+            builder.blocks_for_terms(spark, terms)
+        ), q
+
+
+def test_fold_leaves_no_stale_cached_read(spark, tmp_path):
+    """A df frame cached from ``read`` before a fold must not answer a
+    new ``read`` after it: the fold's directory swaps bypass Spark's
+    cache manager, so the fold refreshes the index path itself."""
+    import pyarrow.parquet as pq
+
+    sink = IndexSink(str(tmp_path / "idx"), n_buckets=8)
+    sink.build(_mk(spark, _NARROW), url_cols=None)
+    cached = sink.read(spark)[1].cache()
+    try:
+        cached.count()
+        corpus_dir = str(tmp_path / "in")
+        os.makedirs(corpus_dir)
+        _mk(spark, _CHANGED_V2 + _NEW).coalesce(1).write.mode("append").parquet(corpus_dir)
+        store = str(tmp_path / "store")
+        q = incremental_index_stream(spark, corpus_dir, store, str(tmp_path / "ckpt"))
+        assert q.awaitTermination(120)
+        assert compact_into_index(spark, sink, store)["status"] == "compacted"
+
+        got = {(r["term"], r["df"]) for r in sink.read(spark)[1].collect()}
+        # uncached: Σ n per term straight from the block files
+        dfs = (
+            pq.read_table(os.path.join(sink.root, "blocks"), columns=["term", "n"])
+            .group_by("term").aggregate([("n", "sum")]).to_pydict()
+        )
+        exp = set(zip(dfs["term"], dfs["n_sum"]))
+        assert {"zqepsilon", "zqzeta", "zqeta", "zqtheta", "zqiota"} <= {t for t, _ in exp}
+        assert got == exp
+    finally:
+        cached.unpersist()
 
 
 def test_store_channel_pinned_across_restarts(spark, tmp_path):

@@ -44,27 +44,10 @@ def raw_corpus(corpus):
 
 def test_doc_id_injectivity_gate(spark, raw_corpus, tmp_path_factory):
     """The 64-bit doc_id loud-failure contract (corpus.py widening note):
-    the library check raises on a forced id collision and on duplicate
-    key rows, and the sink build fails fast on a corpus with duplicated
-    (repo, path, commit) rows instead of silently merging postings."""
-    from search_engine_spark.corpus import IdCollisionError, check_doc_id_injective, with_doc_id
-
-    # clean corpus passes and reports stats
-    stats = check_doc_id_injective(with_doc_id(raw_corpus))
-    assert stats["n_rows"] == stats["n_keys"] == stats["n_ids"]
-
-    # forced hash collision: two distinct keys, one doc_id
-    bad = spark.createDataFrame(
-        [("r1", "a.py", "c1", 7), ("r2", "b.py", "c2", 7)],
-        "repo string, path string, commit string, doc_id long",
-    )
-    with pytest.raises(IdCollisionError, match="collision"):
-        check_doc_id_injective(bad)
-
-    # duplicate key rows (same file ingested twice)
-    dup = raw_corpus.limit(5)
-    with pytest.raises(IdCollisionError, match="duplicate"):
-        check_doc_id_injective(with_doc_id(dup.union(dup)))
+    the sink build fails fast on a corpus with duplicated (repo, path,
+    commit) rows instead of silently merging postings. A forced hash
+    collision is test_sink_build_resolves_collisions' "fail" case."""
+    from search_engine_spark.corpus import IdCollisionError
 
     # the build gate fires before any bucket commits
     root = str(tmp_path_factory.mktemp("sink") / "dupgate")
